@@ -22,6 +22,20 @@ The run/value kernels are the same vectorized numpy as the driver-side
 compat layer (pyrle_spark.kernels.rlecore), so both layers share exact
 semantics — including the zero-extension and normalization quirks.
 
+In the unblocked layout ``from_intervals``, the binary ops, ``getitems``
+and ``to_ranges`` are each one key-grouped Arrow pass.
+
+Materialization policy: sources
+(``from_intervals``, ``read_parquet``, ``from_rledict``) and row-local
+maps stay lazy; a binary op (arithmetic or comparison of two frames)
+ends with an eager ``localCheckpoint()``, so ``getitems``, ``to_ranges``
+and every later action read the combined frame instead of recomputing
+both operands and the join — the frame behaves like the reference's
+eager ``Rle``.  Trade-off: a local checkpoint truncates lineage and
+keeps its blocks on the executors, so if an executor is lost the frame
+cannot be recomputed and actions on it fail; the blocks are freed when
+the frame is garbage-collected.
+
 Blocked-mode semantics notes:
 - a missing BLOCK of a key that exists on both sides is a tail
   extension: arithmetic extends with 0, comparisons with NaN — exactly
@@ -127,11 +141,11 @@ class RleFrame:
     ) -> "RleFrame":
         """Interval coverage per key (methods.py:139-156 distributed).
 
-        Two phases: (1) relational event pre-aggregation — explode each
-        interval to ±value boundary events and sum per (key, position);
-        this is the map-side collapse that blunts hot-key skew; (2) an
-        Arrow pass building the step function with the exact reference
-        kernel (coverage.pyx:28-81 semantics).
+        Unblocked: one key-grouped Arrow pass over the raw interval rows.
+        Each group's +value Start and -value End events go straight to
+        the reference kernel (coverage.pyx:28-81 semantics), which sums
+        events that share a position exactly as :class:`RleDict` does —
+        no relational pre-aggregation, so no shuffle beyond the grouping.
 
         With ``block_positions`` set the frame is built DIRECTLY in the
         blocked layout and no task ever holds a whole key: the Arrow
@@ -139,52 +153,68 @@ class RleFrame:
         cross-block running coverage value is carried through a tiny
         per-(key, block) delta-sum summary (a keyed window over
         O(#blocks) rows), exactly the two-level-scan shape of the
-        relational boundary-union fill.  Without it, groups are whole
-        keys (the reference's own model)."""
+        relational boundary-union fill.
+
+        A null Start or End fails the first action with an error naming
+        the column (the RleDict oracle refuses such input too)."""
         key_cols = list(key_cols)
+
+        def position(c):
+            return (
+                F.when(
+                    F.col(c).isNull(),
+                    F.raise_error(F.lit(f"from_intervals: null in column {c!r}")),
+                )
+                .otherwise(F.col(c))
+                .cast("long")
+            )
+
         val = F.col(value_col).cast("double") if value_col else F.lit(1.0)
-        ev = df.select(
-            *key_cols, F.col(start_col).alias("pos"), val.alias("d")
-        ).unionAll(
-            df.select(*key_cols, F.col(end_col).alias("pos"), (-val).alias("d"))
+        src = df.select(
+            *key_cols,
+            position(start_col).alias("s"),
+            position(end_col).alias("e"),
+            val.alias("w"),
         )
-        agg = ev.groupBy(*key_cols, "pos").agg(F.sum("d").alias("d"))
         if block_positions is not None:
-            return cls._from_events_blocked(agg, key_cols, block_positions)
+            return cls._from_events_blocked(src, key_cols, block_positions)
 
         def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             tbl = pa.Table.from_batches(list(batches))
             if tbl.num_rows == 0:
                 return
-            pdf = tbl.to_pandas()
-            keys = tuple(pdf.iloc[0][c] for c in key_cols)
-            runs, values = k.coverage(
-                pdf["pos"].to_numpy(np.int64), pdf["d"].to_numpy(np.float64)
-            )
+            w = tbl.column("w").to_numpy()
+            pos = [tbl.column("s").to_numpy(), tbl.column("e").to_numpy()]
+            runs, values = k.coverage(np.concatenate(pos), np.concatenate([w, -w]))
             runs, values = k.normalize(runs, values)
-            out = {c: [v] for c, v in zip(key_cols, keys)}
+            out = {c: [tbl.column(c)[0].as_py()] for c in key_cols}
             out["runs"] = [runs]
             out["values"] = [values]
             yield pa.RecordBatch.from_pydict(out)
 
-        keyed = agg.groupBy(*key_cols).applyInArrow(
-            build, _keyed_schema(key_cols)
-        )
+        keyed = src.groupBy(*key_cols).applyInArrow(build, _keyed_schema(key_cols))
         return cls(keyed, key_cols)
 
     @classmethod
     def _from_events_blocked(
-        cls, agg: DataFrame, key_cols: list, block_positions: int
+        cls, src: DataFrame, key_cols: list, block_positions: int
     ) -> "RleFrame":
-        """Blocked coverage from pre-aggregated (key, pos, d) events.
+        """Blocked coverage from validated ``(key, s, e, w)`` interval rows.
 
-        The per-block step function needs only (a) the block's own
-        events and (b) the running coverage value entering the block —
-        the exclusive prefix sum of per-block delta totals, computed on
-        a dense O(#blocks)-row summary (empty blocks become one
-        carry-valued run, so blocks tile the key's full [0, L) range
-        and the blocked invariant holds)."""
+        Boundary events are pre-aggregated per (key, pos) — the map-side
+        collapse that bounds each block's group by the block span.  The
+        per-block step function needs only (a) the block's own events
+        and (b) the running coverage value entering the block — the
+        exclusive prefix sum of per-block delta totals, computed on a
+        dense O(#blocks)-row summary (empty blocks become one
+        carry-valued run, so blocks tile the key's full [0, L) range and
+        the blocked invariant holds)."""
         B = block_positions
+        ev = src.select(*key_cols, F.col("s").alias("pos"), F.col("w").alias("d"))
+        ev = ev.unionAll(
+            src.select(*key_cols, F.col("e").alias("pos"), (-F.col("w")).alias("d"))
+        )
+        agg = ev.groupBy(*key_cols, "pos").agg(F.sum("d").alias("d"))
         a = agg.withColumn("bkt", F.floor(F.col("pos") / F.lit(B)))
         summ = a.groupBy(*key_cols, "bkt").agg(F.sum("d").alias("bd"))
         keyinfo = a.groupBy(*key_cols).agg(F.max("pos").alias("L"))
@@ -425,7 +455,8 @@ class RleFrame:
         task merges one block; a missing block of a PRESENT key is a
         tail extension (0 for arithmetic, NaN for comparisons — the
         equalize rules, rle.py:17-31), a fully missing key is a
-        zero-Rle as in the unblocked path."""
+        zero-Rle as in the unblocked path.  The result is computed once,
+        here, and locally checkpointed (see the module docstring)."""
         if self.blocked != other.blocked or (
             self.blocked and self.block_positions != other.block_positions
         ):
@@ -507,7 +538,7 @@ class RleFrame:
                 )
 
         out = joined.mapInArrow(merge, _keyed_schema(key_cols, blocked))
-        return RleFrame(out, key_cols, self.block_positions)
+        return RleFrame(out.localCheckpoint(), key_cols, self.block_positions)
 
     def __add__(self, other):
         return self._apply_or_binary(other, "add")
@@ -772,46 +803,84 @@ class RleFrame:
     # ------------------------------------------------------------ decode
 
     def to_ranges(self) -> DataFrame:
-        """Decode to interval rows (methods.py:159-213 distributed as pure
-        relational algebra): posexplode + window prefix sums, merge equal
-        neighbours, drop zero scores.  Blocked frames order by
-        (block_id, idx) — blocks tile contiguously, so the per-key prefix
-        sum and island merge stitch edges automatically."""
-        order_cols = (["block_id"] if self.blocked else []) + ["idx"]
-        ex = self.df.select(
-            *self._group_cols,
-            F.posexplode(F.arrays_zip("runs", "values")).alias("idx", "rv"),
-        ).select(
-            *self._group_cols,
-            "idx",
-            F.col("rv.runs").alias("run"),
-            F.col("rv.values").alias("score"),
-        )
-        w = W.partitionBy(*self.key_cols).orderBy(*order_cols)
-        pos = ex.select(
-            *self.key_cols,
-            *order_cols,
-            "score",
-            (F.sum("run").over(w) - F.col("run")).alias("start"),
-            F.sum("run").over(w).alias("end"),
-        ).filter(F.col("start") != F.col("end"))  # empty-tail block artifacts
-        # merge adjacent equal scores (gaps-and-islands)
-        chg = F.when(
-            F.lag("score").over(w).isNull()
-            | (F.lag("score").over(w) != F.col("score")),
-            1,
-        ).otherwise(0)
-        grp = pos.withColumn("grp", F.sum(chg).over(w))
-        return (
-            grp.groupBy(*self.key_cols, "grp")
+        """Decode to interval rows (methods.py:159-213 distributed):
+        ``(key..., Start, End, Score)``.  Zero-length runs are dropped,
+        exactly equal neighbours merged (NaN equals NaN, as Spark compares
+        doubles), then zero scores dropped.
+
+        One Arrow pass emits the ranges straight from the run arrays; an
+        unblocked frame needs no shuffle.  A blocked frame decodes each
+        block at offset ``block_id·B``; only each block's first and last
+        range can continue into a neighbouring block, so only those edge
+        rows go through a keyed gaps-and-islands merge — no task holds a
+        whole key."""
+        key_cols, blocked, B = self.key_cols, self.blocked, self.block_positions
+        names = [*key_cols, "Start", "End", "Score"] + (["edge"] if blocked else [])
+
+        def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                out = {c: [] for c in names}
+                for i in range(batch.num_rows):
+                    row = {c: batch.column(c)[i] for c in batch.schema.names}
+                    runs = row["runs"].values.to_numpy()
+                    # a NaN value may be stored as a null list element
+                    vals = row["values"].values.to_numpy(zero_copy_only=False)
+                    nz = runs != 0
+                    runs, vals = runs[nz], vals[nz]
+                    if not len(runs):
+                        continue
+                    ends = np.cumsum(runs)
+                    if blocked:
+                        ends += row["block_id"].as_py() * B
+                    same = (vals[1:] == vals[:-1]) | (
+                        np.isnan(vals[1:]) & np.isnan(vals[:-1])
+                    )
+                    first, last = np.append(True, ~same), np.append(~same, True)
+                    score = vals[first]
+                    keep = score != 0
+                    if not keep.any():
+                        continue
+                    out["Start"].append((ends - runs)[first][keep])
+                    out["End"].append(ends[last][keep])
+                    out["Score"].append(score[keep])
+                    if blocked:
+                        edge = np.zeros(len(score), dtype=bool)
+                        edge[[0, -1]] = True
+                        out["edge"].append(edge[keep])
+                    for c in key_cols:
+                        out[c].append(np.full(keep.sum(), row[c].as_py(), dtype=object))
+                if out["Start"]:
+                    # from_pydict, not from_pandas: a NaN score must stay NaN
+                    yield pa.RecordBatch.from_pydict(
+                        {c: np.concatenate(v) for c, v in out.items()}
+                    )
+
+        keys_schema = ", ".join(f"{c} string" for c in key_cols)
+        schema = f"{keys_schema}, Start long, End long, Score double"
+        if not blocked:
+            return self.df.mapInArrow(decode, schema)
+        rows = self.df.mapInArrow(decode, f"{schema}, edge boolean")
+        w = W.partitionBy(*key_cols).orderBy("Start")
+        prev_end, prev_score = F.lag("End").over(w), F.lag("Score").over(w)
+        # Spark's != treats NaN as equal to NaN, like the in-block merge
+        starts_island = (
+            prev_end.isNull()
+            | (prev_end != F.col("Start"))
+            | (prev_score != F.col("Score"))
+        ).cast("int")
+        edges = (
+            rows.filter(F.col("edge"))
+            .withColumn("grp", F.sum(starts_island).over(w))
+            .groupBy(*key_cols, "grp")
             .agg(
-                F.min("start").alias("Start"),
-                F.max("end").alias("End"),
-                F.first("score").alias("Score"),
+                F.min("Start").alias("Start"),
+                F.max("End").alias("End"),
+                F.first("Score").alias("Score"),
             )
-            .filter(F.col("Score") != 0)
-            .select(*self.key_cols, "Start", "End", "Score")
         )
+        cols = [*key_cols, "Start", "End", "Score"]
+        inner = rows.filter(~F.col("edge")).select(*cols)
+        return inner.unionAll(edges.select(*cols))
 
     # ------------------------------------------------------------ aggregates
 
@@ -885,53 +954,48 @@ class RleFrame:
         )
 
     def getitems(self, intervals: DataFrame) -> DataFrame:
-        """Batch range extraction (getitem.pyx:201-325 distributed):
-        broadcast the query intervals, run the vectorized searchsorted
-        kernel per key row.  Output (key..., Start, End, ID, Run, Value)."""
+        """Batch range extraction (getitem.pyx:201-325 distributed): cogroup
+        the frame with the query intervals by key and run the vectorized
+        searchsorted kernel once per key; keys on one side only emit
+        nothing.  Output (key..., Start, End, ID, Run, Value)."""
         self._require_unblocked("getitems")
         key_cols = self.key_cols
-        q = intervals.groupBy(*key_cols).agg(
-            F.collect_list("Start").alias("q_starts"),
-            F.collect_list("End").alias("q_ends"),
-            F.collect_list("ID").alias("q_ids"),
-        )
-        joined = self.df.join(F.broadcast(q), on=key_cols, how="inner")
-
-        def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                pdf = batch.to_pandas()
-                frames = []
-                for row in pdf.itertuples(index=False):
-                    rd = row._asdict()
-                    order = np.argsort(np.asarray(rd["q_starts"]), kind="stable")
-                    starts = np.asarray(rd["q_starts"], dtype=np.int64)[order]
-                    ends = np.asarray(rd["q_ends"], dtype=np.int64)[order]
-                    qids = np.asarray(rd["q_ids"], dtype=np.int64)[order]
-                    ids, qs, qe, runs, vals = k.getitems(
-                        np.asarray(rd["runs"], dtype=np.int64),
-                        np.asarray(rd["values"], dtype=np.float64),
-                        starts,
-                        ends,
-                    )
-                    f = pd.DataFrame(
-                        {
-                            "Start": qs,
-                            "End": qe,
-                            "ID": qids[ids],
-                            "Run": runs,
-                            "Value": vals,
-                        }
-                    )
-                    for c in key_cols:
-                        f[c] = rd[c]
-                    frames.append(f[[*key_cols, "Start", "End", "ID", "Run", "Value"]])
-                if frames:
-                    yield pa.RecordBatch.from_pandas(
-                        pd.concat(frames, ignore_index=True), preserve_index=False
-                    )
-
         keys_schema = ", ".join(f"{c} string" for c in key_cols)
-        return joined.mapInArrow(
-            extract,
-            f"{keys_schema}, Start long, End long, ID long, Run long, Value double",
+        out_schema = pa.schema(
+            [(c, pa.string()) for c in key_cols]
+            + [(c, pa.int64()) for c in ("Start", "End", "ID", "Run")]
+            + [("Value", pa.float64())]
+        )
+
+        def extract(rle: pa.Table, q: pa.Table) -> pa.Table:
+            if rle.num_rows == 0 or q.num_rows == 0:
+                return out_schema.empty_table()
+            starts = q.column("Start").to_numpy()
+            order = np.argsort(starts, kind="stable")
+            ids, qs, qe, runs, vals = k.getitems(
+                rle.column("runs")[0].values.to_numpy(),
+                rle.column("values")[0].values.to_numpy(zero_copy_only=False),
+                starts[order],
+                q.column("End").to_numpy()[order],
+            )
+            data = {c: [rle.column(c)[0].as_py()] * len(ids) for c in key_cols}
+            data.update(
+                Start=qs,
+                End=qe,
+                ID=q.column("ID").to_numpy()[order][ids],
+                Run=runs,
+                Value=vals,
+            )
+            return pa.table(data, schema=out_schema)
+
+        q = intervals.select(
+            *key_cols, *(F.col(c).cast("long").alias(c) for c in ("Start", "End", "ID"))
+        )
+        return (
+            self.df.groupBy(*key_cols)
+            .cogroup(q.groupBy(*key_cols))
+            .applyInArrow(
+                extract,
+                f"{keys_schema}, Start long, End long, ID long, Run long, Value double",
+            )
         )

@@ -10,6 +10,7 @@ import pytest
 from pyrle_spark.operators.rleframe import RleFrame
 from pyrle_spark.rle import Rle
 from pyrle_spark.rledict import RleDict
+from tests.conftest import spark_jobs
 
 
 def _intervals_pdf(seed=0, n=200, chroms=("chr1", "chr2", "chr3")):
@@ -36,6 +37,65 @@ def test_coverage_matches_rledict(spark, interval_frames):
     rd = rf.to_rledict()
     expected = RleDict(p1)
     assert rd == expected
+
+
+@pytest.mark.parametrize("block_positions", [None, 4])
+def test_value_col_coverage_matches_rledict(spark, block_positions):
+    """Weighted coverage with events that coincide (one interval ends
+    where another starts, shared Starts, duplicate intervals) sums them
+    per position like the RleDict oracle.  The weights are exact binary
+    fractions, so the result does not depend on summation order."""
+    pdf = pd.DataFrame(
+        {
+            "Chromosome": ["chr1"] * 7 + ["chr2"] * 3,
+            "Start": [0, 0, 5, 5, 3, 10, 10, 2, 2, 9],
+            "End": [5, 5, 10, 8, 5, 12, 12, 9, 9, 11],
+            "Score": [1.5, 1.5, 3.0, 0.25, -2.0, 2.0, 2.0, 0.5, 0.5, -1.0],
+        }
+    )
+    rf = RleFrame.from_intervals(
+        spark.createDataFrame(pdf),
+        value_col="Score",
+        block_positions=block_positions,
+    )
+    assert rf.unchunk().to_rledict() == RleDict(pdf, value_col="Score")
+
+
+@pytest.mark.parametrize("block_positions", [None, 4])
+@pytest.mark.parametrize("col", ["Start", "End"])
+def test_null_position_refused(spark, col, block_positions):
+    rows = {"Chromosome": "chr1", "Start": 2, "End": 6}
+    bad = {**rows, col: None}
+    df = spark.createDataFrame(
+        [tuple(rows.values()), tuple(bad.values())],
+        "Chromosome string, Start long, End long",
+    )
+    rf = RleFrame.from_intervals(df, block_positions=block_positions)
+    # the blocked plan surfaces the task failure as a raw Py4JJavaError
+    with pytest.raises(Exception, match=f"null in column '{col}'"):
+        rf.to_rledict()
+
+
+def test_job_counts_pinned(spark, interval_frames):
+    """Each op is one key-grouped pass: the sum is computed once, at
+    ``+`` (an eager checkpoint), and later actions read it."""
+    _, _, d1, d2 = interval_frames
+    queries = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "Chromosome": ["chr1", "chr2"],
+                "Start": [0, 50],
+                "End": [50, 60],
+                "ID": [0, 1],
+            }
+        )
+    )
+    c, add = spark_jobs(
+        spark, lambda: RleFrame.from_intervals(d1) + RleFrame.from_intervals(d2)
+    )
+    _, getitems = spark_jobs(spark, lambda: c.getitems(queries).collect())
+    _, to_ranges = spark_jobs(spark, lambda: c.to_ranges().collect())
+    assert (add, getitems, to_ranges) == (5, 3, 1)
 
 
 @pytest.mark.parametrize("op", ["add", "sub", "mul", "div"])

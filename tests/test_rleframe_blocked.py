@@ -228,15 +228,51 @@ def test_blocked_apply_values_and_ranges(frames):
     pd.testing.assert_frame_equal(got_r, want_r)
 
 
-def test_blocked_to_ranges_matches_unblocked(frames):
+def test_blocked_to_ranges_matches_unblocked(spark, frames):
     _, _, f1, _ = frames
-    got = f1.rechunk(BLOCK).to_ranges().toPandas().sort_values(
-        ["Chromosome", "Start"]
-    ).reset_index(drop=True)
-    want = f1.to_ranges().toPandas().sort_values(
-        ["Chromosome", "Start"]
-    ).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
+    nan = float("nan")
+    # chrA: a zero-length run between equal values, then a NaN run across
+    # the edge at 64; chrB: one value over four blocks; chrZ: all zero
+    edge = RleFrame(
+        spark.createDataFrame(
+            [
+                ("chrA", [3, 0, 4, 53, 10, 6], [7.0, 9.0, 7.0, 1.0, nan, 2.0]),
+                ("chrB", [200], [5.0]),
+                ("chrZ", [100], [0.0]),
+            ],
+            "Chromosome string, runs array<bigint>, values array<double>",
+        ),
+        ["Chromosome"],
+    )
+    one_side = RleFrame.from_intervals(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {"Chromosome": ["chr9"] * 2, "Start": [5, 60], "End": [70, 130]}
+            )
+        )
+    )
+    cases = [
+        (f1.rechunk(BLOCK), f1),
+        (edge.rechunk(BLOCK), edge),
+        (f1.rechunk(BLOCK) + one_side.rechunk(BLOCK), f1 + one_side),
+    ]
+
+    def ranges(frame):
+        return frame.to_ranges().toPandas().sort_values(
+            ["Chromosome", "Start"]
+        ).reset_index(drop=True)
+
+    for blocked, unblocked in cases:
+        pd.testing.assert_frame_equal(ranges(blocked), ranges(unblocked))
+    expected = pd.DataFrame(
+        {
+            "Chromosome": ["chrA"] * 4 + ["chrB"],
+            "Start": [0, 7, 60, 70, 0],
+            "End": [7, 60, 70, 76, 200],
+            "Score": [7.0, 1.0, nan, 2.0, 5.0],
+        }
+    )
+    pd.testing.assert_frame_equal(ranges(edge), expected, check_dtype=False)
 
 
 def test_blocked_stats_matches_unblocked(frames):
