@@ -26,12 +26,13 @@ from pyspark.sql import functions as F
 from pyrle_spark.codecs import Encoded
 from pyrle_spark.codecs.rawcodec import ZstdCodec
 from pyrle_spark.plans.encode_job import (
+    _session_tz,
     dedup_blocks,
     physical_column,
-    prune_blocks,
     prune_blocks_eq,
     prune_blocks_in,
 )
+from pyrle_spark.plans.read_plan import _range_mask, plan_read, read_blocks
 from pyrle_spark.sources.icetable import IceTable
 
 __all__ = [
@@ -1018,32 +1019,27 @@ def _pair_hist(enc_a: Encoded, enc_b: Encoded, kill: np.ndarray | None):
     return va, vb, counts[nz]
 
 
-def _grouped_blocks(batches, expect: set):
-    """Stream (block_id, {column: Encoded}) groups out of a mapInArrow
-    input sorted by (block_id, column) — the shared gather for the
-    multi-column below-decode passes.  Raises when a block is missing
-    one of ``expect`` (columns of one table must be block-complete)."""
-    cur, pending = None, {}
-
-    def check(bid, rows):
-        if set(rows) != expect:
-            raise ValueError(
-                f"block {bid}: expected columns {sorted(expect)}, "
-                f"got {sorted(rows)} — columns of one table must be "
-                "row-aligned and block-complete"
-            )
-        return bid, rows
-
-    for batch in batches:
-        for row in batch.to_pylist():
-            bid = row["block_id"]
-            if bid != cur:
-                if cur is not None and pending:
-                    yield check(cur, pending)
-                cur, pending = bid, {}
-            pending[row["column"]] = Encoded.from_row(row)
-    if cur is not None and pending:
-        yield check(cur, pending)
+def _plan_blocks(spark, table_dir, columns, snapshot_id, filter_col=None,
+                 lo=None, hi=None):
+    """Plan the blocks of ``columns`` for a multi-column aggregate with
+    the read planner — resume dedup, deletes and, given ``filter_col``,
+    zone pruning on ``[lo, hi]`` all happen in the driver.  Returns
+    ``(plan, lo, hi)`` with the bounds in the filter column's physical
+    domain (integer-clamped, epoch units for timestamps), so every
+    codec tier compares like with like."""
+    preds = [(filter_col, lo, hi)] if filter_col is not None else []
+    plan = plan_read(
+        table_dir,
+        columns=columns,
+        predicates=preds,
+        snapshot_id=snapshot_id,
+        session_tz=_session_tz(spark),
+    )
+    if preds:
+        b = plan.preds[0].bounds(plan.types.get(filter_col))
+        if b is not None:
+            lo, hi = b[1], b[2]
+    return plan, lo, hi
 
 
 def group_count_pair(
@@ -1054,8 +1050,8 @@ def group_count_pair(
     snapshot_id: str | None = None,
 ) -> DataFrame:
     """``SELECT a, b, count(*) GROUP BY a, b`` answered below decode:
-    both columns' blocks co-locate with ONE hash shuffle of compressed
-    buffers on ``block_id`` (the zip-join move, zipjoin.py), each block
+    the read planner hands each task both columns' winning blocks, read
+    file-direct (no shuffle of compressed buffers); each block
     contributes its joint code histogram — rle×rle pairs zip at run
     boundaries without expanding, dict codes pair via one bincount, and
     string values materialize only once per (block, distinct pair) —
@@ -1064,26 +1060,16 @@ def group_count_pair(
     Returns (value_a string, value_b string, n_rows long); null slots
     group as NULL, like SQL GROUP BY.  Merge-on-read deletes apply.
 
-    Scale shape: the shuffle moves compressed blocks, not rows; the
-    Arrow pass emits O(#distinct pairs) per block; the final aggregate
-    key domain is the pair cardinality."""
-    table = IceTable(table_dir)
-    pa_col = physical_column(table, col_a, snapshot_id)
-    pb_col = physical_column(table, col_b, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(
-            F.col("column").isin(pa_col, pb_col)
-        )
-    )
-    tagged = enc.repartition("block_id").sortWithinPartitions(
-        "block_id", "column"
-    )
+    Scale shape: one Arrow pass over the planned blocks emits
+    O(#distinct pairs) per block; the only shuffle is the final
+    aggregate, whose key domain is the pair cardinality."""
+    plan, _, _ = _plan_blocks(spark, table_dir, [col_a, col_b], snapshot_id)
+    pa_col, pb_col = plan.phys_of[col_a], plan.phys_of[col_b]
 
-    def _pairs(batches):
-        for bid, rows in _grouped_blocks(batches, {pa_col, pb_col}):
-            va, vb, ns = _pair_hist(rows[pa_col], rows[pb_col], dmap.get(bid))
+    def _pairs(blocks):
+        for blk in blocks:
+            rows = blk.cols
+            va, vb, ns = _pair_hist(rows[pa_col], rows[pb_col], blk.kill)
             yield pa.RecordBatch.from_pydict(
                 {
                     "value_a": [None if v is None else str(v) for v in va],
@@ -1099,8 +1085,8 @@ def group_count_pair(
                 ),
             )
 
-    partial = tagged.mapInArrow(
-        _pairs, "value_a string, value_b string, n_rows long"
+    partial = read_blocks(
+        spark, plan, _pairs, "value_a string, value_b string, n_rows long"
     )
     return partial.groupBy("value_a", "value_b").agg(
         F.sum("n_rows").alias("n_rows")
@@ -1126,7 +1112,7 @@ def group_ndv_pair(
     are excluded from ``ndv_b`` (SQL ``count(DISTINCT b)`` semantics)
     but still counted in ``n_rows``.  Merge-on-read deletes apply.
 
-    Scale shape: one block_id shuffle of compressed buffers + one
+    Scale shape: one Arrow pass over the planned blocks + one
     shuffle of the pair histogram (bounded by pair cardinality, not row
     count) — exact distinct counting without a row-level expand or a
     sketch."""
@@ -1159,29 +1145,19 @@ def group_sum_pair(
     (= SQL ``sum(coalesce(m, 0))`` + ``count(*)``).  Merge-on-read
     deletes apply to keys and measure alike.
 
-    Scale shape: ONE hash shuffle of compressed buffers on block_id;
-    O(#distinct pairs) rows per block out; final aggregate key = pair
-    cardinality."""
+    Scale shape: one Arrow pass over the planned blocks, no shuffle of
+    compressed buffers; O(#distinct pairs) rows per block out; final
+    aggregate key = pair cardinality."""
     from pyrle_spark.codecs import decode_array
 
-    table = IceTable(table_dir)
-    pa_col = physical_column(table, col_a, snapshot_id)
-    pb_col = physical_column(table, col_b, snapshot_id)
-    pm_col = physical_column(table, measure, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(
-            F.col("column").isin(pa_col, pb_col, pm_col)
-        )
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [col_a, col_b, measure], snapshot_id
     )
-    tagged = enc.repartition("block_id").sortWithinPartitions(
-        "block_id", "column"
-    )
+    pa_col, pb_col, pm_col = (plan.phys_of[c] for c in (col_a, col_b, measure))
 
-    def _partials(batches):
-        for bid, rows in _grouped_blocks(batches, {pa_col, pb_col, pm_col}):
-            kill = dmap.get(bid)
+    def _partials(blocks):
+        for blk in blocks:
+            bid, rows, kill = blk.block_id, blk.cols, blk.kill
             codes_a, vals_a = _block_factorize(rows[pa_col], kill)
             codes_b, vals_b = _block_factorize(rows[pb_col], kill)
             m_enc = rows[pm_col]
@@ -1229,36 +1205,13 @@ def group_sum_pair(
                 ),
             )
 
-    partial = tagged.mapInArrow(
-        _partials, "value_a string, value_b string, n_rows long, sum_m long"
+    partial = read_blocks(
+        spark, plan, _partials,
+        "value_a string, value_b string, n_rows long, sum_m long",
     )
     return partial.groupBy("value_a", "value_b").agg(
         F.sum("n_rows").alias("n_rows"), F.sum("sum_m").alias("sum_m")
     )
-
-
-def _range_mask(vals: np.ndarray, lo, hi) -> np.ndarray:
-    """Elementwise ``lo <= v <= hi`` with comparisons in the array's
-    NATIVE domain: integer arrays compare against integer-clamped
-    bounds — mixing an int64 array with a float bound (including the
-    ``±inf`` stand-ins for unbounded) would promote the comparison to
-    float64 and misclassify values beyond 2^53 near the bounds, making
-    the answer depend on which codec a block happens to have.  Float
-    arrays compare as floats (NaN never matches)."""
-    import math
-
-    if np.issubdtype(vals.dtype, np.integer):
-        info = np.iinfo(np.int64)
-        if (lo is not None and lo > info.max) or (
-            hi is not None and hi < info.min
-        ):
-            return np.zeros(len(vals), dtype=bool)
-        lo_i = info.min if lo is None else max(math.ceil(lo), info.min)
-        hi_i = info.max if hi is None else min(math.floor(hi), info.max)
-        return (vals >= lo_i) & (vals <= hi_i)
-    lo_ = -np.inf if lo is None else lo
-    hi_ = np.inf if hi is None else hi
-    return (vals >= lo_) & (vals <= hi_)
 
 
 def _block_filter_mask(enc: Encoded, lo, hi, kill):
@@ -1316,7 +1269,11 @@ def _block_filter_mask(enc: Encoded, lo, hi, kill):
     if kill is not None and len(kill):
         arr = arr.filter(pa.array(_keep_mask(enc.n_rows, kill)))
     valid = np.asarray(arr.is_valid(), dtype=bool)
-    if pa.types.is_integer(arr.type):
+    if pa.types.is_timestamp(arr.type):
+        # timestamps compare in epoch units of their type, like the
+        # rle/dict tiers' stored values and the planned bounds
+        a = np.asarray(arr.cast(pa.int64()).fill_null(0), dtype=np.int64)
+    elif pa.types.is_integer(arr.type):
         a = np.asarray(arr.fill_null(0), dtype=np.int64)
     else:
         a = np.asarray(arr.fill_null(0), dtype=np.float64)
@@ -1336,8 +1293,8 @@ def group_count_where(
     most common real query shape, answered below row decode with THREE
     pushdown tiers:
 
-    1. **zone prune** (manifest, before any shuffle): blocks whose
-       ``filter_col`` zone misses ``[lo, hi]`` never move;
+    1. **zone prune** (read planner, in the driver): blocks whose
+       ``filter_col`` zone misses ``[lo, hi]`` are never read;
     2. **zone containment** (per surviving block): when every codec-
        visible value matches (``_block_filter_mask`` → None), the key
        column histograms straight off its codes — the filter column
@@ -1350,25 +1307,14 @@ def group_count_where(
     the shape that makes ``WHERE ts BETWEEN …  GROUP BY host`` cheap at
     100 TB.  Returns (value_a string, n_rows long); NULL keys group as
     NULL.  Merge-on-read deletes apply."""
-    table = IceTable(table_dir)
-    pk = physical_column(table, key_col, snapshot_id)
-    pf = physical_column(table, filter_col, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc_all = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(
-            F.col("column").isin(pk, pf)
-        )
+    plan, lo, hi = _plan_blocks(
+        spark, table_dir, [key_col, filter_col], snapshot_id, filter_col, lo, hi
     )
-    live = prune_blocks(enc_all, pf, lo, hi)
-    enc = enc_all.join(F.broadcast(live), "block_id")
-    tagged = enc.repartition("block_id").sortWithinPartitions(
-        "block_id", "column"
-    )
+    pk, pf = plan.phys_of[key_col], plan.phys_of[filter_col]
 
-    def _partials(batches):
-        for bid, rows in _grouped_blocks(batches, {pk, pf}):
-            kill = dmap.get(bid)
+    def _partials(blocks):
+        for blk in blocks:
+            bid, rows, kill = blk.block_id, blk.cols, blk.kill
             codes, vals = _block_factorize(rows[pk], kill)
             mask = _block_filter_mask(rows[pf], lo, hi, kill)
             if mask is not None:
@@ -1392,7 +1338,7 @@ def group_count_where(
                 ),
             )
 
-    partial = tagged.mapInArrow(_partials, "value_a string, n_rows long")
+    partial = read_blocks(spark, plan, _partials, "value_a string, n_rows long")
     return partial.groupBy("value_a").agg(F.sum("n_rows").alias("n_rows"))
 
 
@@ -1430,39 +1376,19 @@ def group_sums_where(
     Returns (value_a string, value_b string, n_rows long,
     sum_<m> long per measure).
 
-    Scale shape: O(#blocks) manifest prune, ONE block_id shuffle of the
-    surviving compressed buffers, O(#distinct pairs) rows per block
-    out; the final aggregate's key is pair cardinality (Q1: 6 groups
+    Scale shape: O(#blocks) prune in the driver, one Arrow pass over the
+    surviving blocks, O(#distinct pairs) rows per block out; the final aggregate's key is pair cardinality (Q1: 6 groups
     regardless of corpus size)."""
     from pyrle_spark.codecs import decode_array
 
-    table = IceTable(table_dir)
-    pa_col = physical_column(table, key_a, snapshot_id)
-    pb_col = (
-        physical_column(table, key_b, snapshot_id)
-        if key_b is not None
-        else None
+    logical = [key_a, *measures] + [c for c in (key_b, filter_col) if c]
+    plan, lo, hi = _plan_blocks(
+        spark, table_dir, logical, snapshot_id, filter_col, lo, hi
     )
-    pm_cols = [physical_column(table, m, snapshot_id) for m in measures]
-    pf = physical_column(table, filter_col, snapshot_id) if filter_col else None
-    need = {pa_col, *pm_cols} | ({pb_col} if pb_col else set()) | (
-        {pf} if pf else set()
-    )
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc_all = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(
-            F.col("column").isin(*need)
-        )
-    )
-    if pf is not None:
-        live = prune_blocks(enc_all, pf, lo, hi)
-        enc = enc_all.join(F.broadcast(live), "block_id")
-    else:
-        enc = enc_all
-    tagged = enc.repartition("block_id").sortWithinPartitions(
-        "block_id", "column"
-    )
+    pa_col = plan.phys_of[key_a]
+    pb_col = plan.phys_of[key_b] if key_b is not None else None
+    pm_cols = [plan.phys_of[m] for m in measures]
+    pf = plan.phys_of[filter_col] if filter_col else None
     sum_names = [f"sum_{m}" for m in measures]
     out_schema = pa.schema(
         [("value_a", pa.string()), ("value_b", pa.string()),
@@ -1470,9 +1396,9 @@ def group_sums_where(
         + [(s, pa.int64()) for s in sum_names]
     )
 
-    def _partials(batches):
-        for bid, rows in _grouped_blocks(batches, need):
-            kill = dmap.get(bid)
+    def _partials(blocks):
+        for blk in blocks:
+            bid, rows, kill = blk.block_id, blk.cols, blk.kill
             codes_a, vals_a = _block_factorize(rows[pa_col], kill)
             if pb_col is not None:
                 codes_b, vals_b = _block_factorize(rows[pb_col], kill)
@@ -1540,7 +1466,9 @@ def group_sums_where(
                 cols[s_name] = [int(v) for v in s[nz]]
             yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
 
-    partial = tagged.mapInArrow(
+    partial = read_blocks(
+        spark,
+        plan,
         _partials,
         ", ".join(
             ["value_a string", "value_b string", "n_rows long"]
@@ -1575,29 +1503,19 @@ def group_minmax_pair(
     Returns (value_a string, value_b string, n_rows long, min_m long,
     max_m long).  Merge-on-read deletes apply.
 
-    Scale shape: ONE hash shuffle of compressed buffers on block_id;
-    O(#distinct pairs) rows per block out; final aggregate key = pair
-    cardinality."""
+    Scale shape: one Arrow pass over the planned blocks, no shuffle of
+    compressed buffers; O(#distinct pairs) rows per block out; final
+    aggregate key = pair cardinality."""
     from pyrle_spark.codecs import decode_array
 
-    table = IceTable(table_dir)
-    pa_col = physical_column(table, col_a, snapshot_id)
-    pb_col = physical_column(table, col_b, snapshot_id)
-    pm_col = physical_column(table, measure, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(
-            F.col("column").isin(pa_col, pb_col, pm_col)
-        )
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [col_a, col_b, measure], snapshot_id
     )
-    tagged = enc.repartition("block_id").sortWithinPartitions(
-        "block_id", "column"
-    )
+    pa_col, pb_col, pm_col = (plan.phys_of[c] for c in (col_a, col_b, measure))
 
-    def _partials(batches):
-        for bid, rows in _grouped_blocks(batches, {pa_col, pb_col, pm_col}):
-            kill = dmap.get(bid)
+    def _partials(blocks):
+        for blk in blocks:
+            bid, rows, kill = blk.block_id, blk.cols, blk.kill
             codes_a, vals_a = _block_factorize(rows[pa_col], kill)
             codes_b, vals_b = _block_factorize(rows[pb_col], kill)
             m_enc = rows[pm_col]
@@ -1657,8 +1575,8 @@ def group_minmax_pair(
                 ),
             )
 
-    partial = tagged.mapInArrow(
-        _partials,
+    partial = read_blocks(
+        spark, plan, _partials,
         "value_a string, value_b string, n_rows long, min_m long, max_m long",
     )
     return partial.groupBy("value_a", "value_b").agg(

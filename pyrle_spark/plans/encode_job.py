@@ -50,6 +50,16 @@ from pyspark.sql import functions as F
 
 from pyrle_spark.codecs import Encoded, decode_array
 from pyrle_spark.codecs.base import arrow_to_payload, str_to_type
+from pyrle_spark.plans.read_plan import (
+    THIN_COLS,
+    _read_thin,
+    _surviving_blocks,
+    decode_blocks,
+    explain,
+    norm_predicates,
+    plan_read,
+    read_blocks,
+)
 from pyrle_spark.sources.icetable import IceTable
 
 __all__ = [
@@ -1699,16 +1709,13 @@ def scan_incremental(
     cols = sorted(columns or table.properties(to_snapshot)["columns"])
     # block rows in the added files carry PHYSICAL names — resolve rename
     # aliases so the completeness tally counts the right columns
-    phys = sorted(physical_column(table, c, to_snapshot) for c in cols)
-    new_enc = spark.read.parquet(*new_paths).filter(F.col("column").isin(phys))
-    per_block = (
-        new_enc.groupBy("block_id")
-        .agg(F.countDistinct("column").alias("_nc"))
-        .cache()
-    )
-    complete = per_block.filter(F.col("_nc") != len(cols)).count() == 0
-    if complete:
-        per_block.unpersist()
+    phys = {physical_column(table, c, to_snapshot) for c in cols}
+    thin = _read_thin(new_paths)
+    per_block: dict = {}
+    for b, c in zip(thin["block_id"], thin["column"]):
+        if c in phys:
+            per_block.setdefault(b, set()).add(c)
+    if all(len(s) == len(phys) for s in per_block.values()):
         return decode_table(
             spark,
             table_dir,
@@ -1716,13 +1723,12 @@ def scan_incremental(
             snapshot_id=to_snapshot,
             paths=new_paths,
         )
-    added_blocks = per_block.select("block_id")
     return decode_table(
         spark,
         table_dir,
         columns=columns,
         snapshot_id=to_snapshot,
-        blocks=added_blocks,
+        blocks=set(per_block),
     )
 
 
@@ -2479,15 +2485,28 @@ _VALID_REWRITE_CODECS = frozenset(
 # ----------------------------------------------------------------- zone maps
 
 
-_ZONE_CAST = {
-    "int64": "long",
-    "int32": "int",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-}
+def _session_tz(spark: SparkSession) -> str | None:
+    return spark.conf.get("spark.sql.session.timeZone", None)
+
+
+def _prune_adapter(enc: DataFrame, column: str, pred: tuple, arrow_type=None):
+    """Survivor block ids of one predicate on ``column``, judged by the
+    read planner's evaluator over ``enc``'s thin rows (collected once —
+    one row per block-column of the manifest)."""
+    spark = enc.sparkSession
+    rows = [
+        r.asDict()
+        for r in enc.filter(F.col("column") == column)
+        .select(*[c for c in THIN_COLS if c in enc.columns])
+        .collect()
+    ]
+    if arrow_type is not None:
+        for r in rows:
+            r["arrow_type"] = arrow_type
+    surv = _surviving_blocks(rows, [pred], _session_tz(spark))
+    return spark.createDataFrame(
+        [(int(b),) for b in sorted(surv)], "block_id long"
+    )
 
 
 def prune_blocks(
@@ -2498,42 +2517,15 @@ def prune_blocks(
 
     Conservative by construction — a block lacking zone stats is kept, so
     the result is always a superset of the blocks containing matches.
-    This is the application-level analog of parquet row-group min/max
-    pruning, done on the (tiny) blocks manifest instead of the data; at
-    10^12 docs the manifest scan is O(#blocks), not O(rows).
-    """
-    z = enc.filter(F.col("column") == column)
-    if arrow_type is None:
-        row = z.select("arrow_type").first()
-        arrow_type = row["arrow_type"] if row else "string"
-    # try_cast, not cast: under ANSI mode a malformed zone string would make
-    # the whole prune job THROW; try_cast yields NULL and the null-check
-    # below keeps the block conservatively.
-    if arrow_type.startswith("timestamp"):
-        cast = "timestamp_ntz" if "tz=" not in arrow_type else "timestamp"
-        zmin, zmax = F.col("zmin").try_cast(cast), F.col("zmax").try_cast(cast)
-    elif arrow_type in ("binary", "large_binary"):
-        zmin, zmax = F.unhex("zmin"), F.unhex("zmax")
-    else:
-        cast = _ZONE_CAST.get(arrow_type)
-        if cast is None:
-            return z.select("block_id").distinct()  # unprunable type: keep all
-        zmin, zmax = F.col("zmin").try_cast(cast), F.col("zmax").try_cast(cast)
-    # Null-check the CAST value, not the raw string: a zone string the cast
-    # can't parse (e.g. isoformat ns-precision timestamps) casts to NULL, and
-    # `NULL >= lo` would silently drop the block — keep it instead so the
-    # result stays a superset (the residual filter catches false positives).
-    keep = F.lit(True)
-    if lo is not None:
-        keep = keep & (zmax.isNull() | (zmax >= F.lit(lo)))
-    if hi is not None:
-        keep = keep & (zmin.isNull() | (zmin <= F.lit(hi)))
-    return z.filter(keep).select("block_id").distinct()
+    The evaluator is the read planner's (:mod:`~pyrle_spark.plans.
+    read_plan`); this adapter runs it over ``enc``'s thin rows for
+    callers that hold a manifest DataFrame."""
+    return _prune_adapter(enc, column, (column, lo, hi, None), arrow_type)
 
 
 def prune_blocks_eq(enc: DataFrame, column: str, value) -> DataFrame:
     """Bloom-digest data skipping for EQUALITY predicates: block_ids
-    whose ``column`` digest may contain ``value``.
+    whose ``column`` zone and digest may contain ``value``.
 
     Complements :func:`prune_blocks` — a hot value like ``lang = 'sw'``
     sits inside every block's [zmin, zmax] range, but a block that never
@@ -2541,58 +2533,16 @@ def prune_blocks_eq(enc: DataFrame, column: str, value) -> DataFrame:
     skipped.  Conservative: a block without a digest (high cardinality,
     unsupported type, pre-digest snapshot) is kept, so the result is
     always a superset of the blocks containing matches."""
-    data = _bloom_value_bytes(value)
-    if data is None:
-        return enc.filter(F.col("column") == column).select("block_id").distinct()
-    keep = F.col("bloom").isNull() if "bloom" in enc.columns else F.lit(True)
-    if "bloom" in enc.columns:
-        probe = F.lit(True)
-        for pos in set(_bloom_positions(data)):
-            byte_hex = F.substring("bloom", 2 * (pos // 8) + 1, 2)
-            bit = F.conv(byte_hex, 16, 10).cast("int").bitwiseAND(
-                F.lit(1 << (pos % 8))
-            )
-            probe = probe & (bit != 0)
-        keep = keep | probe
-    return (
-        enc.filter(F.col("column") == column)
-        .filter(keep)
-        .select("block_id")
-        .distinct()
-    )
+    return _prune_adapter(enc, column, (column, value, value, None))
 
 
 def prune_blocks_in(enc: DataFrame, column: str, values) -> DataFrame:
     """Bloom-digest data skipping for IN-list predicates: block_ids whose
-    ``column`` digest may contain ANY of ``values`` (disjunction of the
-    per-value probes in one manifest pass).  Same conservative contract
-    as :func:`prune_blocks_eq`: missing digest or unsupported value type
+    ``column`` digest may contain ANY of ``values`` (and whose zone
+    meets [min(values), max(values)]).  Same conservative contract as
+    :func:`prune_blocks_eq`: missing digest or unsupported value type
     keeps the block."""
-    probes = []
-    for v in values:
-        data = _bloom_value_bytes(v)
-        if data is None:  # unsupported type: cannot prune on this value
-            return enc.filter(F.col("column") == column).select("block_id").distinct()
-        probes.append(data)
-    if not probes or "bloom" not in enc.columns:
-        return enc.filter(F.col("column") == column).select("block_id").distinct()
-    any_probe = F.lit(False)
-    for data in probes:
-        probe = F.lit(True)
-        for pos in set(_bloom_positions(data)):
-            byte_hex = F.substring("bloom", 2 * (pos // 8) + 1, 2)
-            bit = F.conv(byte_hex, 16, 10).cast("int").bitwiseAND(
-                F.lit(1 << (pos % 8))
-            )
-            probe = probe & (bit != 0)
-        any_probe = any_probe | probe
-    keep = F.col("bloom").isNull() | any_probe
-    return (
-        enc.filter(F.col("column") == column)
-        .filter(keep)
-        .select("block_id")
-        .distinct()
-    )
+    return _prune_adapter(enc, column, norm_predicates([(column, values)])[0])
 
 
 def explain_scan(
@@ -2603,9 +2553,10 @@ def explain_scan(
     snapshot_id: str | None = None,
 ) -> dict:
     """EXPLAIN for the pushdown scan: how hard would each pruning tier
-    bite for these predicates, WITHOUT decoding anything.  Pure
-    manifest work (the same thin-column aggregations the pruners run),
-    so it is cheap enough to call before a big job or from a planner.
+    bite for these predicates, WITHOUT decoding anything.  The read
+    planner's own evaluation over the data files' thin columns, in the
+    driver — no Spark job — so it is cheap enough to call before a big
+    job or from a planner.
 
     Returns::
 
@@ -2622,66 +2573,11 @@ def explain_scan(
     The per-predicate numbers are each tier's standalone superset —
     comparing ``zone_survivors`` with ``final_survivors`` shows what
     the bloom digest added over the zone map for an equality/IN probe.
+    Deletes are not a tier here: a fully deleted block still counts.
     """
-    table = IceTable(table_dir)
-    enc = table.read_table(spark, snapshot_id)
-    aliases = table.properties(snapshot_id).get("column_aliases", {})
-    total = enc.select("block_id").distinct().count()
-    norm = _norm_predicates(predicates or [])
-    report = []
-    blocks = None
-    for colname, lo, hi, values in norm:
-        phys = aliases.get(colname, colname)
-        zone = prune_blocks(enc, phys, lo, hi)
-        surv = zone
-        kind = "range"
-        if values is not None:
-            kind = "in"
-            surv = zone.join(
-                prune_blocks_in(enc, phys, values), "block_id", "inner"
-            )
-        elif lo is not None and lo == hi:
-            kind = "eq"
-            surv = zone.join(
-                prune_blocks_eq(enc, phys, lo), "block_id", "inner"
-            )
-        report.append(
-            {
-                "column": colname,
-                "kind": kind,
-                "zone_survivors": zone.count(),
-                "final_survivors": surv.count(),
-            }
-        )
-        blocks = surv if blocks is None else blocks.join(
-            surv, "block_id", "inner"
-        )
-    dnf_survivors = None
-    or_norm = [_norm_predicates(conj) for conj in (any_of or [])]
-    if or_norm:
-        union = None
-        for conj in or_norm:
-            c = _conj_survivors(enc, aliases, conj, None)
-            if c is None:
-                union = None
-                break
-            union = c if union is None else union.unionByName(c)
-        if union is not None:
-            union = union.distinct()
-            dnf_survivors = union.count()
-            blocks = union if blocks is None else blocks.join(
-                union, "block_id", "inner"
-            )
-    survivors = total if blocks is None else blocks.select(
-        "block_id"
-    ).distinct().count()
-    return {
-        "total_blocks": int(total),
-        "survivor_blocks": int(survivors),
-        "selectivity": round(survivors / total, 4) if total else 1.0,
-        "per_predicate": report,
-        "dnf_survivors": dnf_survivors,
-    }
+    return explain(
+        table_dir, predicates, any_of, snapshot_id, session_tz=_session_tz(spark)
+    )
 
 
 def scan_encoded(
@@ -2692,22 +2588,21 @@ def scan_encoded(
     snapshot_id: str | None = None,
     any_of: list | None = None,
 ) -> DataFrame:
-    """Query the encoded table with pushdown: zone-map pruning + column
-    pruning + residual filter, in one call.
+    """Query the encoded table with pushdown: block pruning + column
+    pruning + residual filter, in one call and one Spark job.
 
     ``predicates``: list of ``(column, lo, hi)`` range/equality bounds
     (None = unbounded on that side) or ``(column, values_list)`` IN-list
-    predicates.  Blocks are decoded only if EVERY predicate's zone can
-    match (survivor sets intersect — conjunctive pushdown, the SURVEY
-    §4.1 "RLE-aware filter pushdown" done at the application layer); an
-    equality predicate (``lo == hi``) is additionally pushed through the
-    per-block bloom digests (:func:`prune_blocks_eq`), and an IN-list
-    through the disjunctive probe (:func:`prune_blocks_in`) plus the
-    zone range [min(values), max(values)] — both skip blocks the values
-    never touched even when they sit inside every block's zone range.
-    The residual filter then enforces the exact predicate on the decoded
-    rows, so results equal a full decode + filter while touching only
-    surviving blocks.
+    predicates.  The read planner (:func:`~pyrle_spark.plans.read_plan.
+    plan_read`) keeps a block only if EVERY predicate's zone can match
+    (conjunctive pushdown, the SURVEY §4.1 "RLE-aware filter pushdown"
+    done at the application layer); an equality predicate (``lo ==
+    hi``) or IN-list is additionally probed against the per-block bloom
+    digests, which skip blocks the values never touched even when they
+    sit inside every block's zone range.  The decode tasks drop rows a
+    conservative copy of the predicates rules out, and Spark then
+    applies the exact residual, so results equal a full decode + filter
+    while touching only surviving blocks.
 
     ``any_of``: DNF pushdown — a list of predicate LISTS, each an AND
     of the same tuple forms, OR'd together: ``any_of=[[("lang", "en",
@@ -2718,40 +2613,20 @@ def scan_encoded(
     applies the exact boolean.  An empty disjunct matches everything
     (no pruning from the group).
     """
-    table = IceTable(table_dir)
-    enc = table.read_table(spark, snapshot_id)
-    # predicates arrive on LOGICAL names; zone/bloom pruning runs on the
-    # manifest's physical names (rename_column is metadata-only)
-    aliases = table.properties(snapshot_id).get("column_aliases", {})
-    blocks = None
+    norm = norm_predicates(predicates or [])
+    or_norm = [norm_predicates(conj) for conj in (any_of or [])]
     need_cols = set(columns or [])
-    norm = _norm_predicates(predicates or [])
-    or_norm = [_norm_predicates(conj) for conj in (any_of or [])]
-    for colname, *_ in norm + [p for conj in or_norm for p in conj]:
-        need_cols.add(colname) if columns else None
-    blocks = _conj_survivors(enc, aliases, norm, None)
-    if or_norm:
-        # DNF: survivors of the OR group = UNION of each disjunct's
-        # conjunctive survivor set; intersected with the global conjuncts
-        union = None
-        for conj in or_norm:
-            s = _conj_survivors(enc, aliases, conj, None)
-            if s is None:  # an empty disjunct matches everything
-                union = None
-                break
-            union = s if union is None else union.unionByName(s)
-        if union is not None:
-            union = union.distinct()
-            blocks = union if blocks is None else blocks.join(
-                union, "block_id", "inner"
-            )
-    out = decode_table(
-        spark,
+    if columns:
+        need_cols |= {p[0] for p in norm + [p for c in or_norm for p in c]}
+    plan = plan_read(
         table_dir,
         columns=sorted(need_cols) if columns else None,
+        predicates=norm,
+        any_of=or_norm,
         snapshot_id=snapshot_id,
-        blocks=blocks,
+        session_tz=_session_tz(spark),
     )
+    out = _decode_plan(spark, plan)
     res = _residual_expr(norm)
     if res is not None:
         out = out.filter(res)
@@ -2763,48 +2638,6 @@ def scan_encoded(
             disj = e if disj is None else (disj | e)
         out = out.filter(disj)
     return out
-
-
-def _norm_predicates(predicates: list) -> list:
-    """Normalize ``(col, lo, hi)`` / ``(col, values)`` predicate tuples
-    to ``(col, lo, hi, values_or_None)``."""
-    norm = []
-    for p in predicates:
-        if len(p) == 2:
-            colname, values = p
-            values = sorted(set(values))
-            norm.append(
-                (
-                    colname,
-                    min(values) if values else None,
-                    max(values) if values else None,
-                    values,
-                )
-            )
-        else:
-            colname, lo, hi = p
-            norm.append((colname, lo, hi, None))
-    return norm
-
-
-def _conj_survivors(enc: DataFrame, aliases: dict, norm: list, blocks):
-    """Survivor block set of a CONJUNCTION of normalized predicates
-    (zone + bloom pruning, sets intersect); None = no pruning (all)."""
-    for colname, lo, hi, values in norm:
-        phys = aliases.get(colname, colname)
-        surv = prune_blocks(enc, phys, lo, hi)
-        if values is not None:
-            surv = surv.join(
-                prune_blocks_in(enc, phys, values), "block_id", "inner"
-            )
-        elif lo is not None and lo == hi:
-            surv = surv.join(
-                prune_blocks_eq(enc, phys, lo), "block_id", "inner"
-            )
-        blocks = surv if blocks is None else blocks.join(
-            surv, "block_id", "inner"
-        )
-    return blocks
 
 
 def _residual_expr(norm: list):
@@ -2827,246 +2660,91 @@ def _residual_expr(norm: list):
 # --------------------------------------------------------------------- decode
 
 
-def _make_decode_fn(
-    block_rows: int, types: dict | None = None, rename: dict | None = None
-):
-    # ``types``: LOGICAL column -> resolved arrow-type string.  Blocks
-    # written before a type widening decode at their narrow type and are
-    # cast up here so every emitted RecordBatch matches the output schema.
-    # ``rename``: physical (storage) name -> logical name, from
-    # rename_column's metadata-only alias map.
-    def decode_stream(batches):
-        # rows: one per (block, column), sorted by (block_id, column)
-        cur_bid = None
-        pending: dict = {}
-
-        def flush(bid, cols):
-            arrays = {}
-            n = None
-            for colname, enc in cols.items():
-                arr = decode_array(enc)
-                target = types.get(colname) if types else None
-                if target is not None and str(arr.type) != target:
-                    arr = arr.cast(str_to_type(target))
-                arrays[colname] = arr
-                n = len(arr)
-            order = pa.array(
-                np.arange(n, dtype=np.int64) + bid * block_rows
-            )
-            names = ["_order"] + sorted(arrays)
-            cols_out = [order] + [arrays[c] for c in sorted(arrays)]
-            return pa.RecordBatch.from_arrays(cols_out, names=names)
-
-        for batch in batches:
-            d = batch.to_pylist()
-            for row in d:
-                bid = row["block_id"]
-                if bid != cur_bid:
-                    if cur_bid is not None and pending:
-                        yield flush(cur_bid, pending)
-                    cur_bid = bid
-                    pending = {}
-                logical = (
-                    rename.get(row["column"], row["column"])
-                    if rename
-                    else row["column"]
-                )
-                pending[logical] = Encoded(
-                    codec=row["codec"],
-                    arrow_type=row["arrow_type"],
-                    n_rows=row["n_rows"],
-                    meta=json.loads(row["meta"]),
-                    buffers=dict(row["buffers"]),  # map comes back as k/v tuples
-                )
-        if cur_bid is not None and pending:
-            yield flush(cur_bid, pending)
-
-    return decode_stream
-
-
 def decode_table(
     spark: SparkSession,
     table_dir: str,
     columns: list | None = None,
     snapshot_id: str | None = None,
-    blocks: DataFrame | None = None,
+    blocks=None,
     apply_deletes: bool = True,
     paths: list | None = None,
     driver_max: int | None = None,
 ) -> DataFrame:
     """Decode an encoded-blocks table back to rows (with ``_order``).
 
-    ``driver_max``: explicit override of the delete-set driver-side
-    cutover (defaults to ``_DELETE_DRIVER_MAX``); past it the deleted
-    positions anti-join as a distributed relation instead of a
-    broadcast list.
+    The read planner picks the blocks in the driver, from the data
+    files' thin columns (:func:`~pyrle_spark.plans.read_plan.plan_read`);
+    the decode is one ``mapInArrow`` over that block list, so collecting
+    the result is one Spark job.
 
-    ``blocks``: optional DataFrame with a ``block_id`` column (e.g. from
-    :func:`prune_blocks`) — only those blocks are decoded (zone-map data
-    skipping; the block list is small, so it broadcasts).
+    ``driver_max``: explicit override of the delete-set driver-side
+    cutover (defaults to ``_DELETE_DRIVER_MAX``); past it the driver
+    ships only the delete-vector file list and each decode task reads
+    the positions of its own block span.
+
+    ``blocks``: optional block-id set — a DataFrame with a ``block_id``
+    column (e.g. from :func:`prune_blocks`; collected once in the
+    driver) or an iterable of ids.  Only those blocks are decoded.
 
     ``apply_deletes``: merge-on-read — positions recorded by
-    :func:`delete_rows` and visible at this snapshot are anti-joined
-    out (broadcast of the tiny position set); blocks whose every row is
-    deleted are pruned before decode.  Pass False to audit raw blocks.
+    :func:`delete_rows` and visible at this snapshot are masked out in
+    the decode tasks, and blocks whose every row is deleted are never
+    read.  Pass False to audit raw blocks.
 
     ``paths``: optional subset of the snapshot's data files to read
-    INSTEAD of the whole manifest — the scan plans only these files, so
+    INSTEAD of the whole manifest — only these files are planned, so
     cost is O(given files), not O(table) (:func:`scan_incremental`'s
-    fast path).  Caller must ensure every decoded block's requested
-    columns are present in the subset.
+    fast path).  Every decoded block must carry every requested column
+    inside the subset.
     """
-    table = IceTable(table_dir)
-    if snapshot_id:
-        snapshot_id = table.resolve_ref(snapshot_id)  # tag/branch names work
-    props = table.properties(snapshot_id)
-    block_rows = int(props["block_rows"])
-    all_cols = props["columns"]
-    cols = sorted(columns or all_cols)
-    unknown = [c for c in cols if c not in all_cols]
-    if unknown:
-        raise KeyError(
-            f"columns {unknown} not available at this snapshot "
-            f"(available: {sorted(all_cols)}; dropped: "
-            f"{props.get('dropped_columns', [])})"
-        )
-    # rename_column is metadata-only: blocks keep their physical name and
-    # the snapshot's alias map {logical: physical} is resolved here — the
-    # scan filters on physical names, the output carries logical names.
-    aliases = props.get("column_aliases", {})
-    phys_of = {c: aliases.get(c, c) for c in cols}
-    phys_cols = sorted(phys_of.values())
-    rename = {p: c for c, p in phys_of.items() if p != c}
-    enc = (
-        spark.read.parquet(*paths)
-        if paths
-        else table.read_table(spark, snapshot_id)
+    plan = plan_read(
+        table_dir,
+        columns=columns,
+        snapshot_id=snapshot_id,
+        paths=paths,
+        blocks=blocks,
+        apply_deletes=apply_deletes,
+        driver_max=driver_max,
     )
-    enc_raw = enc
-    # always prune to the requested physical set: stale blocks (dropped or
-    # renamed-away columns awaiting compaction) must not reach the decoder
-    enc = enc.filter(F.col("column").isin(phys_cols))
-    if blocks is not None:
-        enc = enc.join(
-            F.broadcast(blocks.select("block_id").distinct()),
-            "block_id",
-            "left_semi",
-        )
-    del_files = (
-        _visible_delete_files(table_dir, snapshot_id) if apply_deletes else []
-    )
-    deleted: list = []
-    dels_df = None
-    if del_files:
-        import pyarrow.parquet as pq
+    return _decode_plan(spark, plan)
 
-        # footer-only row count decides the strategy: small sets stay on
-        # the driver (list + broadcast anti-join); big sets — a mass
-        # takedown or a giant MERGE — never materialize driver-side and
-        # anti-join as a distributed relation instead
-        n_del = sum(pq.ParquetFile(f).metadata.num_rows for f in del_files)
-        if n_del <= (_DELETE_DRIVER_MAX if driver_max is None else driver_max):
-            deleted = _delete_positions(table_dir, snapshot_id)
-            # prune fully-deleted blocks before any decode work: the
-            # position set is driver-resident and small, so the
-            # per-block tally is a dict pass, not a Spark job
-            per_block: dict = {}
-            for p in deleted:
-                b = p // block_rows
-                per_block[b] = per_block.get(b, 0) + 1
-            dead = [b for b, n in per_block.items() if n >= block_rows]
-            if dead:
-                enc = enc.filter(~F.col("block_id").isin(dead))
-        else:
-            dels_df = (
-                spark.read.parquet(*del_files).select("_order").distinct()
-            )
-            dead_df = (
-                dels_df.groupBy(
-                    F.floor(F.col("_order") / block_rows)
-                    .cast("long")
-                    .alias("block_id")
-                )
-                .count()
-                .filter(F.col("count") >= block_rows)
-                .select("block_id")
-            )
-            enc = enc.join(dead_df, "block_id", "left_anti")
-    enc = dedup_blocks(enc)
-    enc = enc.repartition("block_id").sortWithinPartitions("block_id", "column")
-    # ONE job resolves every column's arrow type (was one scan per column).
-    # Types come from dedup_blocks so a re-encoded column's latest arrow type
-    # wins deterministically (raw distinct() could yield two rows per column).
-    # A column whose BLOCKS disagree on width (schema evolution: int32
-    # blocks before a widening, int64 after) resolves to the WIDEST type
-    # of its family, and decode casts narrow blocks up — Iceberg's
-    # promotion rule (int→long, float→double); incompatible mixes raise.
-    type_rows = (
-        dedup_blocks(enc_raw.filter(F.col("column").isin(phys_cols)))
-        .select("column", "arrow_type")
-        .distinct()
-        .collect()
-    )
-    by_col: dict = {}
-    for r in type_rows:
-        # type map is keyed by LOGICAL name (what the decode fn emits)
-        by_col.setdefault(rename.get(r["column"], r["column"]), set()).add(
-            r["arrow_type"]
-        )
-    types = {c: _widest_type(c, ts) for c, ts in by_col.items()}
-    missing = [c for c in cols if c not in types]
-    if missing:
-        src_schema = props.get("source_schema") or {}
-        if (
-            not type_rows
-            and all(phys_of[c] in src_schema for c in cols)
-            and enc_raw.isEmpty()
-        ):
-            # zero live blocks (table created then never populated, or
-            # everything compacted/deleted away): no block row carries an
-            # arrow_type, but the recorded logical schema types the empty
-            # result — so e.g. an insert-only MERGE can read the table
-            from pyspark.sql.types import StructType
 
-            empty_schema = StructType.fromJson(
-                {
-                    "type": "struct",
-                    "fields": [
-                        {
-                            "name": "_order",
-                            "type": "long",
-                            "nullable": False,
-                            "metadata": {},
-                        }
-                    ]
-                    + [
-                        {
-                            "name": c,
-                            "type": src_schema[phys_of[c]],
-                            "nullable": True,
-                            "metadata": {},
-                        }
-                        for c in cols
-                    ],
-                }
-            )
-            return spark.createDataFrame([], empty_schema)
-        raise KeyError(
-            f"columns {missing} not present in snapshot "
-            f"{snapshot_id or '(latest)'}; available: {sorted(types)}"
+def _decode_plan(spark: SparkSession, plan) -> DataFrame:
+    """The rows of a :class:`~pyrle_spark.plans.read_plan.ReadPlan`:
+    ``_order`` + its columns in name order, at their resolved types."""
+    cols = sorted(plan.phys_of)
+    if plan.empty:
+        # zero live blocks (table created then never populated, or
+        # everything compacted away): no block row carries an arrow_type,
+        # but the recorded logical schema types the empty result — so
+        # e.g. an insert-only MERGE can read the table
+        from pyspark.sql.types import StructType
+
+        fields = [
+            {"name": "_order", "type": "long", "nullable": False, "metadata": {}}
+        ] + [
+            {
+                "name": c,
+                "type": plan.src_schema[plan.phys_of[c]],
+                "nullable": True,
+                "metadata": {},
+            }
+            for c in cols
+        ]
+        return spark.createDataFrame(
+            [], StructType.fromJson({"type": "struct", "fields": fields})
         )
-    out_schema = ", ".join(
-        ["_order long"] + [f"{c} {_spark_type_of(types[c])}" for c in cols]
+    # a column whose blocks disagree on width (written before and after a
+    # type widening) resolves to the widest type of its family and the
+    # narrow blocks are cast up — Iceberg's promotion rule
+    targets = {c: str_to_type(plan.types[c]) for c in cols}
+    schema = ", ".join(
+        ["_order long"] + [f"{c} {_spark_type_of(plan.types[c])}" for c in cols]
     )
-    out = enc.mapInArrow(_make_decode_fn(block_rows, types, rename), out_schema)
-    if deleted:
-        dels = spark.createDataFrame(
-            [(int(p),) for p in deleted], "_order long"
-        )
-        out = out.join(F.broadcast(dels), "_order", "left_anti")
-    elif dels_df is not None:
-        out = out.join(dels_df, "_order", "left_anti")
-    return out
+    fn = decode_blocks(
+        plan.block_rows, targets, plan.phys_of, plan.preds, plan.any_of
+    )
+    return read_blocks(spark, plan, fn, schema)
 
 
 _PROMOTIONS = [
@@ -3170,24 +2848,15 @@ def count_rows(
 def verify_checksums(spark: SparkSession, table_dir: str) -> dict:
     """Scalable decode verification: decode every block and compare the
     recomputed payload crc32 with the one stored at encode time.  No
-    join against the source table."""
-    table = IceTable(table_dir)
-    enc = dedup_blocks(table.read_table(spark))
+    join against the source table: one Spark job whose tasks return
+    ok/bad partials, summed in the driver."""
+    plan = plan_read(table_dir, all_physical=True, apply_deletes=False)
 
-    def check(batches):
-        ok = 0
-        bad = 0
-        for batch in batches:
-            for row in batch.to_pylist():
-                e = Encoded(
-                    codec=row["codec"],
-                    arrow_type=row["arrow_type"],
-                    n_rows=row["n_rows"],
-                    meta=json.loads(row["meta"]),
-                    buffers=dict(row["buffers"]),
-                )
-                arr = decode_array(e)
-                if payload_checksum(arr) == row["crc32"]:
+    def check(blocks):
+        ok = bad = 0
+        for blk in blocks:
+            for c, e in blk.cols.items():
+                if payload_checksum(decode_array(e)) == blk.crc[c]:
                     ok += 1
                 else:
                     bad += 1
@@ -3196,5 +2865,5 @@ def verify_checksums(spark: SparkSession, table_dir: str) -> dict:
             schema=pa.schema([("ok", pa.int64()), ("bad", pa.int64())]),
         )
 
-    res = enc.mapInArrow(check, "ok long, bad long").groupBy().sum().collect()[0]
-    return {"ok": res[0] or 0, "bad": res[1] or 0}
+    rows = read_blocks(spark, plan, check, "ok long, bad long").collect()
+    return {"ok": sum(r[0] for r in rows), "bad": sum(r[1] for r in rows)}

@@ -6,27 +6,27 @@ of the engine builds with :mod:`pyrle_spark.plans.encode_job`.
 This is the engine surfaced through Spark's OWN extension point instead
 of library calls — a user gets the full planner integration for free:
 
-- **partition planning** is metadata-only on the driver: the snapshot
-  manifest names the data files (zero I/O beyond the JSON), and one
-  parquet-footer read per file yields its block-id span.  Files whose
-  spans overlap (resume re-encodes, widen passes) are fused into one
-  input partition so superseded partial blocks can be deduplicated
-  task-side; everything else reads one file per task.  O(#files) driver
-  work — the same budget Spark's parquet planning spends.
+- **partition planning** is the read planner's
+  (:func:`~pyrle_spark.plans.read_plan.plan_read`), in the driver's
+  planning process: it reads the thin manifest columns of the
+  snapshot's data files with pyarrow, picks one resume-dedup winner per
+  (block, column), drops fully deleted blocks and slices the block list
+  into input partitions.  Each partition carries its own blocks' winner
+  rows, and ``read`` decodes them file-direct through the same block
+  reader ``decode_table`` uses.
 - **filter pushdown** (``pushFilters``, 4.1 API): =, <, <=, >, >=, IN on
   any encoded column prune *blocks* before any decode work — zone maps
-  for ranges, bloom digests for equality/IN, evaluated task-side against
-  the thin manifest columns of that task's files.  Every filter is also
-  returned to Spark for re-evaluation, so pruning stays a pure superset
-  optimization (the contract :func:`~pyrle_spark.plans.encode_job.
-  prune_blocks` documents); a pruning bug can cost speed, never rows.
+  for ranges, bloom digests for equality/IN, evaluated by the read
+  planner in the driver.  The decode tasks also drop rows a
+  conservative copy of the filters rules out.  Every filter is returned
+  to Spark for re-evaluation, so pruning stays a pure superset
+  optimization; a pruning bug can cost speed, never rows.
 - **column pruning** via ``option("columns", "a,b")``: unrequested
   columns are never read from the encoded file (parquet column
   projection drops their buffers) and never decoded.
 - **reads are merge-on-read**: position deletes visible at the chosen
   snapshot (``option("snapshot", <id-or-ref>)`` time-travels) are
-  anti-masked out of the decoded batches; the delete set is O(deleted
-  rows) driver state, like :func:`decode_table`'s broadcast.
+  masked out of the decoded batches, exactly as in :func:`decode_table`.
 - **writes speak the Iceberg commit protocol** through Spark's writer
   lifecycle: each task encodes its (pre-clustered, pre-sorted) rows and
   writes ONE uniquely named data file under ``.inprogress`` rename
@@ -35,11 +35,10 @@ of library calls — a user gets the full planner integration for free:
   locked metadata transaction — task retries/speculation leave only
   vacuum()-able orphans, never phantom manifest entries.
 
-Scale shape at 10^12 docs: the driver touches O(#files) footers and
-O(deleted) positions; raw bytes move parquet → Python worker → parquet
-exactly once in each direction (the file-direct discipline of
-:func:`encode_parquet_dir`); block pruning and decode are embarrassingly
-parallel per task.
+Scale shape at 10^12 docs: the driver reads O(#block-columns) thin
+rows and O(deleted) positions; raw bytes move parquet → Python worker →
+parquet exactly once in each direction (the file-direct discipline of
+:func:`encode_parquet_dir`); decode is embarrassingly parallel per task.
 
 Usage::
 
@@ -67,7 +66,6 @@ distributed source/sink.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -172,12 +170,21 @@ def _decoded_schema(props: dict, columns: list | None) -> StructType:
 
 
 @dataclass
-class _FileGroup(InputPartition):
-    """One read task: the data files whose block-id spans overlap (must
-    be deduplicated together) — normally a single file."""
+class _PlanSlice(InputPartition):
+    """One read task: a JSON slice of the read planner's block list —
+    each block's winning (path, column, n_rows) rows and deleted
+    offsets (:meth:`~pyrle_spark.plans.read_plan.ReadPlan.payloads`)."""
 
-    paths: list
+    payload: str
     value: int = 0
+
+
+def _slices(plan) -> list:
+    """A plan's blocks as one input partition per slice, at most one
+    slice per local core (the reader plans without a SparkContext)."""
+    return [
+        _PlanSlice(payload=p) for p in plan.payloads(os.cpu_count() or 1)
+    ]
 
 
 def _norm_filters(filters: list) -> list:
@@ -201,119 +208,10 @@ def _norm_filters(filters: list) -> list:
     return preds
 
 
-def _zone_value(s, arrow_type: str):
-    """Parse a stored zone-bound string back to a comparable value (the
-    task-side mirror of prune_blocks' try_cast); None = unparseable →
-    caller keeps the block (conservative superset contract)."""
-    if s is None:
-        return None
-    try:
-        if arrow_type in ("int8", "int16", "int32", "int64", "uint8",
-                          "uint16", "uint32", "uint64"):
-            return int(s)
-        if arrow_type in ("float", "double", "halffloat"):
-            return float(s)
-        if arrow_type.startswith("timestamp"):
-            import datetime as _dt
-
-            return _dt.datetime.fromisoformat(s)
-        if arrow_type in ("binary", "large_binary"):
-            return bytes.fromhex(s)
-        if arrow_type in ("string", "large_string"):
-            return s
-    except (ValueError, TypeError):
-        return None
-    return None
-
-
-def _coerce_lit(v, zone):
-    """Make a filter literal comparable with a parsed zone value; None =
-    incomparable → keep the block."""
-    try:
-        if isinstance(zone, int) and not isinstance(v, bool):
-            return int(v)
-        if isinstance(zone, float):
-            return float(v)
-        if isinstance(zone, str):
-            return v if isinstance(v, str) else None
-        if isinstance(zone, bytes):
-            return v if isinstance(v, (bytes, bytearray)) else None
-        import datetime as _dt
-
-        if isinstance(zone, _dt.datetime):
-            if isinstance(v, _dt.datetime):
-                if (v.tzinfo is None) != (zone.tzinfo is None):
-                    v = v.replace(tzinfo=zone.tzinfo)
-                return v
-            return None
-    except (ValueError, TypeError):
-        return None
-    return None
-
-
-def _surviving_blocks(thin: pa.Table, preds: list):
-    """Block ids that may satisfy every predicate, from the thin manifest
-    columns (block_id, column, arrow_type, zmin, zmax, bloom) — the
-    task-side analog of prune_blocks / prune_blocks_eq / prune_blocks_in.
-    Returns None when nothing prunes (keep all)."""
-    from pyrle_spark.plans.encode_job import _bloom_positions, _bloom_value_bytes
-
-    cols = {n: thin.column(n).to_pylist() for n in
-            ("block_id", "column", "arrow_type", "zmin", "zmax", "bloom")}
-    survivors = None
-    for colname, lo, hi, values in preds:
-        keep = set()
-        seen = False
-        for i, c in enumerate(cols["column"]):
-            if c != colname:
-                continue
-            seen = True
-            bid = cols["block_id"][i]
-            at = cols["arrow_type"][i]
-            zmin = _zone_value(cols["zmin"][i], at)
-            zmax = _zone_value(cols["zmax"][i], at)
-            ok = True
-            if lo is not None and zmax is not None:
-                clo = _coerce_lit(lo, zmax)
-                if clo is not None and zmax < clo:
-                    ok = False
-            if ok and hi is not None and zmin is not None:
-                chi = _coerce_lit(hi, zmin)
-                if chi is not None and zmin > chi:
-                    ok = False
-            # equality / IN additionally probe the bloom digest
-            probe_vals = values if values is not None else (
-                [lo] if ok and lo is not None and lo == hi else None
-            )
-            if ok and probe_vals is not None and cols["bloom"][i] is not None:
-                bits = bytes.fromhex(cols["bloom"][i])
-                any_hit = False
-                for v in probe_vals:
-                    data = _bloom_value_bytes(v)
-                    if data is None:  # unprobeable value type: keep
-                        any_hit = True
-                        break
-                    if all(
-                        bits[p // 8] & (1 << (p % 8))
-                        for p in set(_bloom_positions(data))
-                    ):
-                        any_hit = True
-                        break
-                ok = any_hit
-            if ok:
-                keep.add(bid)
-        if not seen:
-            continue  # no manifest rows for this column here: can't prune
-        survivors = keep if survivors is None else (survivors & keep)
-    return survivors
-
-
-_THIN_COLS = ["block_id", "column", "arrow_type", "n_rows", "zmin", "zmax", "bloom"]
-
-
 class PyrleReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
-        from pyrle_spark.plans.encode_job import _delete_positions
+        from pyspark.sql.pandas.types import to_arrow_type
+
         from pyrle_spark.sources.icetable import IceTable
 
         self.path = _norm_path(options.get("path")) or _path_from_schema(
@@ -328,53 +226,22 @@ class PyrleReader(DataSourceReader):
         aliases = props.get("column_aliases", {})
         self.cols = [f.name for f in schema.fields if f.name != "_order"]
         self.phys_of = {c: aliases.get(c, c) for c in self.cols}
-        self.types = {
-            c: f.dataType for f in schema.fields if f.name != "_order"
-            for c in [f.name]
+        # decoded blocks are cast to the declared schema's arrow types
+        self.targets = {
+            f.name: to_arrow_type(f.dataType, timestamp_utc=True)
+            for f in schema.fields
+            if f.name != "_order"
         }
-        meta = table._read_meta()
-        snap_id = self.snapshot_id or meta["current_snapshot_id"]
-        self.files = (
-            [f["path"] for f in table._manifest(snap_id)["files"]]
-            if snap_id
-            else []
+        self.apply_deletes = (
+            str(options.get("apply_deletes", "true")).lower() != "false"
         )
-        # delete-application strategy (same threshold switch as
-        # decode_table): small sets materialize once on the driver and
-        # ship to every task as one array; past _DELETE_DRIVER_MAX the
-        # driver ships only the vector FILE LIST and each task reads the
-        # rows overlapping its own block span (vectors are
-        # range-partitioned + sorted, so parquet row-group stats prune
-        # the read) — a mass takedown cannot OOM the driver through the
-        # DSv2 reader either.
-        self.delete_files: list = []
-        self.deleted = np.empty(0, dtype=np.int64)
-        if str(options.get("apply_deletes", "true")).lower() != "false":
-            import pyarrow.parquet as pq
-
-            from pyrle_spark.plans.encode_job import (
-                _DELETE_DRIVER_MAX,
-                _visible_delete_files,
-            )
-
-            del_files = _visible_delete_files(self.path, self.snapshot_id)
-            if del_files:
-                n_del = sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in del_files
-                )
-                if n_del <= _DELETE_DRIVER_MAX:
-                    self.deleted = np.asarray(
-                        _delete_positions(self.path, self.snapshot_id),
-                        dtype=np.int64,
-                    )
-                else:
-                    self.delete_files = del_files
         self.preds: list = []
 
     def pushFilters(self, filters):
-        """Record range/equality/IN filters for task-side block pruning;
-        EVERY filter is handed back to Spark for re-evaluation, so the
-        scan output is exact even if a zone or digest is missing."""
+        """Record range/equality/IN filters for block pruning in the read
+        planner and a conservative row filter in the tasks; EVERY filter
+        is handed back to Spark for re-evaluation, so the scan output is
+        exact even if a zone or digest is missing."""
         self.preds = _norm_filters(
             [
                 f
@@ -388,205 +255,37 @@ class PyrleReader(DataSourceReader):
                 and f.attribute[0] in self.cols
             ]
         )
-        # map logical filter names to the physical manifest names
-        self.preds = [
-            (self.phys_of.get(c, c), lo, hi, vs) for c, lo, hi, vs in self.preds
-        ]
         return filters
 
     def partitions(self):
-        """One task per data file; files whose block-id spans overlap
-        (resume/widen re-encodes) fuse into one task so superseded
-        partial blocks dedup locally.  O(#files) footer reads."""
-        import pyarrow.parquet as pq
+        """The read planner's block list (pruned, resume-deduplicated,
+        fully deleted blocks dropped), sliced into input partitions."""
+        from pyrle_spark.plans.read_plan import plan_read
 
-        if not self.files:
-            return [_FileGroup(paths=[])]
-        spans = []
-        for p in self.files:
-            md = pq.ParquetFile(p).metadata
-            if md.num_rows == 0:
-                continue  # empty task file (vacuum fodder): nothing to read
-            try:
-                ci = md.schema.names.index("block_id")
-            except ValueError:
-                raise ValueError(f"{p} is not an encoded-blocks file") from None
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    mn, mx = None, None
-                    break
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            if mn is None:
-                mn, mx = -(2**62), 2**62  # statless file: fuse with all
-            spans.append((mn, mx, p))
-        if not spans:
-            return [_FileGroup(paths=[])]
-        spans.sort()
-        groups: list = []
-        cur_paths, cur_hi = [spans[0][2]], spans[0][1]
-        for mn, mx, p in spans[1:]:
-            if mn <= cur_hi:  # overlap: same dedup domain
-                cur_paths.append(p)
-                cur_hi = max(cur_hi, mx)
-            else:
-                groups.append(_FileGroup(paths=cur_paths))
-                cur_paths, cur_hi = [p], mx
-        groups.append(_FileGroup(paths=cur_paths))
-        return groups
-
-    def read(self, partition: _FileGroup):
-        yield from _decode_group(
-            partition.paths,
-            self.phys_of,
-            self.types,
-            self.block_rows,
-            self.deleted,
-            self.preds,
-            delete_files=self.delete_files,
-        )
-
-
-def _decode_group(
-    paths: list,
-    phys_of: dict,
-    spark_types: dict,
-    block_rows: int,
-    deleted: np.ndarray,
-    preds: list,
-    delete_files: list | None = None,
-):
-    """Task-side decode of one file group: thin-column pass for block
-    pruning + resume dedup, then a buffers pass over surviving blocks
-    only, decoded and cast to the declared Spark schema's arrow types.
-    Shared by the batch and streaming readers.
-
-    ``delete_files`` (mass-delete path): instead of a driver-shipped
-    position array, the task reads the delete-vector rows overlapping
-    ITS OWN block span from the listed files — position-filtered
-    parquet reads that row-group stats prune, so per-task memory is
-    O(deletes in span), never O(all deletes)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from pyrle_spark.codecs import Encoded, decode_array
-
-    if not paths:
-        return
-    phys_cols = sorted(set(phys_of.values()))
-    rename = {p: c for c, p in phys_of.items()}
-    # pass 1: thin manifest columns → block pruning + dedup winners
-    thin = pa.concat_tables(
-        pq.read_table(
-            p,
-            columns=_THIN_COLS,
-            filters=[("column", "in", phys_cols)],
-        )
-        for p in paths
-    )
-    survivors = _surviving_blocks(thin, preds) if preds else None
-    # dedup (resume semantics): per (block_id, column) the max-n_rows
-    # row wins; ties broken by scan order for determinism
-    win: dict = {}
-    bids = thin.column("block_id").to_pylist()
-    cnames = thin.column("column").to_pylist()
-    nrs = thin.column("n_rows").to_pylist()
-    for i in range(thin.num_rows):
-        if survivors is not None and bids[i] not in survivors:
-            continue
-        k = (bids[i], cnames[i])
-        if k not in win or nrs[i] > win[k][0]:
-            win[k] = (nrs[i], i)
-    want_bids = sorted({b for b, _ in win})
-    if not want_bids:
-        return
-    if delete_files:
-        # mass-delete path: fetch only the positions landing inside this
-        # group's block span (row-group stats prune the filtered reads)
-        lo = want_bids[0] * block_rows
-        hi = (want_bids[-1] + 1) * block_rows - 1
-        parts = [
-            pq.read_table(
-                f,
-                columns=["_order"],
-                filters=[("_order", ">=", lo), ("_order", "<=", hi)],
-            )["_order"].to_numpy(zero_copy_only=False)
-            for f in delete_files
-        ]
-        parts = [p for p in parts if len(p)]
-        deleted = (
-            np.unique(np.concatenate(parts))
-            if parts
-            else np.empty(0, dtype=np.int64)
-        )
-    # pass 2: full rows (buffers included) of surviving blocks only
-    full = pa.concat_tables(
-        pq.read_table(
-            p,
-            columns=["block_id", "column", "codec", "arrow_type",
-                     "n_rows", "meta", "buffers"],
-            filters=[
-                ("column", "in", phys_cols),
-                ("block_id", "in", want_bids),
-            ],
-        )
-        for p in paths
-    )
-    # align pass-2 row indexing with pass-1 winners by re-keying
-    rows_by_key: dict = {}
-    fb = full.column("block_id").to_pylist()
-    fc = full.column("column").to_pylist()
-    fn = full.column("n_rows").to_pylist()
-    for i in range(full.num_rows):
-        k = (fb[i], fc[i])
-        if k in win and fn[i] == win[k][0] and k not in rows_by_key:
-            rows_by_key[k] = i
-    tgt_type = {
-        c: to_arrow_type(t, timestamp_utc=True) for c, t in spark_types.items()
-    }
-    codec_a = full.column("codec").to_pylist()
-    at_a = full.column("arrow_type").to_pylist()
-    meta_a = full.column("meta").to_pylist()
-    buf_a = full.column("buffers")
-    for bid in want_bids:
-        arrays = {}
-        n = None
-        for pc_ in phys_cols:
-            i = rows_by_key.get((bid, pc_))
-            if i is None:
-                raise ValueError(
-                    f"block {bid} lacks column {pc_!r} in "
-                    f"{paths} (corrupt or mid-widen table)"
-                )
-            enc = Encoded(
-                codec=codec_a[i],
-                arrow_type=at_a[i],
-                n_rows=fn[i],
-                meta=json.loads(meta_a[i]),
-                buffers=dict(buf_a[i].as_py()),
+        return _slices(
+            plan_read(
+                self.path,
+                columns=self.cols,
+                predicates=self.preds,
+                snapshot_id=self.snapshot_id,
+                apply_deletes=self.apply_deletes,
             )
-            arr = decode_array(enc)
-            logical = rename.get(pc_, pc_)
-            want = tgt_type[logical]
-            if arr.type != want:
-                arr = arr.cast(want, safe=False)
-            arrays[logical] = arr
-            n = len(arr)
-        order = np.arange(n, dtype=np.int64) + bid * block_rows
-        if len(deleted):
-            mask = ~np.isin(order, deleted)
-            if not mask.all():
-                pmask = pa.array(mask)
-                arrays = {c: a.filter(pmask) for c, a in arrays.items()}
-                order = order[mask]
-                if len(order) == 0:
-                    continue
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(order)] + [arrays[c] for c in sorted(arrays)],
-            names=["_order"] + sorted(arrays),
         )
+
+    def read(self, partition: _PlanSlice):
+        from pyrle_spark.plans.read_plan import (
+            decode_blocks,
+            make_preds,
+            task_blocks,
+        )
+
+        fn = decode_blocks(
+            self.block_rows,
+            self.targets,
+            self.phys_of,
+            make_preds(self.preds, self.phys_of),
+        )
+        yield from fn(task_blocks(partition.payload, self.block_rows))
 
 
 # --------------------------------------------------------------- writer
@@ -838,7 +537,7 @@ class PyrleStreamReader(DataSourceStreamReader):
     chain from the current head): each micro-batch delivers the decoded
     rows of the data files ADDED by the snapshots in ``(start, end]`` —
     the same manifest diff as :func:`scan_incremental`, planned by the
-    driver from O(metadata) and decoded one task per file group.
+    driver from O(metadata) and decoded by the shared block reader.
 
     Semantics match ``streaming/decode_stream.py``'s documented contract:
     at-least-once per block (a resume/widen/compaction re-adds files and
@@ -850,6 +549,8 @@ class PyrleStreamReader(DataSourceStreamReader):
     begins at the current head instead of the table's beginning."""
 
     def __init__(self, options: dict, schema: StructType):
+        from pyspark.sql.pandas.types import to_arrow_type
+
         from pyrle_spark.sources.icetable import IceTable
 
         self.path = _norm_path(options.get("path")) or _path_from_schema(
@@ -863,8 +564,10 @@ class PyrleStreamReader(DataSourceStreamReader):
         aliases = props.get("column_aliases", {})
         self.cols = [f.name for f in schema.fields if f.name != "_order"]
         self.phys_of = {c: aliases.get(c, c) for c in self.cols}
-        self.types = {
-            f.name: f.dataType for f in schema.fields if f.name != "_order"
+        self.targets = {
+            f.name: to_arrow_type(f.dataType, timestamp_utc=True)
+            for f in schema.fields
+            if f.name != "_order"
         }
         self._chain: list = []  # main-lineage snapshot ids, oldest first
         # Spark lowercases data source option keys
@@ -907,6 +610,7 @@ class PyrleStreamReader(DataSourceStreamReader):
         return {"idx": len(self._main_chain())}
 
     def partitions(self, start: dict, end: dict):
+        from pyrle_spark.plans.read_plan import ReadPlan, plan_read
         from pyrle_spark.sources.icetable import IceTable
 
         chain = self._main_chain()
@@ -918,51 +622,19 @@ class PyrleStreamReader(DataSourceStreamReader):
             if n_added:
                 added.extend(f["path"] for f in m["files"][-n_added:])
         if not added:
-            return [_FileGroup(paths=[])]
-        # fuse overlapping block spans (same dedup rationale as batch)
-        import pyarrow.parquet as pq
-
-        spans = []
-        for p in added:
-            md = pq.ParquetFile(p).metadata
-            if md.num_rows == 0:
-                continue  # empty task file: nothing to deliver
-            ci = md.schema.names.index("block_id")
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    mn, mx = -(2**62), 2**62
-                    break
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            if mn is None:
-                mn, mx = -(2**62), 2**62  # statless file: fuse with all
-            spans.append((mn, mx, p))
-        if not spans:
-            return [_FileGroup(paths=[])]
-        spans.sort()
-        groups: list = []
-        cur_paths, cur_hi = [spans[0][2]], spans[0][1]
-        for mn, mx, p in spans[1:]:
-            if mn <= cur_hi:
-                cur_paths.append(p)
-                cur_hi = max(cur_hi, mx)
-            else:
-                groups.append(_FileGroup(paths=cur_paths))
-                cur_paths, cur_hi = [p], mx
-        groups.append(_FileGroup(paths=cur_paths))
-        return groups
-
-    def read(self, partition: _FileGroup):
-        yield from _decode_group(
-            partition.paths,
-            self.phys_of,
-            self.types,
-            self.block_rows,
-            np.empty(0, dtype=np.int64),  # append stream: no delete masking
-            [],
+            return _slices(ReadPlan(self.block_rows, {}, {}))
+        # the added files alone: their blocks, deduplicated among them
+        return _slices(
+            plan_read(
+                self.path, columns=self.cols, paths=added, apply_deletes=False
+            )
         )
+
+    def read(self, partition: _PlanSlice):
+        from pyrle_spark.plans.read_plan import decode_blocks, task_blocks
+
+        fn = decode_blocks(self.block_rows, self.targets, self.phys_of)
+        yield from fn(task_blocks(partition.payload, self.block_rows))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the query checkpoint; the table needs nothing

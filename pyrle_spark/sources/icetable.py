@@ -123,6 +123,18 @@ def _read_delete_index(table_dir: str):
     return idx
 
 
+def _retire_delete_shards(paths: list) -> None:
+    """Leave shards the index no longer names to :meth:`IceTable.vacuum`.
+    A lock-free reader that loaded the old index may still open them, so
+    they are not unlinked here; touching them starts vacuum's
+    ``older_than_s`` margin at the moment they were retired."""
+    for full in paths:
+        try:
+            os.utime(full)
+        except FileNotFoundError:
+            pass
+
+
 def _write_delete_index(table_dir: str, idx: dict) -> None:
     p = _delete_index_path(table_dir)
     tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -143,21 +155,19 @@ def append_delete_entry(table_dir: str, entry: dict) -> None:
 
 
 def rewrite_delete_entries(table_dir: str, entries: list) -> None:
-    """Maintenance full-rewrite (compaction): everything into ONE shard,
-    old shards unlinked after the index swap (the same brief
-    index-to-shard read race snapshot-shard GC accepts).  Caller holds
-    the commit lock."""
+    """Maintenance full-rewrite (compaction): everything into ONE shard.
+    The old shards stay on disk for readers still holding the old index
+    and are reclaimed by vacuum's mtime-gated sweep.  Caller holds the
+    commit lock."""
     old = _read_delete_index(table_dir).get("shards", [])
     idx = {
         "format": 2,
         "shards": [_write_delete_shard(table_dir, entries)] if entries else [],
     }
     _write_delete_index(table_dir, idx)
-    for ref in old:
-        full = os.path.join(table_dir, "deletes", ref)
-        if os.path.exists(full):
-            os.remove(full)
-        _DELETE_SHARD_CACHE.pop(full, None)
+    _retire_delete_shards(
+        [os.path.join(table_dir, "deletes", ref) for ref in old]
+    )
 
 
 def _clear_conditional_markers(table_dir: str, expired_ids: set) -> None:
@@ -202,12 +212,8 @@ def _clear_conditional_markers(table_dir: str, expired_ids: set) -> None:
         else:
             new_refs.append(ref)
     if changed:
-        # index swap FIRST; a crash before the unlinks leaves harmless
-        # unreferenced shards, never an index pointing at missing files
         _write_delete_index(table_dir, {"format": 2, "shards": new_refs})
-        for full in removable:
-            os.remove(full)
-            _DELETE_SHARD_CACHE.pop(full, None)
+        _retire_delete_shards(removable)
 
 
 @contextlib.contextmanager

@@ -35,17 +35,9 @@ log, O(files seen), no driver row state.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from pyrle_spark.plans.encode_job import (
-    ENCODED_SPARK_SCHEMA,
-    _make_decode_fn,
-    _spark_type_of,
-    _widest_type,
-    dedup_blocks,
-    physical_column,
-)
-from pyrle_spark.sources.icetable import IceTable
+from pyrle_spark.plans.encode_job import ENCODED_SPARK_SCHEMA, _decode_plan
+from pyrle_spark.plans.read_plan import plan_read
 
 __all__ = ["decode_stream"]
 
@@ -63,56 +55,24 @@ def decode_stream(
     Returns the StreamingQuery.  ``trigger(availableNow=True)`` drains
     everything currently committed and stops (the batch-ish test mode);
     drop it for a long-running tail."""
-    table = IceTable(table_dir)
-    block_rows = int(table.properties()["block_rows"])
 
     def _batch(batch_df, epoch_id: int):
         if batch_df.isEmpty():
             return
-        # per-batch props: renames/widenings may land mid-stream
-        props = table.properties()
-        cols = sorted(columns or props["columns"])
-        phys_of = {c: physical_column(table, c) for c in cols}
-        rename = {p: c for c, p in phys_of.items() if p != c}
-        touched = batch_df.select("block_id").distinct()
-        # manifest-gated read of the touched blocks' CURRENT rows
-        enc = dedup_blocks(
-            table.read_table(spark)
-            .filter(F.col("column").isin(sorted(phys_of.values())))
-            .join(F.broadcast(touched), "block_id", "left_semi")
+        # manifest-gated read of the touched blocks' CURRENT rows, planned
+        # per batch (renames/widenings may land mid-stream).  Only blocks
+        # complete for every present column decode now; an in-flight
+        # widen's block re-triggers when its files commit.
+        plan = plan_read(
+            table_dir,
+            columns=columns,
+            blocks=batch_df.select("block_id").distinct(),
+            apply_deletes=False,
+            incomplete="skip",
         )
-        type_rows = enc.select("column", "arrow_type").distinct().collect()
-        by_col: dict = {}
-        for r in type_rows:
-            by_col.setdefault(
-                rename.get(r["column"], r["column"]), set()
-            ).add(r["arrow_type"])
-        types = {c: _widest_type(c, ts) for c, ts in by_col.items()}
-        present = [c for c in cols if c in types]
-        if not present:
+        if not plan.phys_of or plan.empty:
             return
-        # only blocks complete for every present column decode now; an
-        # in-flight widen's block re-triggers when its files commit
-        complete = (
-            enc.groupBy("block_id")
-            .agg(F.countDistinct("column").alias("_nc"))
-            .filter(F.col("_nc") == len(present))
-            .select("block_id")
-        )
-        ready = (
-            enc.join(F.broadcast(complete), "block_id", "left_semi")
-            .repartition("block_id")
-            .sortWithinPartitions("block_id", "column")
-        )
-        out_schema = ", ".join(
-            ["_order long"] + [f"{c} {_spark_type_of(types[c])}" for c in present]
-        )
-        process(
-            ready.mapInArrow(
-                _make_decode_fn(block_rows, types, rename), out_schema
-            ),
-            epoch_id,
-        )
+        process(_decode_plan(spark, plan), epoch_id)
 
     stream = (
         spark.readStream.schema(ENCODED_SPARK_SCHEMA)

@@ -18,11 +18,8 @@ from pyrle_spark.plans.encode_job import (
     delete_rows,
     encode_table,
 )
-from pyrle_spark.sources.datasource import (
-    _norm_filters,
-    _surviving_blocks,
-    register,
-)
+from pyrle_spark.plans.read_plan import _surviving_blocks
+from pyrle_spark.sources.datasource import _norm_filters, register
 from pyrle_spark.sources.icetable import IceTable
 from pyrle_spark.sources.webtext import generate_webtext
 
@@ -102,7 +99,7 @@ def test_column_pruning_option(ds_spark, table_dir):
 
 
 def test_pruning_skips_blocks_superset(ds_spark, table_dir):
-    """_surviving_blocks (the task-side pruner) must skip at least one
+    """_surviving_blocks (the read planner's evaluator) must skip at least one
     block for a selective predicate, and never a matching one."""
     import pyarrow.parquet as pq
     from pyspark.sql.datasource import EqualTo

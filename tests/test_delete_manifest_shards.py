@@ -93,10 +93,49 @@ def test_compaction_collapses_shard_chain(spark, small_table):
     assert len(_shard_files(t)) == 8
     info = compact_delete_vectors(spark, t)
     assert info["merged_entries"] == 8
-    # entry merge doubles as manifest compaction: ONE shard remains and
-    # the per-takedown shards are unlinked
-    assert len(_shard_files(t)) == 1
+    # entry merge doubles as manifest compaction: the index names ONE
+    # shard; the per-takedown shards stay for readers holding the old
+    # index until vacuum's mtime-gated sweep reclaims them
+    with open(os.path.join(t, "deletes", "manifest.json")) as f:
+        assert len(json.load(f)["shards"]) == 1
     assert len(read_delete_entries(t)) == 1
+    assert count_rows(spark, t) == before
+    IceTable(t).vacuum(older_than_s=0.0, force=True)
+    assert len(_shard_files(t)) == 1
+    assert count_rows(spark, t) == before
+
+
+def test_compaction_between_index_and_shard_load(
+    spark, small_table, monkeypatch
+):
+    """A lock-free reader loads the delete index, then compaction swaps
+    it before the reader opens the shards the old index names.  The
+    reader must still read the old shards' entries instead of failing
+    with FileNotFoundError."""
+    from pyrle_spark.sources import icetable
+
+    t = small_table
+    for i in range(3):
+        delete_rows(spark, t, [10 * i])
+    before = count_rows(spark, t)
+    _DELETE_SHARD_CACHE.clear()
+    real_load = icetable._load_delete_shard
+    compacted = []
+
+    def load_after_compaction(full):
+        # first shard load of the outer read: the index is already in
+        # hand, so compact now (its own reads go straight through)
+        if not compacted:
+            monkeypatch.setattr(icetable, "_load_delete_shard", real_load)
+            compacted.append(compact_delete_vectors(spark, t))
+            _DELETE_SHARD_CACHE.clear()
+        return real_load(full)
+
+    monkeypatch.setattr(icetable, "_load_delete_shard", load_after_compaction)
+    entries = read_delete_entries(t)
+    assert compacted and compacted[0]["merged_entries"] == 3
+    assert sum(e["n_positions"] for e in entries) == 3
+    monkeypatch.undo()
     assert count_rows(spark, t) == before
 
 

@@ -17,6 +17,7 @@ from pyrle_spark.plans.encode_job import (
     delete_rows,
     encode_table,
 )
+from pyrle_spark.sources.icetable import clone_table
 
 N = 600
 
@@ -117,8 +118,12 @@ def test_single_key_mode(spark, encoded):
     assert got == _expected(pdf, None, 25, single=True)
 
 
-def test_deletes_apply(spark, encoded):
-    t, pdf = encoded
+def test_deletes_apply(spark, encoded, tmp_path):
+    # deletes go to a shallow clone: the module-scoped table stays intact
+    # for every other test, whatever order they run in
+    src, pdf = encoded
+    t = str(tmp_path / "clone")
+    clone_table(src, t)
     doomed = list(range(0, N, 9))
     delete_rows(spark, t, doomed)
     got = _got(
