@@ -58,7 +58,6 @@ import numbers
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -80,6 +79,19 @@ def _keyed_schema(key_cols, blocked: bool = False):
 
 def _empty_rle():
     return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
+
+
+def _rle_batch(group: dict, runs: list, values: list) -> pa.RecordBatch:
+    """One keyed-RLE batch from the group columns (Arrow arrays) and the
+    per-row run/value arrays.  Built with ``from_pydict``: a pandas
+    conversion would store a NaN value as a null list element."""
+    return pa.RecordBatch.from_pydict(
+        {
+            **group,
+            "runs": pa.array(runs, pa.list_(pa.int64())),
+            "values": pa.array(values, pa.list_(pa.float64())),
+        }
+    )
 
 
 def _split_blocks(runs, values, block_positions: int):
@@ -360,20 +372,18 @@ class RleFrame:
         def split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 pdf = batch.to_pandas()
-                rows = []
-                for row in pdf.itertuples(index=False):
-                    rd = row._asdict()
-                    for bid, runs, values in _split_blocks(
-                        rd["runs"], rd["values"], block_positions
-                    ):
-                        rows.append(
-                            tuple(rd[c] for c in key_cols) + (bid, runs, values)
-                        )
-                if rows:
-                    out = pd.DataFrame(
-                        rows, columns=[*key_cols, "block_id", "runs", "values"]
-                    )
-                    yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+                src, bids, runs_out, vals_out = [], [], [], []
+                for i, (r, v) in enumerate(zip(pdf["runs"], pdf["values"])):
+                    for bid, runs, values in _split_blocks(r, v, block_positions):
+                        src.append(i)
+                        bids.append(bid)
+                        runs_out.append(runs)
+                        vals_out.append(values)
+                if src:
+                    rows = pa.array(src, pa.int64())
+                    group = {c: batch.column(c).take(rows) for c in key_cols}
+                    group["block_id"] = pa.array(bids, pa.int64())
+                    yield _rle_batch(group, runs_out, vals_out)
 
         df = self.df.mapInArrow(split, _keyed_schema(key_cols, blocked=True))
         return RleFrame(df, key_cols, block_positions=block_positions)
@@ -530,11 +540,8 @@ class RleFrame:
                         runs, values = k.binary_op(op, *args)
                     out_runs.append(runs)
                     out_vals.append(values)
-                data = {c: pdf[c] for c in group_cols}
-                data["runs"] = out_runs
-                data["values"] = out_vals
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(data), preserve_index=False
+                yield _rle_batch(
+                    {c: batch.column(c) for c in group_cols}, out_runs, out_vals
                 )
 
         out = joined.mapInArrow(merge, _keyed_schema(key_cols, blocked))
@@ -605,11 +612,8 @@ class RleFrame:
                         runs, values = k.defragment(runs, values)
                     runs_out.append(runs)
                     vals_out.append(np.asarray(values, dtype=np.float64))
-                data = {c: pdf[c] for c in group_cols}
-                data["runs"] = runs_out
-                data["values"] = vals_out
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(data), preserve_index=False
+                yield _rle_batch(
+                    {c: batch.column(c) for c in group_cols}, runs_out, vals_out
                 )
 
         return RleFrame(
@@ -686,11 +690,8 @@ class RleFrame:
                     )
                     runs_out.append(np.asarray(runs, dtype=np.int64))
                     vals_out.append(np.asarray(values, dtype=np.float64))
-                data = {c: pdf[c] for c in group_cols}
-                data["runs"] = runs_out
-                data["values"] = vals_out
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(data), preserve_index=False
+                yield _rle_batch(
+                    {c: batch.column(c) for c in group_cols}, runs_out, vals_out
                 )
 
         return RleFrame(
@@ -755,23 +756,26 @@ class RleFrame:
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
+                if not batch.num_rows:
+                    continue
                 pdf = batch.to_pandas()
-                frames = []
-                for row in pdf.itertuples(index=False):
-                    rd = row._asdict()
-                    vals = k.getlocs(
-                        np.asarray(rd["runs"], dtype=np.int64),
-                        np.asarray(rd["values"], dtype=np.float64),
-                        locs_arr,
+                vals = [
+                    np.asarray(
+                        k.getlocs(
+                            np.asarray(r, dtype=np.int64),
+                            np.asarray(v, dtype=np.float64),
+                            locs_arr,
+                        ),
+                        dtype=np.float64,
                     )
-                    f = pd.DataFrame({"loc": locs_arr, "value": vals})
-                    for c in key_cols:
-                        f[c] = rd[c]
-                    frames.append(f[[*key_cols, "loc", "value"]])
-                if frames:
-                    yield pa.RecordBatch.from_pandas(
-                        pd.concat(frames, ignore_index=True), preserve_index=False
-                    )
+                    for r, v in zip(pdf["runs"], pdf["values"])
+                ]
+                rows = pa.array(np.repeat(np.arange(len(vals)), len(locs_arr)))
+                out = {c: batch.column(c).take(rows) for c in key_cols}
+                out["loc"] = np.tile(locs_arr, len(vals))
+                # from_pydict, not from_pandas: a NaN value must stay NaN
+                out["value"] = np.concatenate(vals)
+                yield pa.RecordBatch.from_pydict(out)
 
         keys_schema = ", ".join(f"{c} string" for c in key_cols)
         return self.df.mapInArrow(run, f"{keys_schema}, loc long, value double")

@@ -20,9 +20,10 @@ Design (scale-first, see SURVEY.md §3.1/§4.2):
 - Output is an Iceberg-style table (sources/icetable.py) of encoded
   rows; every snapshot carries per-partition **lineage** rows (blocks,
   rows, bytes in/out, codecs, MB/s, checksums) in its manifest.
-- **Resume**: a rerun anti-joins the input against the committed block
-  ids of the current snapshot and encodes only the remainder — driver
-  state stays O(1); the committed-set lives in the table, not in memory.
+- **Resume**: a rerun reads the complete block ids of the current
+  snapshot from its data files' thin columns in the driver (no Spark
+  job), anti-joins the input against them and encodes only the
+  remainder.
 - Decode reverses the pass (same streaming mapInArrow, one row group per
   block) and is verified against stored crc32 checksums per
   (block, column) — no join against the source needed at scale.
@@ -54,11 +55,14 @@ from pyrle_spark.plans.read_plan import (
     THIN_COLS,
     _read_thin,
     _surviving_blocks,
+    _winners,
+    contiguous_slices,
     decode_blocks,
     explain,
     norm_predicates,
     plan_read,
     read_blocks,
+    run_tasks,
 )
 from pyrle_spark.sources.icetable import IceTable
 
@@ -523,15 +527,14 @@ def _prior_props_guarded(table: IceTable, cols: list) -> tuple:
     return (prior_cols, prior_dropped, prior_aliases, prior_src_schema, carry)
 
 
-def _prior_state(
-    spark: SparkSession, table: IceTable, cols: list, config: EncodeConfig
-):
+def _prior_state(table: IceTable, cols: list, config: EncodeConfig):
     """Resume/widen state of an existing encoded table: returns
     ``(prior, committed, resumed_blocks)`` where ``prior`` is the
     (columns, dropped, aliases, source_schema) tuple carried into the new
-    snapshot's properties and ``committed`` is a DataFrame of block_ids
-    that are COMPLETE for every requested column (``None`` for a fresh
-    table).
+    snapshot's properties and ``committed`` is the set of block ids that
+    are COMPLETE for every requested column (``None`` for a fresh
+    table).  Planned in the driver from the current snapshot's thin
+    columns (the read planner's resume-dedup winners); no Spark job.
 
     Only COMPLETE blocks are resumable: a partial trailing block from an
     earlier pass (input grew, or kill mid-range) must be re-encoded; the
@@ -544,17 +547,17 @@ def _prior_state(
     if not table.exists():
         return (set(), set(), {}, {}, {}), None, 0
     prior = _prior_props_guarded(table, cols)
-    committed = (
-        table.read_table(spark)
-        .filter(F.col("n_rows") == config.block_rows)
-        .filter(F.col("column").isin(cols))
-        .groupBy("block_id")
-        .agg(F.countDistinct("column").alias("_nc"))
-        .filter(F.col("_nc") == len(cols))
-        .select("block_id")
+    snap = table.current_snapshot_id()
+    thin = _read_thin(
+        [f["path"] for f in table._manifest(snap)["files"]] if snap else []
     )
-    resumed_blocks = committed.count()
-    return (prior, committed, resumed_blocks)
+    want = set(cols)
+    complete: dict = {}
+    for (bid, c), i in _winners(thin).items():
+        if c in want and thin["n_rows"][i] == config.block_rows:
+            complete[bid] = complete.get(bid, 0) + 1
+    committed = {b for b, n in complete.items() if n == len(want)}
+    return (prior, committed, len(committed))
 
 
 def _encode_pass_inner(
@@ -577,14 +580,13 @@ def _encode_pass_inner(
             & (F.col("_block_id") < block_range[1])
         )
     table = IceTable(out_dir)
-    prior, committed, resumed_blocks = _prior_state(spark, table, cols, config)
+    prior, committed, resumed_blocks = _prior_state(table, cols, config)
     prior_cols, prior_dropped, prior_aliases, prior_src_schema, prior_carry = prior
-    if committed is not None:
-        base = base.join(
-            committed,
-            base["_block_id"] == committed["block_id"],
-            "left_anti",
+    if committed:
+        done = spark.createDataFrame(
+            [(b,) for b in sorted(committed)], "block_id long"
         )
+        base = base.join(done, base["_block_id"] == done["block_id"], "left_anti")
     work = base
     skip_sort = config.block_aligned and config.input_presorted
     if not config.block_aligned:
@@ -797,11 +799,11 @@ def _finish_snapshot(
 # socket → Python.  Measured on webtext that transfer, not the codecs, is
 # the encode bottleneck (BENCH/BASELINE.md: a no-op scan+transfer pass
 # costs the same as the full encode).  encode_parquet_dir removes it: the
-# JVM plans — file manifest, a footer-stats pass, the resume anti-join,
-# the snapshot commit — while the Arrow workers stream
+# driver plans — file footers, the resume set, the task payloads, the
+# snapshot commit — while the Arrow workers stream
 # parquet → codecs → parquet directly, exactly a DataSourceV2 columnar
-# reader/writer pair.  At 10^12 docs this is also the only shape that
-# works: the driver and JVM touch O(#files) metadata, never data.
+# reader/writer pair.  The driver touches O(#files) footers and the
+# manifest's thin columns, never data.
 
 _FOOTER_SCHEMA = "path string, min_order long, max_order long, n_rows long"
 _STAT_SPARK_SCHEMA = (
@@ -855,22 +857,27 @@ _DRIVER_FOOTER_MAX_FILES = 512
 
 
 def _make_footer_fn(order_col: str):
-    """Distributed per-file footer-stats pass (see _file_footer_stats)."""
+    """Distributed per-file footer-stats pass (see _file_footer_stats)
+    over one task payload: a JSON list of paths."""
 
-    def footer_stream(batches):
-        for b in batches:
-            out = {"path": [], "min_order": [], "max_order": [], "n_rows": []}
-            for p in b.column("path").to_pylist():
-                st = _file_footer_stats(p, order_col)
-                if st is None:
-                    continue
-                out["path"].append(p)
-                out["min_order"].append(st[0])
-                out["max_order"].append(st[1])
-                out["n_rows"].append(st[2])
-            yield pa.RecordBatch.from_pydict(out)
+    def footer_task(payload: str):
+        out = {"path": [], "min_order": [], "max_order": [], "n_rows": []}
+        for p in json.loads(payload):
+            st = _file_footer_stats(p, order_col)
+            if st is None:
+                continue
+            out["path"].append(p)
+            out["min_order"].append(st[0])
+            out["max_order"].append(st[1])
+            out["n_rows"].append(st[2])
+        yield pa.RecordBatch.from_pydict(
+            out, schema=pa.schema([
+                ("path", pa.string()), ("min_order", pa.int64()),
+                ("max_order", pa.int64()), ("n_rows", pa.int64()),
+            ])
+        )
 
-    return footer_stream
+    return footer_task
 
 
 def _jvm_equivalent_type(t: pa.DataType) -> pa.DataType:
@@ -893,56 +900,54 @@ def _jvm_equivalent_type(t: pa.DataType) -> pa.DataType:
 def _make_file_encode_fn(
     columns: list, order_col: str, block_rows: int, zstd_threshold: float
 ):
-    """Encode kernel over (path, blocks) rows: each task opens its parquet
-    files with pyarrow (column-pruned), derives ``_block_id`` from the
-    order column, masks to the wanted (uncommitted) blocks, and feeds the
-    stream into the shared :func:`_make_encode_fn` kernel — which also
-    verifies strictly increasing order per block, so an unsorted or
-    misdeclared file fails loudly."""
+    """Encode kernel over ``(path, wanted blocks)`` work rows (``None``
+    wants every block of the file): the task opens its parquet files with
+    pyarrow (column-pruned), derives ``_block_id`` from the order column,
+    masks to the wanted (uncommitted) blocks, and feeds the stream into
+    the shared :func:`_make_encode_fn` kernel — which also verifies
+    strictly increasing order per block, so an unsorted or misdeclared
+    file fails loudly."""
     inner = _make_encode_fn(list(columns), zstd_threshold, verify_order=True)
 
-    def block_batches(batches):
+    def block_batches(work):
         import pyarrow.parquet as pq
 
-        for b in batches:
-            paths = b.column("path").to_pylist()
-            wants = b.column("blocks").to_pylist()
-            for p, want in zip(paths, wants):
-                want_arr = (
-                    np.asarray(sorted(want), dtype=np.int64)
-                    if want is not None
-                    else None
-                )
-                pf = pq.ParquetFile(p)
-                for rb in pf.iter_batches(columns=[order_col] + list(columns)):
-                    if rb.num_rows == 0:
+        for p, want in work:
+            want_arr = (
+                np.asarray(sorted(want), dtype=np.int64)
+                if want is not None
+                else None
+            )
+            pf = pq.ParquetFile(p)
+            for rb in pf.iter_batches(columns=[order_col] + list(columns)):
+                if rb.num_rows == 0:
+                    continue
+                onp = rb.column(order_col).to_numpy(
+                    zero_copy_only=False
+                ).astype(np.int64, copy=False)
+                bids = onp // block_rows
+                if want_arr is not None:
+                    mask = np.isin(bids, want_arr)
+                    if not mask.any():
                         continue
-                    onp = rb.column(order_col).to_numpy(
-                        zero_copy_only=False
-                    ).astype(np.int64, copy=False)
-                    bids = onp // block_rows
-                    if want_arr is not None:
-                        mask = np.isin(bids, want_arr)
-                        if not mask.any():
-                            continue
-                        if not mask.all():
-                            rb = rb.filter(pa.array(mask))
-                            onp = onp[mask]
-                            bids = bids[mask]
-                    data = []
-                    for c in columns:
-                        a = rb.column(c)
-                        tgt = _jvm_equivalent_type(a.type)
-                        if tgt != a.type:
-                            a = a.cast(tgt, safe=False)
-                        data.append(a)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(bids), pa.array(onp)] + data,
-                        names=["_block_id", "_order"] + list(columns),
-                    )
+                    if not mask.all():
+                        rb = rb.filter(pa.array(mask))
+                        onp = onp[mask]
+                        bids = bids[mask]
+                data = []
+                for c in columns:
+                    a = rb.column(c)
+                    tgt = _jvm_equivalent_type(a.type)
+                    if tgt != a.type:
+                        a = a.cast(tgt, safe=False)
+                    data.append(a)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(bids), pa.array(onp)] + data,
+                    names=["_block_id", "_order"] + list(columns),
+                )
 
-    def file_stream(batches):
-        yield from inner(block_batches(batches))
+    def file_stream(work):
+        yield from inner(block_batches(work))
 
     return file_stream
 
@@ -954,7 +959,8 @@ def _make_direct_write_fn(
     zstd_threshold: float,
     data_dir: str,
 ):
-    """File-direct encode + direct parquet write: each task writes ONE
+    """File-direct encode + direct parquet write over one task's work
+    rows (see :func:`_make_file_encode_fn`): the task writes ONE
     uniquely named data file itself (pyarrow writer, one row group per
     block — multi-MB pre-compressed buffers want small groups) and yields
     only per-block lineage stats.  Kill-atomic: the file is written under
@@ -963,7 +969,7 @@ def _make_direct_write_fn(
     and the manifest links exactly what successful attempts reported."""
     encode = _make_file_encode_fn(columns, order_col, block_rows, zstd_threshold)
 
-    def stream(batches):
+    def stream(work):
         import os
         import uuid as _uuid
 
@@ -975,7 +981,7 @@ def _make_direct_write_fn(
         final = tmp = None
         kept = []
         try:
-            for enc_rb in encode(batches):
+            for enc_rb in encode(work):
                 if writer is None:
                     os.makedirs(data_dir, exist_ok=True)
                     final = os.path.join(
@@ -1021,12 +1027,35 @@ def _parquet_source_schema(path: str, cols: list) -> dict:
     }
 
 
+def _stat_cells(stats: pa.Table, block_rows: int) -> list:
+    """Roll per-(block, column) stat rows (``_STAT_COLS``) into one
+    lineage cell per (part_id, column, codec), the input of
+    :func:`_finish_snapshot`; sums follow SQL (all-null ``n_runs`` sums
+    to None)."""
+    import pyarrow.compute as pc
+
+    partial = pc.cast(pc.not_equal(stats["n_rows"], block_rows), pa.int64())
+    g = (
+        stats.append_column("partial_blocks", partial)
+        .group_by(["part_id", "column", "codec"], use_threads=False)
+        .aggregate([
+            ("block_id", "count"), ("n_rows", "sum"), ("bytes_in", "sum"),
+            ("bytes_out", "sum"), ("encode_ns", "sum"), ("n_runs", "sum"),
+            ("partial_blocks", "sum"),
+        ])
+    )
+    names = {"block_id_count": "blocks", "n_rows_sum": "rows",
+             "n_runs_sum": "runs_emitted"}
+    return g.rename_columns(
+        [names.get(c, c.removesuffix("_sum")) for c in g.column_names]
+    ).to_pylist()
+
+
 def encode_parquet_dir(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
     config: EncodeConfig,
-    direct_write: bool = True,
     files: list | None = None,
 ) -> dict:
     """Encode a block-aligned parquet directory without the raw bytes ever
@@ -1034,23 +1063,31 @@ def encode_parquet_dir(
 
     Requirements (each verified, violations fail loudly):
     - every file starts on a ``block_rows`` boundary of ``order_col``
-      (footer-stats check) and no block spans two files (distinct-path
-      check over the exploded block spans);
+      (footer-stats check) and no block spans two files (a sorted sweep
+      over the files' block spans);
     - rows within a file are sorted by ``order_col`` (the shared encode
       kernel verifies strict monotonicity per block).
     Arbitrary layouts should use :func:`encode_table` (JVM scan +
     shuffle-to-blocks), which handles any input.
 
-    Resume is exact and file-granular → block-granular: committed blocks
-    are anti-joined out of the exploded (path, block_id) spans, fully
-    committed files are never opened, and a partially committed file is
-    re-read with the committed blocks masked out in the kernel.
+    Resume is exact and file-granular → block-granular: the driver reads
+    the complete block ids from the current snapshot's thin columns,
+    fully committed files are never opened, and a partially committed
+    file is re-read with the committed blocks masked out in the kernel.
 
-    ``direct_write=True`` additionally writes the encoded parquet from
-    the workers themselves (Iceberg's commit protocol: uniquely named
-    task files + one metadata commit of the reported list) — the encoded
-    bytes skip the Python→JVM hop too, and lineage comes back as the
-    job's only output (O(blocks × columns) stat rows, no data re-read).
+    Task layout: the driver sorts the work rows ``(path, wanted blocks)``
+    by block span and cuts them into ``min(#files, defaultParallelism)``
+    contiguous payloads whose file counts differ by at most one, so each
+    task encodes one contiguous block range.  One Spark job runs them
+    all (:func:`~pyrle_spark.plans.read_plan.run_tasks`, no shuffle).
+    The split is fixed before the job starts: there is no dynamic
+    rebalancing, so files of very different sizes make uneven tasks.
+
+    Each task writes its own kill-atomic data file (Iceberg's commit
+    protocol: uniquely named task files + one metadata commit of the
+    reported list), so the encoded bytes never cross into the JVM either;
+    the job's only output is the per-(block, column) stat rows, which the
+    driver rolls up into the lineage cells.
 
     Output is bit-identical to ``encode_table(..., block_aligned=True,
     input_presorted=True)`` on the same input (pinned by tests): blocks
@@ -1074,15 +1111,15 @@ def encode_parquet_dir(
     if not files:
         raise ValueError(f"no parquet files under {src_dir}")
     table = IceTable(out_dir)
-    prior, committed, resumed_blocks = _prior_state(spark, table, cols, config)
+    prior, committed, resumed_blocks = _prior_state(table, cols, config)
     br = int(config.block_rows)
     par = spark.sparkContext.defaultParallelism
-    # ---- planning: ONE footer pass (driver-side below the threshold,
+    # ---- planning: the footers (read in the driver below the threshold,
     # one Spark job above it), then pure-Python validation over the
     # O(#files) span tuples.  Planning latency is the serial fraction of
     # the whole encode — at 4N parallelism every extra Spark action here
-    # costs scaling efficiency directly (Amdahl), so the job count is
-    # kept at: 1 footer pass (large dirs only) + 1 encode.
+    # costs scaling efficiency directly (Amdahl) — so a call launches at
+    # most 2 jobs: the footer pass (large dirs only) and the encode.
     if len(files) <= _DRIVER_FOOTER_MAX_FILES:
         footer_rows = []
         for p in files:
@@ -1090,12 +1127,14 @@ def encode_parquet_dir(
             if st is not None:
                 footer_rows.append((p, st[0], st[1], st[2]))
     else:
-        paths_df = spark.createDataFrame([(p,) for p in files], "path string")
         footer_rows = [
-            (r["path"], r["min_order"], r["max_order"], r["n_rows"])
-            for r in paths_df.repartition(max(1, min(len(files), 2 * par)))
-            .mapInArrow(_make_footer_fn(config.order_col), _FOOTER_SCHEMA)
-            .collect()
+            tuple(r)
+            for r in run_tasks(
+                spark,
+                [json.dumps(part) for part in contiguous_slices(files, par)],
+                _make_footer_fn(config.order_col),
+                _FOOTER_SCHEMA,
+            ).collect()
         ]
     misaligned = [p for p, mn, _, _ in footer_rows if mn % br != 0][:4]
     if misaligned:
@@ -1114,14 +1153,11 @@ def encode_parquet_dir(
                 "use encode_table(block_aligned=False) for this layout"
             )
     if committed is not None:
-        # resume: committed COMPLETE blocks are O(done blocks) driver
-        # rows (the same magnitude as the manifest); fully committed
-        # files are never opened, partially committed ones get a
-        # blocks mask
-        committed_ids = {r["block_id"] for r in committed.collect()}
+        # resume: fully committed files are never opened, partially
+        # committed ones get a blocks mask
         work_rows = []
         for lo, hi, p in spans:
-            want = [b for b in range(lo, hi + 1) if b not in committed_ids]
+            want = [b for b in range(lo, hi + 1) if b not in committed]
             if want:
                 work_rows.append((p, want))
     else:
@@ -1137,54 +1173,28 @@ def encode_parquet_dir(
             "partitions": [],
             "columns": [],
         }
-    work = spark.createDataFrame(
-        work_rows, "path string, blocks array<long>"
-    ).repartition(max(1, min(len(work_rows), 4 * par)))
     src_schema_json = _parquet_source_schema(files[0], cols)
-    if not direct_write:
-        encoded = work.mapInArrow(
-            _make_file_encode_fn(
-                cols, config.order_col, br, config.zstd_threshold
-            ),
-            ENCODED_SPARK_SCHEMA,
-        )
-        return _commit_encoded(
-            spark, table, encoded, config, cols, prior,
-            resumed_blocks, out_dir, src_schema_json,
-        )
     snap_id = table.new_snapshot_id()
-    data_dir = os.path.join(out_dir, "data", snap_id)
+    write = _make_direct_write_fn(
+        cols, config.order_col, br, config.zstd_threshold,
+        os.path.join(out_dir, "data", snap_id),
+    )
     t0 = time.time()
-    stats = work.mapInArrow(
-        _make_direct_write_fn(
-            cols, config.order_col, br, config.zstd_threshold, data_dir
-        ),
+    # ONE job runs the whole encode; its output is the raw stat rows,
+    # O(blocks × columns), rolled up here.  A lost-executor recompute
+    # could re-write a task file — its replacement gets a fresh unique
+    # name, the stale one becomes a vacuum()-able orphan (the same
+    # guarantee Iceberg gives speculative attempts).
+    stats = run_tasks(
+        spark,
+        [json.dumps(part) for part in contiguous_slices(work_rows, par)],
+        lambda payload: write(json.loads(payload)),
         _STAT_SPARK_SCHEMA,
-    )
-    # ONE job runs the whole encode; a task writes exactly one file, so
-    # grouping by (part_id, file) costs nothing and the single collect
-    # yields both the lineage cells and the commit file list.  A
-    # lost-executor recompute could re-write a task file — its
-    # replacement gets a fresh unique name, the stale one becomes a
-    # vacuum()-able orphan (the same guarantee Iceberg gives
-    # speculative attempts).
-    cells = (
-        stats.groupBy("part_id", "column", "codec", "file", "file_bytes")
-        .agg(
-            F.count(F.lit(1)).alias("blocks"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-            F.sum("encode_ns").alias("encode_ns"),
-            F.sum("n_runs").alias("runs_emitted"),
-            F.sum(
-                F.when(F.col("n_rows") != br, 1).otherwise(0)
-            ).alias("partial_blocks"),
-        )
-        .collect()
-    )
+    ).toArrow()
     wall_s = time.time() - t0
-    file_list = sorted({(r["file"], r["file_bytes"]) for r in cells})
+    file_list = sorted(
+        set(zip(stats["file"].to_pylist(), stats["file_bytes"].to_pylist()))
+    )
     snap_id = table.commit_files(
         snap_id,
         [{"path": f, "bytes": b} for f, b in file_list],
@@ -1193,7 +1203,8 @@ def encode_parquet_dir(
         properties=_snapshot_properties(config, cols, prior, src_schema_json),
     )
     return _finish_snapshot(
-        table, out_dir, snap_id, cells, cols, config, resumed_blocks, wall_s
+        table, out_dir, snap_id, _stat_cells(stats, br), cols, config,
+        resumed_blocks, wall_s,
     )
 
 
@@ -1468,16 +1479,19 @@ def compact_delete_vectors(spark: SparkSession, table_dir: str) -> dict:
     Concurrency: the position union (a possibly-long job) runs
     lock-free; the manifest swap re-validates under the commit lock
     that every merged entry is still present (optimistic concurrency —
-    a racing compactor aborts, a racing NEW delete simply stays).
+    a racing compactor aborts, a racing NEW delete simply stays).  The
+    merged vector files stay on storage for reads planned before the
+    swap; vacuum's mtime-gated ``deletes/`` sweep reclaims them.
 
     Returns ``{"merged_entries", "kept_entries", "n_positions",
-    "removed_files"}``."""
+    "retired_files"}``."""
     import os
     import uuid as _uuid
 
     import pyarrow.parquet as pq
 
     from pyrle_spark.sources.icetable import (
+        _retire_delete_files,
         commit_lock,
         read_delete_entries,
         rewrite_delete_entries,
@@ -1487,11 +1501,11 @@ def compact_delete_vectors(spark: SparkSession, table_dir: str) -> dict:
     entries = read_delete_entries(table_dir)
     if not entries:
         return {"merged_entries": 0, "kept_entries": 0, "n_positions": 0,
-                "removed_files": 0}
+                "retired_files": 0}
     snaps = table.snapshots()
     if not snaps:
         return {"merged_entries": 0, "kept_entries": len(entries),
-                "n_positions": 0, "removed_files": 0}
+                "n_positions": 0, "retired_files": 0}
     oldest = snaps[0]["id"]
     visible_at_oldest = set(_visible_delete_files(table_dir, oldest))
 
@@ -1504,7 +1518,7 @@ def compact_delete_vectors(spark: SparkSession, table_dir: str) -> dict:
     ]
     if len(mergeable) < 2:
         return {"merged_entries": 0, "kept_entries": len(entries),
-                "n_positions": 0, "removed_files": 0}
+                "n_positions": 0, "retired_files": 0}
     old_files = [f for e in mergeable for f in _files_of(e)]
     n_est = sum(pq.ParquetFile(f).metadata.num_rows for f in old_files)
     del_dir = os.path.join(table_dir, "deletes")
@@ -1553,7 +1567,7 @@ def compact_delete_vectors(spark: SparkSession, table_dir: str) -> dict:
             for f in new_files:
                 os.remove(f)
             return {"merged_entries": 0, "kept_entries": len(cur),
-                    "n_positions": 0, "removed_files": 0,
+                    "n_positions": 0, "retired_files": 0,
                     "aborted": "concurrent rewrite"}
         kept = [e for e in cur if not set(_files_of(e)) <= merged_file_set]
         new_entry = {
@@ -1565,23 +1579,15 @@ def compact_delete_vectors(spark: SparkSession, table_dir: str) -> dict:
             "compacted_from": len(mergeable),
         }
         # entry-merging doubles as MANIFEST compaction: everything lands
-        # in one fresh shard and the accumulated per-takedown shards of
-        # the merged history are unlinked
+        # in one fresh shard.  The merged vector files are retired, not
+        # unlinked: a read planned before the swap still opens them
         rewrite_delete_entries(table_dir, [new_entry] + kept)
-        removed = 0
-        for f in old_files:
-            if os.path.exists(f):
-                os.remove(f)
-                removed += 1
-            d = os.path.dirname(f)
-            if os.path.basename(d).startswith("del-") and os.path.isdir(d) \
-                    and not os.listdir(d):
-                os.rmdir(d)  # emptied multi-file vector dir
+        _retire_delete_files(old_files)
     return {
         "merged_entries": len(mergeable),
         "kept_entries": len(kept),
         "n_positions": n_pos,
-        "removed_files": removed,
+        "retired_files": len(old_files),
     }
 
 

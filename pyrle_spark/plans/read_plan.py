@@ -14,7 +14,8 @@ Every read of an encoded table goes through the two halves here:
   drops blocks whose every row is deleted.
 - :func:`read_blocks` is one ``mapInArrow`` over the block list the
   planner built, split into ``min(#blocks, defaultParallelism)`` task
-  rows.  Each task row carries its own blocks' winners as
+  rows of contiguous blocks (:func:`run_tasks`, which the file-direct
+  encode also runs on).  Each task row carries its own blocks' winners as
   ``(path, column, n_rows)``; the task reads those rows file-direct and
   hands each block's ``Encoded`` columns and deleted offsets to the
   consumer.
@@ -514,21 +515,27 @@ class ReadPlan:
     def payloads(self, n_slices: int) -> list:
         """The block list as ``min(#blocks, n_slices)`` JSON task rows of
         contiguous blocks (at least one row, possibly empty)."""
-        k = max(1, min(len(self.blocks), n_slices))
-        out = []
-        for idx in np.array_split(np.arange(len(self.blocks)), k):
-            out.append(
-                json.dumps(
-                    {
-                        "blocks": [
-                            [b, w, None if kill is None else kill.tolist()]
-                            for b, w, kill in (self.blocks[i] for i in idx)
-                        ],
-                        "deletes": self.delete_files,
-                    }
-                )
+        return [
+            json.dumps(
+                {
+                    "blocks": [
+                        [b, w, None if kill is None else kill.tolist()]
+                        for b, w, kill in part
+                    ],
+                    "deletes": self.delete_files,
+                }
             )
-        return out
+            for part in contiguous_slices(self.blocks, n_slices)
+        ]
+
+
+def contiguous_slices(items: list, n_slices: int) -> list:
+    """``items`` cut into ``min(#items, n_slices)`` contiguous runs whose
+    lengths differ by at most one (at least one run, possibly empty)."""
+    k = max(1, min(len(items), n_slices))
+    return [
+        [items[i] for i in idx] for idx in np.array_split(np.arange(len(items)), k)
+    ]
 
 
 def _block_id_set(blocks):
@@ -838,27 +845,37 @@ def task_blocks(payload: str, block_rows: int):
         yield Block(bid, cols, crc, kills.get(bid))
 
 
-def read_blocks(spark, plan: ReadPlan, fn, schema: str):
-    """One ``mapInArrow`` over the plan's blocks: ``fn(blocks)`` receives
-    an iterator of :class:`Block` for one task row and yields
-    RecordBatches of ``schema``."""
-    payloads = plan.payloads(spark.sparkContext.defaultParallelism)
-    # an inline VALUES table is a local relation: Spark scans it with one
-    # partition per row and no Python process (a parallelized Python RDD
-    # would add one per task)
+def run_tasks(spark, payloads: list, fn, schema: str):
+    """One ``mapInArrow`` with one task per payload string: ``fn(payload)``
+    yields RecordBatches of ``schema``.  The payloads ride in an inline
+    VALUES table, a local relation: Spark scans it with one partition per
+    row (up to ``defaultParallelism`` rows) and no Python process, where
+    a parallelized Python RDD would add one per task."""
     tasks = spark.sql(
         "SELECT col1 AS task FROM VALUES "
         + ", ".join(f"(:t{i})" for i in range(len(payloads))),
         args={f"t{i}": p for i, p in enumerate(payloads)},
     )
-    block_rows = plan.block_rows
 
     def run(batches):
         for batch in batches:
             for payload in batch.column(0).to_pylist():
-                yield from fn(task_blocks(payload, block_rows))
+                yield from fn(payload)
 
     return tasks.mapInArrow(run, schema)
+
+
+def read_blocks(spark, plan: ReadPlan, fn, schema: str):
+    """One ``mapInArrow`` over the plan's blocks: ``fn(blocks)`` receives
+    an iterator of :class:`Block` for one task row and yields
+    RecordBatches of ``schema``."""
+    block_rows = plan.block_rows
+    return run_tasks(
+        spark,
+        plan.payloads(spark.sparkContext.defaultParallelism),
+        lambda payload: fn(task_blocks(payload, block_rows)),
+        schema,
+    )
 
 
 def decode_blocks(block_rows: int, targets: dict, phys_of: dict, preds=(),

@@ -319,6 +319,7 @@ def _encode_task(
     from pyrle_spark.plans.encode_job import (
         _ENCODED_PA_SCHEMA,
         _make_encode_fn,
+        _stat_cells,
         _STAT_COLS,
     )
 
@@ -376,38 +377,11 @@ def _encode_task(
         return _EncodeCommit(file="", bytes=0, block_ids=[])
     os.replace(tmp, final)
     stats = pa.Table.from_batches(kept)
-    cells: dict = {}
-    sb = stats.column("block_id").to_pylist()
-    sc = stats.column("column").to_pylist()
-    scod = stats.column("codec").to_pylist()
-    snr = stats.column("n_rows").to_pylist()
-    sbi = stats.column("bytes_in").to_pylist()
-    sbo = stats.column("bytes_out").to_pylist()
-    sen = stats.column("encode_ns").to_pylist()
-    sruns = stats.column("n_runs").to_pylist()
-    for i in range(stats.num_rows):
-        k = (pid, sc[i], scod[i])
-        c = cells.setdefault(
-            k,
-            {
-                "part_id": pid, "column": sc[i], "codec": scod[i],
-                "blocks": 0, "rows": 0, "bytes_in": 0, "bytes_out": 0,
-                "encode_ns": 0, "runs_emitted": 0, "partial_blocks": 0,
-            },
-        )
-        c["blocks"] += 1
-        c["rows"] += snr[i]
-        c["bytes_in"] += sbi[i]
-        c["bytes_out"] += sbo[i]
-        c["encode_ns"] += sen[i]
-        c["runs_emitted"] += sruns[i]
-        if snr[i] != block_rows:
-            c["partial_blocks"] += 1
     return _EncodeCommit(
         file=final,
         bytes=os.path.getsize(final),
-        block_ids=sorted(set(sb)),
-        cells=list(cells.values()),
+        block_ids=sorted(set(stats.column("block_id").to_pylist())),
+        cells=_stat_cells(stats, block_rows),
     )
 
 

@@ -123,9 +123,10 @@ def _read_delete_index(table_dir: str):
     return idx
 
 
-def _retire_delete_shards(paths: list) -> None:
-    """Leave shards the index no longer names to :meth:`IceTable.vacuum`.
-    A lock-free reader that loaded the old index may still open them, so
+def _retire_delete_files(paths: list) -> None:
+    """Leave shards and vector files the index no longer names to
+    :meth:`IceTable.vacuum`.  A lock-free reader that loaded the old
+    index, or a read planned before the swap, may still open them, so
     they are not unlinked here; touching them starts vacuum's
     ``older_than_s`` margin at the moment they were retired."""
     for full in paths:
@@ -165,7 +166,7 @@ def rewrite_delete_entries(table_dir: str, entries: list) -> None:
         "shards": [_write_delete_shard(table_dir, entries)] if entries else [],
     }
     _write_delete_index(table_dir, idx)
-    _retire_delete_shards(
+    _retire_delete_files(
         [os.path.join(table_dir, "deletes", ref) for ref in old]
     )
 
@@ -213,7 +214,7 @@ def _clear_conditional_markers(table_dir: str, expired_ids: set) -> None:
             new_refs.append(ref)
     if changed:
         _write_delete_index(table_dir, {"format": 2, "shards": new_refs})
-        _retire_delete_shards(removable)
+        _retire_delete_files(removable)
 
 
 @contextlib.contextmanager

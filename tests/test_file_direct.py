@@ -1,7 +1,8 @@
 """File-direct encode path (encode_parquet_dir): bit-identity with the
 JVM-scan path, exact resume at block granularity, layout guards
-(misaligned files, blocks spanning files, unsorted rows), and the
-direct-write commit protocol's kill-atomicity."""
+(misaligned files, blocks spanning files, unsorted rows), the
+direct-write commit protocol's kill-atomicity, and the one-job task
+layout (job counts, contiguous per-task block ranges, lineage)."""
 
 from __future__ import annotations
 
@@ -21,6 +22,7 @@ from pyrle_spark.plans.encode_job import (
 )
 from pyrle_spark.sources.icetable import IceTable
 from pyrle_spark.sources.webtext import generate_webtext
+from tests.conftest import spark_jobs
 
 N_ROWS = 4000
 BLOCK = 500  # divides N_ROWS
@@ -42,6 +44,28 @@ def src_dir(spark, tmp_path_factory):
     return d
 
 
+MANY_BLOCK = 100
+MANY_FILES = 20  # more files than the session's default parallelism
+
+
+@pytest.fixture(scope="module")
+def many_src(spark, tmp_path_factory):
+    """MANY_FILES one-block files, written with pyarrow in block order."""
+    d = str(tmp_path_factory.mktemp("fd_many") / "src")
+    pdf = (
+        generate_webtext(spark, MANY_BLOCK * MANY_FILES, n_hosts=20)
+        .toPandas()
+        .sort_values("doc_seq")
+    )
+    t = pa.Table.from_pandas(pdf, preserve_index=False)
+    os.makedirs(d)
+    files = []
+    for i in range(MANY_FILES):
+        files.append(os.path.join(d, f"f{i:02d}.parquet"))
+        pq.write_table(t.slice(i * MANY_BLOCK, MANY_BLOCK), files[-1])
+    return d, files
+
+
 def _signatures(spark, table_dir):
     enc = IceTable(table_dir).read_table(spark)
     return sorted(
@@ -52,22 +76,18 @@ def _signatures(spark, table_dir):
 
 
 def test_identical_to_jvm_scan_path(spark, src_dir, tmp_path):
-    """Both file-direct modes produce byte-identical blocks to
+    """The file-direct encode produces byte-identical blocks to
     encode_table on the same input — blocks are a property of the data,
     not of the path that encoded them.  Covers the timestamp
     normalization (_jvm_equivalent_type): warc_ts is stored ns-naive in
     parquet but reaches the codecs as us/UTC either way."""
     out_jvm = str(tmp_path / "jvm")
-    out_ipc = str(tmp_path / "ipc")
     out_direct = str(tmp_path / "direct")
-    encode_table(spark, spark.read.parquet(src_dir), out_jvm, _cfg())
-    s_ipc = encode_parquet_dir(spark, src_dir, out_ipc, _cfg(), direct_write=False)
-    s_dir = encode_parquet_dir(spark, src_dir, out_direct, _cfg(), direct_write=True)
-    sig = _signatures(spark, out_jvm)
-    assert sig == _signatures(spark, out_ipc) == _signatures(spark, out_direct)
-    assert s_ipc["bytes_out"] == s_dir["bytes_out"] > 0
-    for d in (out_ipc, out_direct):
-        assert verify_checksums(spark, d)["bad"] == 0
+    s_jvm = encode_table(spark, spark.read.parquet(src_dir), out_jvm, _cfg())
+    s_dir = encode_parquet_dir(spark, src_dir, out_direct, _cfg())
+    assert _signatures(spark, out_jvm) == _signatures(spark, out_direct)
+    assert s_jvm["bytes_out"] == s_dir["bytes_out"] > 0
+    assert verify_checksums(spark, out_direct)["bad"] == 0
     a = decode_table(spark, out_jvm).orderBy("_order").toPandas()
     b = decode_table(spark, out_direct).orderBy("_order").toPandas()
     import pandas as pd
@@ -186,3 +206,83 @@ def test_widen_reencodes_only_new_columns(spark, src_dir, tmp_path):
     assert s3["resumed_committed_blocks"] == N_ROWS // BLOCK
     dec = decode_table(spark, out, columns=["lang", "url"])
     assert dec.count() == N_ROWS
+
+
+def test_job_counts_pinned(spark, many_src, tmp_path):
+    """A fresh encode and a partial resume are one Spark job each; a fully
+    resumed call plans in the driver and launches none."""
+    d, files = many_src
+    out = str(tmp_path / "jobs")
+    cfg = _cfg(block_rows=MANY_BLOCK)
+    _, fresh = spark_jobs(
+        spark, lambda: encode_parquet_dir(spark, d, out, cfg, files=files[:7])
+    )
+    s2, partial = spark_jobs(spark, lambda: encode_parquet_dir(spark, d, out, cfg))
+    s3, resumed = spark_jobs(spark, lambda: encode_parquet_dir(spark, d, out, cfg))
+    assert (fresh, partial, resumed) == (1, 1, 0)
+    assert s2["resumed_committed_blocks"] == 7
+    assert s3["resumed_committed_blocks"] == MANY_FILES
+    assert sum(p["blocks"] for p in s2["partitions"]) == MANY_FILES - 7
+    assert verify_checksums(spark, out)["bad"] == 0
+
+
+def test_one_file_per_slot_contiguous_blocks(spark, many_src, tmp_path):
+    """The driver cuts the span-ordered files into min(#files,
+    defaultParallelism) contiguous payloads: one data file per task, each
+    holding one contiguous block range, the ranges disjoint, covering
+    every block and differing in length by at most one block."""
+    d, files = many_src
+    out = str(tmp_path / "layout")
+    s = encode_parquet_dir(spark, d, out, _cfg(block_rows=MANY_BLOCK))
+    data = [f["path"] for f in IceTable(out)._manifest(s["snapshot_id"])["files"]]
+    assert len(data) == min(len(files), spark.sparkContext.defaultParallelism)
+    ranges = []
+    for p in data:
+        bids = sorted(set(pq.read_table(p, columns=["block_id"])["block_id"].to_pylist()))
+        assert bids == list(range(bids[0], bids[-1] + 1)), p
+        ranges.append(bids)
+    ranges.sort()
+    assert [b for r in ranges for b in r] == list(range(MANY_FILES))
+    assert max(map(len, ranges)) - min(map(len, ranges)) <= 1
+
+
+def test_lineage_matches_table_rows(spark, many_src, tmp_path):
+    """The per-column and per-partition lineage the driver rolls up from
+    the job's stat rows equals a recount from the table's own rows."""
+    d, _ = many_src
+    out = str(tmp_path / "lineage")
+    s = encode_parquet_dir(spark, d, out, _cfg(block_rows=MANY_BLOCK))
+    rows = IceTable(out).read_table(spark).select(
+        "part_id", "column", "codec", "n_rows", "bytes_in", "bytes_out",
+        "encode_ns", "n_runs",
+    ).collect()
+    cols, parts = {}, {}
+    for r in rows:
+        c = cols.setdefault(
+            (r["column"], r["codec"]),
+            {"column": r["column"], "codec": r["codec"], "blocks": 0,
+             "bytes_in": 0, "bytes_out": 0, "runs_emitted": None},
+        )
+        c["blocks"] += 1
+        c["bytes_in"] += r["bytes_in"]
+        c["bytes_out"] += r["bytes_out"]
+        if r["n_runs"] is not None:
+            c["runs_emitted"] = (c["runs_emitted"] or 0) + r["n_runs"]
+        p = parts.setdefault(
+            r["part_id"],
+            {"part_id": r["part_id"], "blocks": 0, "rows": 0, "bytes_in": 0,
+             "bytes_out": 0, "encode_ns": 0},
+        )
+        if r["column"] == COLS[0]:
+            p["blocks"] += 1
+            p["rows"] += r["n_rows"]
+        for k in ("bytes_in", "bytes_out", "encode_ns"):
+            p[k] += r[k]
+    assert s["columns"] == sorted(cols.values(), key=lambda c: (c["column"], c["codec"]))
+    got = [
+        {k: v for k, v in p.items() if k != "encode_mb_per_s"}
+        for p in s["partitions"]
+    ]
+    assert got == sorted(parts.values(), key=lambda p: p["part_id"])
+    assert sum(p["rows"] for p in got) == MANY_BLOCK * MANY_FILES
+    assert s["bytes_out"] == sum(r["bytes_out"] for r in rows)

@@ -2977,8 +2977,8 @@ def test_analyze_ndv_survives_tiny_tail_block(spark, tmp_path):
 def test_compact_delete_vectors(spark, tmp_path, monkeypatch):
     """Many takedown commits merge into ONE sorted deduplicated vector;
     decode, count_rows, and time travel are unchanged; later-tagged
-    entries stay untouched; vector files of the merged entries are
-    reclaimed."""
+    entries stay untouched; vector files of the merged entries stay for
+    reads planned before the swap until vacuum reclaims them."""
     import json as _json
     import os as _os
 
@@ -3018,11 +3018,15 @@ def test_compact_delete_vectors(spark, tmp_path, monkeypatch):
 
     entries = read_delete_entries(t)
     assert len(entries) == 1 and entries[0]["compacted_from"] == 3
-    # all old vector files reclaimed; only the merged one remains
+    # the index names one vector; vacuum's deletes/ sweep reclaims the
+    # retired ones and leaves only the merged one
+    assert "file" in entries[0] and "files" not in entries[0]
+    IceTable(t).vacuum(older_than_s=0.0, force=True)
     files = []
     for root, _, names in _os.walk(_os.path.join(t, "deletes")):
         files += [n for n in names if n.endswith(".parquet")]
     assert len(files) == 1
+    assert count_rows(spark, t) == len(before)
 
     # a delete AFTER an append is tagged mid-log: it must stay unmerged
     more = spark.range(2000, 2400, 1, 2).select(
@@ -3035,3 +3039,30 @@ def test_compact_delete_vectors(spark, tmp_path, monkeypatch):
     # so fewer than 2 candidates -> no-op
     assert info2["merged_entries"] == 0 and info2["kept_entries"] == 2
     assert decode_table(spark, t).count() == len(before) + 400 - 1
+
+
+def test_compaction_between_plan_and_decode(spark, tmp_path):
+    """A read planned before compact_delete_vectors hands the merged
+    vector files to its tasks (driver_max=0 keeps the delete set out of
+    the driver); the decode after the compaction must still read them
+    instead of failing with FileNotFoundError."""
+    from pyrle_spark.plans.encode_job import (
+        _decode_plan,
+        compact_delete_vectors,
+        delete_rows,
+    )
+    from pyrle_spark.plans.read_plan import plan_read
+
+    t = str(tmp_path / "t")
+    df = spark.range(0, 2000, 1, 4).select(
+        F.col("id").alias("doc_seq"), (F.col("id") * 3).alias("v")
+    )
+    encode_table(spark, df, t, EncodeConfig(columns=["v"], block_rows=100))
+    gone = {1, 2, 150, 1999}
+    for pos in ([1, 2], [150], [1999]):
+        delete_rows(spark, t, pos)
+    plan = plan_read(t, driver_max=0)
+    assert len(plan.delete_files) == 3
+    assert compact_delete_vectors(spark, t)["merged_entries"] == 3
+    got = [r["_order"] for r in _decode_plan(spark, plan).select("_order").collect()]
+    assert sorted(got) == sorted(set(range(2000)) - gone)

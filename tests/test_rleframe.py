@@ -98,6 +98,30 @@ def test_job_counts_pinned(spark, interval_frames):
     assert (add, getitems, to_ranges) == (5, 3, 1)
 
 
+def test_nan_values_stay_nan(spark):
+    """A NaN value stays NaN, not null, on the Spark side through the
+    row-local ops, both binary layouts, rechunk and getlocs; a null list
+    element would turn the array sums of ``stats()`` into null."""
+    rd = RleDict(
+        {"chr1": Rle([2, 3, 4], [1.0, np.nan, 2.0]), "chr2": Rle([5], [3.0])}
+    )
+    f = RleFrame.from_rledict(spark, rd)
+    frames = {
+        "apply_values": f + 1.0,
+        "binary": f + f,
+        "rowwise": f.shift(1),
+        "rechunk": f.rechunk(4),
+        "blocked_binary": f.rechunk(4) + f.rechunk(4),
+    }
+    for name, g in frames.items():
+        vals = [v for r in g.df.select("values").collect() for v in r["values"]]
+        assert None not in vals and any(np.isnan(v) for v in vals), name
+        st = g.stats().filter("Chromosome = 'chr1'").first()
+        assert st["mean_quirk"] is not None and np.isnan(st["mean_quirk"]), name
+    loc = f.getlocs([3]).filter("Chromosome = 'chr1'").first()["value"]
+    assert loc is not None and np.isnan(loc)
+
+
 @pytest.mark.parametrize("op", ["add", "sub", "mul", "div"])
 def test_binary_ops_match_rledict(spark, interval_frames, op):
     p1, p2, d1, d2 = interval_frames
