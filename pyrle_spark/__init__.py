@@ -18,7 +18,12 @@ Public layers
 
 from pyrle_spark.rle import Rle
 from pyrle_spark.rledict import RleDict
+from pyrle_spark.session import gate_zip_rereads
 from pyrle_spark.sources.rle_io import from_csv
+
+# every UDF of the engine imports this package when a worker unpickles
+# it, so each reused Python worker gates its per-task zip re-reads here
+gate_zip_rereads()
 
 # reference alias: pyrle exposes PyRles = RleDict (pyrle/__init__.py:10)
 PyRles = RleDict

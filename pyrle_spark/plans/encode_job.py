@@ -1366,15 +1366,14 @@ def delete_where(
     'delete all rows for these urls', the takedown request as users
     actually phrase it.
 
-    Resolution is pruned, not a full scan: bloom digests drop blocks
-    that cannot contain any of the values, only survivors decode (that
-    one column), and the matching ``_order`` positions become a regular
-    position-delete commit.  Returns :func:`delete_rows`'s summary."""
-    table = IceTable(table_dir)
-    enc = table.read_table(spark)
-    live = prune_blocks_in(enc, physical_column(table, column), values)
-    dec = decode_table(spark, table_dir, columns=[column], blocks=live)
-    doomed = dec.filter(F.col(column).isin(values)).select("_order")
+    Resolution is pruned, not a full scan: the read planner drops, in
+    the driver, blocks whose zone or bloom digest rules out every value,
+    only survivors decode (that one column), and the matching ``_order``
+    positions become a regular position-delete commit.  Returns
+    :func:`delete_rows`'s summary."""
+    doomed = scan_encoded(
+        spark, table_dir, columns=[column], predicates=[(column, list(values))]
+    ).select("_order")
     return delete_rows(spark, table_dir, doomed, driver_max=driver_max)
 
 

@@ -1,14 +1,34 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one fix this
+engine applies to the PySpark Python workers that run its code.
 
 Local-mode defaults match the sandbox (local[N] single JVM); on a real
 cluster the same code runs unchanged under ``spark-submit --py-files``
 (the builder only sets master when none is configured).
+
+Worker start-up (:func:`gate_zip_rereads`, called from the package
+``__init__``): the PySpark worker calls ``importlib.invalidate_caches()``
+at the start of every task, and on CPython < 3.13
+``zipimport.zipimporter.invalidate_caches`` eagerly re-reads the whole
+directory of its archive.  Workers import pyspark from ``pyspark.zip``
+and py4j from its source zip, one cached importer per package path
+inside them, so a reused worker re-parsed ~26,700 zip directory entries
+per task: ~0.2 s of every Python task's start-up, before the first UDF
+call.  Inside a Spark task the gate re-reads an archive only when its
+``(st_ino, st_mtime_ns, st_size)`` stamp changed, so the importable set
+is the stock one: an archive that is rewritten is re-read (except a
+rewrite that keeps inode and size within one file-system timestamp
+tick, which no stat stamp can see).  CPython 3.13 made the stock method
+lazy (it only drops the cached directory), so the gate does nothing
+there; delete it once the runtime is 3.13 or later.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 
@@ -55,3 +75,43 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def gate_zip_rereads() -> None:
+    """Inside a Spark task on CPython < 3.13, replace
+    ``zipimport.zipimporter.invalidate_caches`` with
+    :func:`stat_gated_invalidate` over the stock method (see the module
+    docstring).  Idempotent; the driver and other processes keep the
+    stock method."""
+    if sys.version_info >= (3, 13) or TaskContext.get() is None:
+        return
+    stock = zipimport.zipimporter.invalidate_caches
+    if stock.__module__ != __name__:
+        zipimport.zipimporter.invalidate_caches = stat_gated_invalidate(stock)
+
+
+def stat_gated_invalidate(stock):
+    """An ``invalidate_caches`` for ``zipimporter`` that calls ``stock``
+    (which re-reads the archive's directory into the shared
+    ``zipimport._zip_directory_cache``) only when the archive's stat
+    stamp differs from the stamp taken before the cached directory was
+    read; otherwise the importer takes the cached directory as is."""
+    stamps: dict = {}  # archive path -> stamp of its cached directory
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        fresh = stamp is not None and stamps.get(self.archive) == stamp
+        if fresh and files is not None:
+            self._files = files
+            return
+        # stat before the read: a rewrite racing the read changes the
+        # stamp again, so the next call re-reads
+        stock(self)
+        stamps[self.archive] = stamp
+
+    return invalidate_caches

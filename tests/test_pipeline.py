@@ -811,6 +811,47 @@ def test_delete_where_equality(spark, webtext, tmp_path):
     assert decode_table(spark, out).count() == N_ROWS - n_kill
 
 
+def test_delete_where_through_read_planner(spark, tmp_path):
+    """delete_where resolves its positions through the driver-side read
+    planner: a renamed column and an int column given string values
+    delete exactly the matching rows, in a pinned number of Spark jobs
+    (the thin-row collect + decode_table(blocks=DataFrame) chain took 6
+    on this table)."""
+    from pyrle_spark.plans.encode_job import delete_where, rename_column
+    from tests.conftest import spark_jobs
+
+    out = str(tmp_path / "eqdel_plan")
+    n = 4096
+    df = spark.range(0, n, 1, 4).select(
+        F.col("id").alias("seq"),
+        F.concat(F.lit("g"), (F.col("id") % 5).cast("string")).alias("tag"),
+        (F.col("id") % 7).alias("k"),
+    )
+    encode_table(
+        spark,
+        df,
+        out,
+        EncodeConfig(columns=["tag", "k"], order_col="seq", block_rows=512),
+    )
+    rename_column(spark, out, "tag", "category")
+    live = set(range(n))
+
+    info, jobs = spark_jobs(
+        spark, lambda: delete_where(spark, out, "category", ["g1", "g3"])
+    )
+    live -= {i for i in range(n) if i % 5 in (1, 3)}
+    assert info["n_positions"] == n - len(live)
+    assert jobs == 2
+
+    info = delete_where(spark, out, "k", ["2", "6", "9"])
+    doomed = {i for i in live if i % 7 in (2, 6)}
+    assert info["n_positions"] == len(doomed)
+    live -= doomed
+    got = decode_table(spark, out).collect()
+    assert sorted(r["_order"] for r in got) == sorted(live)
+    assert all(r["category"] == f"g{r['_order'] % 5}" for r in got)
+
+
 def test_assign_row_order_matches_global_rank(spark):
     """The de-globalized two-pass rank equals a plain global row_number
     over the same (key, tiebreak) order — including hot keys split
