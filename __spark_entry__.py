@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # every queries() call — adding or removing a query without bumping this
 # constant fails the driver contract LOUDLY instead of silently
 # shrinking the certified surface.
-EXPECTED_QUERY_COUNT = 190
+EXPECTED_QUERY_COUNT = 147
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -35,7 +35,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out.update(relational.QUERIES)
     # unconditional: a broken import inside functions/ must FAIL the
     # contract loudly, not silently shrink the query registry to the
-    # relational subset (bench.py imports it unconditionally too)
+    # relational subset
     from pyrle_spark.functions import registry as fn_registry
 
     from pyrle_spark.streaming import queries as stream_queries

@@ -2,20 +2,10 @@
 
 from __future__ import annotations
 
-from pyrle_spark.functions import (
-    dedup,
-    events,
-    lm,
-    multimodal,
-    quantize,
-    similarity,
-    sketch,
-    text,
-    web,
-)
+from pyrle_spark.functions import dedup, multimodal, similarity, sketch, text
 
 QUERIES = {}
 ORACLE_SQL = {}
-for mod in (text, dedup, similarity, multimodal, sketch, quantize, web, events, lm):
+for mod in (text, dedup, similarity, multimodal, sketch):
     QUERIES.update(mod.QUERIES)
     ORACLE_SQL.update(mod.ORACLE_SQL)

@@ -615,63 +615,6 @@ FROM red
 """
 
 
-def html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north-rule per-row invariant ("byte-identical extracted text
-    per url") as a certified query: wrap each document's text in the
-    exact html template the webtext generator uses
-    (sources/webtext.py html construction), run the production
-    ``extract_text`` expression (sources/webtext.py:137) on the encoded
-    binary column, and return the extraction + a per-row byte-identity
-    flag for an independent engine to re-derive.  Newlines are
-    normalized first — ``.`` crosses no line in either regex engine
-    (Java and RE2 agree), so the invariant is over single-line text,
-    which is what the generator emits."""
-    from pyrle_spark.sources.webtext import extract_text
-
-    docs = _docs(spark, sf_dir)
-    flat = F.regexp_replace("text", r"[\r\n]+", " ")
-    d = docs.select(
-        "doc_id",
-        flat.alias("flat"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><title>Page "),
-                F.col("doc_id").cast("string"),
-                F.lit("</title></head><body><p>"),
-                flat,
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-    )
-    extracted = extract_text(F.col("html"))
-    return d.select(
-        "doc_id",
-        extracted.alias("extracted"),
-        (extracted == F.col("flat")).cast("int").alias("byte_identical"),
-    )
-
-
-_HTML_TEXT_EXTRACT_SQL = r"""
-WITH d AS (
-  SELECT doc_id,
-         regexp_replace(text, '[
-]+', ' ', 'g') AS flat
-  FROM documents
-), h AS (
-  SELECT doc_id, flat,
-         '<html><head><title>Page ' || CAST(doc_id AS VARCHAR) ||
-         '</title></head><body><p>' || flat || '</p></body></html>' AS html
-  FROM d
-)
-SELECT doc_id,
-       regexp_extract(html, '<p>(.*)</p>', 1) AS extracted,
-       CAST(regexp_extract(html, '<p>(.*)</p>', 1) = flat AS INT)
-         AS byte_identical
-FROM h
-"""
-
-
 # ------------------------------------------------------------------ BM25
 
 BM25_TERMS = ("data", "table", "spark")
@@ -832,7 +775,6 @@ QUERIES = {
     "text_stats": text_stats,
     "bm25_rank": bm25_rank,
     "corpus_report_card": corpus_report_card,
-    "html_text_extract": html_text_extract,
     "pii_redaction": pii_redaction,
     "token_count_bpe_ish": token_count_bpe_ish,
     "quality_score": quality_score,
@@ -850,7 +792,6 @@ ORACLE_SQL = {
     "text_stats": _TEXT_STATS_SQL,
     "bm25_rank": _BM25_RANK_SQL,
     "corpus_report_card": _report_card_sql(),
-    "html_text_extract": _HTML_TEXT_EXTRACT_SQL,
     "pii_redaction": _PII_REDACTION_SQL,
     "token_count_bpe_ish": _TOKEN_COUNT_BPE_SQL,
     "quality_score": _QUALITY_SCORE_SQL,

@@ -30,9 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = "lineitem events documents embeddings".split()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1085,6 +1083,107 @@ FROM lineitem GROUP BY block_id
 """
 
 
+_EMBED_DIM = 64
+
+
+def bss_roundtrip_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """decode(bss+zstd(encode)) over the flattened embedding floats,
+    executed per Arrow batch inside the scan — the distributed proof that
+    byte-stream split (codecs/bss.py) is bit-lossless on real float32
+    data.  The oracle is the identity (elements straight off the table),
+    so any bit the codec drops turns the cell red.
+
+    Plan shape at scale: one narrow projection + posexplode, zero
+    shuffle, Python only as an Arrow-batched pass (no per-row UDF)."""
+    import pyarrow as pa
+
+    flat = (
+        load(spark, sf_dir, "embeddings")
+        .select("vec_id", F.posexplode("embedding").alias("dim", "val"))
+        .select("vec_id", F.col("dim").cast("long").alias("dim"), "val")
+    )
+
+    def _roundtrip(batches):
+        from pyrle_spark.codecs import decode_array, encode_with
+
+        for batch in batches:
+            vals = batch.column("val")
+            dec = decode_array(encode_with("bss", vals, zstd=True))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("vec_id"),
+                    batch.column("dim"),
+                    dec.cast(pa.float64()),
+                ],
+                names=["vec_id", "dim", "val"],
+            )
+
+    return flat.mapInArrow(_roundtrip, "vec_id long, dim long, val double")
+
+
+_BSS_ROUNDTRIP_SQL = f"""
+SELECT vec_id, k - 1 AS dim, CAST(embedding[k] AS DOUBLE) AS val
+FROM embeddings, generate_series(1, {_EMBED_DIM}) AS t(k)
+"""
+
+
+def html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The north-rule per-row invariant ("byte-identical extracted text
+    per url") as a certified query: wrap each document's text in the
+    exact html template the webtext generator uses
+    (sources/webtext.py html construction), run the production
+    ``extract_text`` expression (sources/webtext.py) on the encoded
+    binary column, and return the extraction + a per-row byte-identity
+    flag for an independent engine to re-derive.  Newlines are
+    normalized first — ``.`` crosses no line in either regex engine
+    (Java and RE2 agree), so the invariant is over single-line text,
+    which is what the generator emits."""
+    from pyrle_spark.sources.webtext import extract_text
+
+    docs = load(spark, sf_dir, "documents")
+    flat = F.regexp_replace("text", r"[\r\n]+", " ")
+    d = docs.select(
+        "doc_id",
+        flat.alias("flat"),
+        F.encode(
+            F.concat(
+                F.lit("<html><head><title>Page "),
+                F.col("doc_id").cast("string"),
+                F.lit("</title></head><body><p>"),
+                flat,
+                F.lit("</p></body></html>"),
+            ),
+            "utf-8",
+        ).alias("html"),
+    )
+    extracted = extract_text(F.col("html"))
+    return d.select(
+        "doc_id",
+        extracted.alias("extracted"),
+        (extracted == F.col("flat")).cast("int").alias("byte_identical"),
+    )
+
+
+_HTML_TEXT_EXTRACT_SQL = r"""
+WITH d AS (
+  SELECT doc_id,
+         regexp_replace(text, '[
+]+', ' ', 'g') AS flat
+  FROM documents
+), h AS (
+  SELECT doc_id, flat,
+         '<html><head><title>Page ' || CAST(doc_id AS VARCHAR) ||
+         '</title></head><body><p>' || flat || '</p></body></html>' AS html
+  FROM d
+)
+SELECT doc_id,
+       regexp_extract(html, '<p>(.*)</p>', 1) AS extracted,
+       CAST(regexp_extract(html, '<p>(.*)</p>', 1) = flat AS INT)
+         AS byte_identical
+FROM h
+"""
+
+
 def codec_selector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stats-driven codec auto-selector expressed relationally:
     per (source) group, cardinality / run ratio / avg length → rule table.
@@ -1858,252 +1957,6 @@ FROM documents WHERE n_chars >= 420 GROUP BY lang
 """
 
 
-def tpch_q6_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 evaluated BELOW decode: lineitem encodes shipdate-
-    clustered (so date zones are tight per block), then the Q6
-    conjunction — shipdate year, discount band, quantity cap — pushes
-    through zone-map pruning via :func:`plans.encode_job.scan_encoded`
-    and only surviving blocks decode (only Q6's four columns).  The
-    in-query assert pins that pruning actually bit (the 1994 slice is
-    ~1/7 of the shipdate span); revenue is returned at a 10⁻⁴ integer
-    scale so the oracle compare is bit-exact (per-row double products
-    are IEEE-deterministic in both engines).  This is the 100 TB shape
-    of a warehouse filter-agg: manifest-level skipping, selective
-    decode, JVM-side aggregation."""
-    import tempfile
-    from datetime import datetime
-
-    from pyrle_spark.plans.encode_job import (
-        EncodeConfig,
-        assign_row_order,
-        encode_table,
-        explain_scan,
-        scan_encoded,
-    )
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_shipdate",
-        "l_discount",
-        "l_quantity",
-        "l_extendedprice",
-        (F.col("l_orderkey") * F.lit(10) + F.col("l_linenumber")).alias("_tb"),
-    )
-    cols = ["l_discount", "l_extendedprice", "l_quantity", "l_shipdate"]
-    ranked = assign_row_order(li, ["l_shipdate"], tiebreak="_tb", out_col="_seq")
-    out_dir = tempfile.mkdtemp(prefix="q6_compressed_")
-    encode_table(
-        spark,
-        ranked.select("_seq", *cols),
-        out_dir,
-        EncodeConfig(columns=cols, order_col="_seq", block_rows=256),
-    )
-    preds = [
-        (
-            "l_shipdate",
-            datetime(1994, 1, 1),
-            datetime(1994, 12, 31, 23, 59, 59, 999999),
-        ),
-        ("l_discount", 0.05, 0.07),
-        ("l_quantity", None, 23.0),  # quantities are integral doubles
-    ]
-    info = explain_scan(spark, out_dir, predicates=preds)
-    assert info["survivor_blocks"] < info["total_blocks"], info  # pruning bit
-    dec = scan_encoded(spark, out_dir, columns=cols, predicates=preds)
-    return dec.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * F.col("l_discount") * F.lit(10000)
-            ).cast("long")
-        ).alias("revenue_x10000"),
-    )
-
-
-_TPCH_Q6_COMPRESSED_SQL = """
-SELECT count(*) AS n_rows,
-       CAST(sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT))
-            AS BIGINT) AS revenue_x10000
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1994-01-01'
-  AND l_shipdate <= TIMESTAMP '1994-12-31 23:59:59.999999'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity <= 23.0
-"""
-
-
-def tpch_q1_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 evaluated BELOW decode — the proof the compressed path
-    generalizes past single-aggregate shapes: lineitem encodes
-    shipdate-clustered with the Q1 money terms pre-derived as integer
-    fixed-point columns (cents, cents·(100−disc), cents·(100−disc)·
-    (100+tax) — exactly :func:`tpch_q1_pricing`'s arithmetic, now
-    stored as FOR/bit-pack-friendly integers), and ONE
-    :func:`plans.compressed.group_sums_where` pass answers the whole
-    pricing summary: the shipdate filter pushes through zone prune /
-    containment / codec-mask tiers (the in-query assert pins that the
-    post-cutoff tail was skipped at the manifest), the two flag keys
-    pair on dictionary CODES, and all four sums fold int64-exact into
-    the 6-slot pair histogram without a row record ever existing.
-
-    Scale shape: O(#blocks) manifest prune, one block_id shuffle of
-    surviving compressed buffers, 6 output groups regardless of corpus
-    size."""
-    import tempfile
-    from datetime import datetime
-
-    from pyrle_spark.plans.compressed import group_sums_where
-    from pyrle_spark.plans.encode_job import (
-        EncodeConfig,
-        assign_row_order,
-        encode_table,
-        explain_scan,
-    )
-
-    cents = _money_cents("l_extendedprice")
-    disc = 100 - _money_cents("l_discount")
-    tax = 100 + _money_cents("l_tax")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_linestatus",
-        F.datediff(F.col("l_shipdate"), F.lit("1970-01-01").cast("timestamp"))
-        .cast("long")
-        .alias("ship_day"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        cents.alias("base_cents"),
-        (cents * disc).alias("disc_e4"),
-        (cents * disc * tax).alias("charge_e6"),
-        (F.col("l_orderkey") * F.lit(10) + F.col("l_linenumber")).alias("_tb"),
-    )
-    cols = [
-        "base_cents", "charge_e6", "disc_e4", "l_linestatus",
-        "l_returnflag", "qty", "ship_day",
-    ]
-    ranked = assign_row_order(li, ["ship_day"], tiebreak="_tb", out_col="_seq")
-    out_dir = tempfile.mkdtemp(prefix="q1_compressed_")
-    encode_table(
-        spark,
-        ranked.select("_seq", *cols),
-        out_dir,
-        EncodeConfig(columns=cols, order_col="_seq", block_rows=256),
-    )
-    cutoff = (datetime(1998, 9, 2) - datetime(1970, 1, 1)).days
-    info = explain_scan(
-        spark, out_dir, predicates=[("ship_day", None, cutoff)]
-    )
-    assert info["survivor_blocks"] < info["total_blocks"], info  # pruning bit
-    return group_sums_where(
-        spark,
-        out_dir,
-        "l_returnflag",
-        "l_linestatus",
-        measures=["qty", "base_cents", "disc_e4", "charge_e6"],
-        filter_col="ship_day",
-        hi=cutoff,
-    ).select(
-        F.col("value_a").alias("l_returnflag"),
-        F.col("value_b").alias("l_linestatus"),
-        "sum_qty",
-        "sum_base_cents",
-        "sum_disc_e4",
-        "sum_charge_e6",
-        F.col("n_rows").alias("count_order"),
-    )
-
-
-# oracle: identical to the batch Q1's fixed-point summary (defined next
-# to tpch_q1_pricing below); the compressed path must produce the same
-# rows bit-for-bit, so they share one SQL twin — see the QUERIES wiring.
-
-
-def tpch_q14_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 with the FACT side kept in the compressed domain —
-    aggregate-below-join under a date filter: lineitem encodes
-    shipdate-clustered with the partkey and the 10⁻⁴-scale revenue as
-    integers, ONE single-key :func:`plans.compressed.group_sums_where`
-    pass reduces it to a per-partkey revenue histogram (the shipdate
-    window pushes through zone prune / containment / codec masks — the
-    in-query assert pins the manifest-level skip), and only that
-    O(distinct partkeys) histogram joins the broadcast part dim for the
-    promo/total conditional split.  The 10¹²-row fact never decodes a
-    row and never shuffles row data — the join operand is the
-    dictionary domain, :func:`compressed_join_dim`'s shape generalized
-    with a filter and an exact integer measure.
-
-    Scale shape: O(#blocks) manifest prune, one block_id shuffle of
-    surviving compressed buffers, histogram ⋈ broadcast dim, one scalar
-    reduce."""
-    import tempfile
-    from datetime import datetime
-
-    from pyrle_spark.plans.compressed import group_sums_where
-    from pyrle_spark.plans.encode_job import (
-        EncodeConfig,
-        assign_row_order,
-        encode_table,
-        explain_scan,
-    )
-
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = load(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").cast("long").alias("partkey"),
-        F.datediff(F.col("l_shipdate"), F.lit("1970-01-01").cast("timestamp"))
-        .cast("long")
-        .alias("ship_day"),
-        rev.alias("rev_e4"),
-        (F.col("l_orderkey") * F.lit(10) + F.col("l_linenumber")).alias("_tb"),
-    )
-    cols = ["partkey", "rev_e4", "ship_day"]
-    ranked = assign_row_order(li, ["ship_day"], tiebreak="_tb", out_col="_seq")
-    out_dir = tempfile.mkdtemp(prefix="q14_compressed_")
-    encode_table(
-        spark,
-        ranked.select("_seq", *cols),
-        out_dir,
-        EncodeConfig(columns=cols, order_col="_seq", block_rows=256),
-    )
-    epoch = datetime(1970, 1, 1)
-    lo = (datetime(1996, 1, 1) - epoch).days
-    hi = (datetime(1996, 4, 1) - epoch).days - 1  # dates are midnight
-    info = explain_scan(
-        spark, out_dir, predicates=[("ship_day", lo, hi)]
-    )
-    assert info["survivor_blocks"] < info["total_blocks"], info  # pruning bit
-    hist = group_sums_where(
-        spark,
-        out_dir,
-        "partkey",
-        None,
-        measures=["rev_e4"],
-        filter_col="ship_day",
-        lo=lo,
-        hi=hi,
-    ).select(F.col("value_a").alias("partkey"), "sum_rev_e4")
-    part = load(spark, sf_dir, "part").select(
-        F.col("p_partkey").cast("string").alias("partkey"),
-        F.col("p_type").startswith("PROMO").alias("is_promo"),
-    )
-    return (
-        hist.join(F.broadcast(part), "partkey")
-        .agg(
-            F.sum(
-                F.when(F.col("is_promo"), F.col("sum_rev_e4")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("promo_revenue_e4"),
-            F.sum("sum_rev_e4").alias("total_revenue_e4"),
-        )
-        .select(
-            "promo_revenue_e4",
-            "total_revenue_e4",
-            (
-                F.lit(100.0)
-                * F.col("promo_revenue_e4")
-                / F.col("total_revenue_e4")
-            ).alias("promo_pct"),
-        )
-    )
-
-
 _ENCODED_JOIN_AGG_SQL = """
 SELECT lang, source, count(*) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -2523,196 +2376,6 @@ FROM documents GROUP BY lang
 """
 
 
-def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 local-supplier revenue: the nation/region dims broadcast,
-    the customer↔supplier same-nation constraint rides the joins, and
-    the two fact joins shuffle on their keys.  Revenue in integer 10^-4
-    units (exact cross-engine sums).
-
-    Scale shape: region→nation→supplier chain is broadcast all the way;
-    lineitem⋈orders is the one big shuffle pair; the aggregate key is
-    tiny (#nations)."""
-    cutoff_lo = F.lit("1996-01-01").cast("timestamp")
-    cutoff_hi = F.lit("1997-01-01").cast("timestamp")
-    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = load(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select("n_nationkey", "n_name")
-    supplier = load(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey", "s_nationkey", "n_name")
-    customer = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter((F.col("o_orderdate") >= cutoff_lo) & (F.col("o_orderdate") < cutoff_hi))
-        .select("o_orderkey", "o_custkey")
-    )
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", rev.alias("rev")
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(F.sum("rev").alias("revenue_e4"))
-    )
-
-
-_TPCH_Q5_SQL = """
-SELECT n_name,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-         AS revenue_e4
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-"""
-
-
-def tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 forecasting-revenue-change: pure scan-filter-aggregate —
-    every predicate reaches the parquet scan (PushedFilters), no join,
-    no Python.  Both engines compare against identical binary double
-    literals, so the BETWEEN on the 2-decimal discount column is
-    engine-stable; revenue in integer 10^-4 units."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    rev = _money_cents("l_extendedprice") * _money_cents("l_discount")
-    return li.agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum(rev).alias("revenue_e4")
-    )
-
-
-_TPCH_Q6_SQL = """
-SELECT count(*) AS n_rows,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * CAST(round(l_discount*100) AS BIGINT)) AS BIGINT)
-         AS revenue_e4
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-"""
-
-
-def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 promotion effect: part is the small side and
-    broadcasts, lineitem's date filter reaches the scan, and the promo
-    share is conditional aggregation — no second pass over the fact.
-    Both revenue sums stay in integer 10^-4 units; the percentage is
-    ONE terminal division of two exact int64s, so both engines produce
-    the identical IEEE double.
-
-    Scale shape: one broadcast hash join, one scalar aggregate; zero
-    shuffles of lineitem beyond the final single-row reduce."""
-    part = load(spark, sf_dir, "part").select(
-        "p_partkey", F.col("p_type").startswith("PROMO").alias("is_promo")
-    )
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    joined = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    return joined.agg(
-        F.sum(F.when(F.col("is_promo"), rev).otherwise(F.lit(0))).alias(
-            "promo_revenue_e4"
-        ),
-        F.sum(rev).alias("total_revenue_e4"),
-    ).select(
-        "promo_revenue_e4",
-        "total_revenue_e4",
-        (
-            F.lit(100.0)
-            * F.col("promo_revenue_e4")
-            / F.col("total_revenue_e4")
-        ).alias("promo_pct"),
-    )
-
-
-_TPCH_Q14_SQL = """
-WITH j AS (
-  SELECT CAST(round(l_extendedprice*100) AS BIGINT)
-         * (100 - CAST(round(l_discount*100) AS BIGINT)) AS rev,
-         p_type LIKE 'PROMO%' AS is_promo
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-)
-SELECT CAST(sum(CASE WHEN is_promo THEN rev ELSE 0 END) AS BIGINT)
-         AS promo_revenue_e4,
-       CAST(sum(rev) AS BIGINT) AS total_revenue_e4,
-       100.0 * CAST(sum(CASE WHEN is_promo THEN rev ELSE 0 END) AS BIGINT)
-             / CAST(sum(rev) AS BIGINT) AS promo_pct
-FROM j
-"""
-
-
-def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 returned-item reporting (columns reduced to the
-    testdata's customer schema): one quarter of orders, returnflag 'R'
-    lineitems, revenue per customer, top 20.  The nation dim broadcasts;
-    customer⋈(orders⋈lineitem) shuffles on the integer keys; the LIMIT
-    carries an explicit (revenue DESC, c_custkey) tiebreak so the row
-    set is deterministic in both engines.  Revenue in integer 10^-4
-    units.
-
-    Scale shape: facts shuffle once each on their join key, the
-    group-by key is c_custkey (no skew — one group per customer), and
-    top-20 is a partial TakeOrdered, not a global sort."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", rev.alias("rev"))
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum("rev").alias("revenue_e4"))
-        .orderBy(F.col("revenue_e4").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
-
-
-_TPCH_Q10_SQL = """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-         AS revenue_e4
-FROM customer, orders, lineitem, nation
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1996-04-01'
-  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue_e4 DESC, c_custkey LIMIT 20
-"""
-
-
 def compressed_sum_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level FILTER pushed below decode
     (``plans.compressed.filtered_numeric_agg``): rle blocks evaluate the
@@ -2776,963 +2439,6 @@ FROM documents WHERE n_chars % 16 BETWEEN 3 AND 9
 UNION ALL
 SELECT 'lang_len', count(*), CAST(sum(length(lang)) AS BIGINT)
 FROM documents WHERE length(lang) = 2
-"""
-
-
-def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 large-volume customers: the HAVING subquery is a
-    map-side-combinable groupBy of lineitem alone; its survivor list
-    (orders whose quantity sum clears the bar) is small and BROADCASTS
-    back as a semi-join, so the fact table shuffles once on l_orderkey
-    and never again.  Quantities are integral, so the sums are exact
-    int64; prices in integer cents; top-50 with an o_orderkey tiebreak.
-
-    Scale shape: one shuffle for the having-aggregate, broadcast
-    semi-joins after; customer join only on surviving orders."""
-    qty = F.col("l_quantity").cast("long")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", qty.alias("qty"))
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("qty").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 300)
-    )
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate",
-        _money_cents("o_totalprice").alias("o_totalprice_c"),
-    )
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        orders.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_custkey", "c_name", "o_orderkey", "o_orderdate",
-            "o_totalprice_c", "sum_qty",
-        )
-        .orderBy(F.col("o_totalprice_c").desc(), F.col("o_orderkey"))
-        .limit(50)
-    )
-
-
-_TPCH_Q18_SQL = """
-SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-       CAST(round(o_totalprice*100) AS BIGINT) AS o_totalprice_c,
-       sum_qty
-FROM orders
-JOIN (
-  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS BIGINT)) > 300
-) b ON o_orderkey = b.l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice_c DESC, o_orderkey LIMIT 50
-"""
-
-
-def tpch_q4_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 order-priority checking, adapted to the reduced schema
-    (no ``l_commitdate``/``l_receiptdate``): an order counts when SOME
-    lineitem shipped more than 60 days after the order date.  The
-    EXISTS is a LEFT SEMI join with the lateness predicate as a join
-    condition, so lineitem is never widened and each order is counted
-    once no matter how many late lines it has.
-
-    Scale shape: one shuffle pair on the orderkey for the semi-join;
-    the date filter on orders reaches the scan; the aggregate key is
-    five priorities."""
-    lo = F.lit("1996-07-01").cast("timestamp")
-    hi = F.lit("1996-10-01").cast("timestamp")
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = orders.join(
-        li,
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
-
-
-_TPCH_Q4_SQL = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-  AND o_orderdate < TIMESTAMP '1996-10-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem
-    WHERE l_orderkey = o_orderkey
-      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-GROUP BY o_orderpriority
-"""
-
-
-def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 volume shipping between two nations: the nation dim
-    broadcasts into supplier and customer, the (supp, cust) nation-pair
-    disjunction rides the fact joins, and revenue stays in integer
-    10^-4 units so cross-engine sums are exact.  Ship year via
-    ``year()`` — identical integers on both engines.
-
-    Scale shape: supplier (nation-filtered) broadcasts; customer keeps
-    its shuffle join on ``c_custkey`` (at scale the customer side is
-    fact-sized); lineitem⋈orders is the one big shuffle pair."""
-    lo = F.lit("1996-01-01").cast("timestamp")
-    hi = F.lit("1998-01-01").cast("timestamp")
-    nation = load(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_3", "NATION_7")
-    )
-    supp = (
-        load(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    cust = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .select(
-            "l_orderkey", "l_suppkey",
-            F.year("l_shipdate").alias("l_year"), rev.alias("rev"),
-        )
-    )
-    return (
-        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.sum("rev").alias("revenue_e4"))
-    )
-
-
-_TPCH_Q7_SQL = """
-SELECT supp_nation, cust_nation, l_year,
-       CAST(sum(rev) AS BIGINT) AS revenue_e4
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-         CAST(round(l_extendedprice*100) AS BIGINT)
-           * (100 - CAST(round(l_discount*100) AS BIGINT)) AS rev
-  FROM supplier, lineitem, orders, customer, nation n1, nation n2
-  WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-    AND c_custkey = o_custkey
-    AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-    AND n1.n_name IN ('NATION_3','NATION_7')
-    AND n2.n_name IN ('NATION_3','NATION_7')
-    AND n1.n_name <> n2.n_name
-    AND l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-) shipping
-GROUP BY supp_nation, cust_nation, l_year
-"""
-
-
-def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 national market share (p_type reduced to the single-word
-    domain): NATION_5's share of ECONOMY-part revenue sold to AMERICA
-    customers, by order year.  Both sums stay int64 10^-4; the share is
-    ONE terminal division of two exact integers, so both engines emit
-    the identical IEEE double.
-
-    Scale shape: part (type-filtered) and supplier⋈nation broadcast;
-    lineitem⋈orders shuffles on the orderkey; customer⋈nation(region)
-    shuffles on the custkey; aggregate key is #years."""
-    lo = F.lit("1996-01-01").cast("timestamp")
-    hi = F.lit("1998-01-01").cast("timestamp")
-    part = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "ECONOMY")
-        .select("p_partkey")
-    )
-    nation = load(spark, sf_dir, "nation")
-    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    cust_nat = nation.join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select("n_nationkey")
-    cust = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(cust_nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey")
-    )
-    supp = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
-        .select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year"))
-    )
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", rev.alias("rev")
-    )
-    vol = (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-    )
-    return (
-        vol.groupBy("o_year")
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_5", F.col("rev")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("nation_volume_e4"),
-            F.sum("rev").alias("total_volume_e4"),
-        )
-        .select(
-            "o_year", "nation_volume_e4", "total_volume_e4",
-            (F.col("nation_volume_e4") / F.col("total_volume_e4")).alias(
-                "mkt_share"
-            ),
-        )
-    )
-
-
-_TPCH_Q8_SQL = """
-WITH vol AS (
-  SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-         CAST(round(l_extendedprice*100) AS BIGINT)
-           * (100 - CAST(round(l_discount*100) AS BIGINT)) AS rev,
-         n2.n_name AS supp_nation
-  FROM part, supplier, lineitem, orders, customer, nation n1, nation n2,
-       region
-  WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-    AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-    AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
-    AND r_name = 'AMERICA' AND s_nationkey = n2.n_nationkey
-    AND o_orderdate >= TIMESTAMP '1996-01-01'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-    AND p_type = 'ECONOMY'
-)
-SELECT o_year,
-       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN rev ELSE 0 END)
-            AS BIGINT) AS nation_volume_e4,
-       CAST(sum(rev) AS BIGINT) AS total_volume_e4,
-       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN rev ELSE 0 END)
-            AS BIGINT) * 1.0 / CAST(sum(rev) AS BIGINT) AS mkt_share
-FROM vol GROUP BY o_year
-"""
-
-
-def tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 customer-order-count distribution, adapted to the
-    reduced schema (no ``o_comment``; the exclusion filter is the
-    ``1-URGENT`` priority class instead): LEFT join customer→orders so
-    zero-order customers land in the ``c_count = 0`` bucket, then a
-    second tiny aggregate over counts.
-
-    Scale shape: one shuffle pair on the custkey, one map-side-
-    combinable reaggregate whose key domain is O(max orders/customer)."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey")
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "1-URGENT")
-        .select("o_custkey", "o_orderkey")
-    )
-    per_cust = (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-_TPCH_Q13_SQL = """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT OUTER JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-) c_orders
-GROUP BY c_count
-"""
-
-
-def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 top supplier: quarterly revenue per supplier in integer
-    10^-4 units, then suppliers matching the exact integer maximum.
-    The max is a single-row aggregate broadcast back as an equi-join —
-    no global window, no second scan of lineitem.
-
-    Scale shape: one shuffle on the suppkey for the revenue aggregate;
-    the single-row max broadcasts; supplier dim broadcasts into the
-    tiny winner set."""
-    lo = F.lit("1996-01-01").cast("timestamp")
-    hi = F.lit("1996-04-01").cast("timestamp")
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .select("l_suppkey", rev.alias("rev"))
-    )
-    per_supp = li.groupBy("l_suppkey").agg(F.sum("rev").alias("total_revenue_e4"))
-    best = per_supp.agg(F.max("total_revenue_e4").alias("max_rev"))
-    winners = per_supp.join(
-        F.broadcast(best), F.col("total_revenue_e4") == F.col("max_rev")
-    )
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return winners.join(
-        F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey")
-    ).select("s_suppkey", "s_name", "total_revenue_e4")
-
-
-_TPCH_Q15_SQL = """
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-         CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                  * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-           AS total_revenue_e4
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue_e4
-FROM supplier, revenue
-WHERE s_suppkey = supplier_no
-  AND total_revenue_e4 = (SELECT max(total_revenue_e4) FROM revenue)
-"""
-
-
-def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 small-quantity-order revenue, adapted (no
-    ``p_container``; the part filter is brand + size band).  The
-    correlated ``0.2 * avg(l_quantity)`` is decided by the exact
-    integer rule ``5 * qty * cnt < sum_qty`` — quantities are integral,
-    so no float division ever happens and both engines agree bit-for-
-    bit.  ``avg_yearly`` is ONE terminal division of an exact cents sum.
-
-    Scale shape: part filter broadcasts; the per-part avg is one
-    map-side-combinable aggregate of the (already part-filtered)
-    lineitem, broadcast back — lineitem shuffles once on l_partkey."""
-    part = (
-        load(spark, sf_dir, "part")
-        .filter((F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 15))
-        .select("p_partkey")
-    )
-    qty = F.col("l_quantity").cast("long")
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select(
-            "l_partkey", qty.alias("qty"),
-            _money_cents("l_extendedprice").alias("price_c"),
-        )
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    )
-    stats = li.groupBy("l_partkey").agg(
-        F.sum("qty").alias("sum_qty"), F.count(F.lit(1)).alias("cnt")
-    ).select(F.col("l_partkey").alias("s_partkey"), "sum_qty", "cnt")
-    small = li.join(
-        F.broadcast(stats), F.col("l_partkey") == F.col("s_partkey")
-    ).filter(F.lit(5) * F.col("qty") * F.col("cnt") < F.col("sum_qty"))
-    return small.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("price_c").alias("sum_price_c"),
-    ).select(
-        "n_rows", "sum_price_c",
-        (F.col("sum_price_c") / F.lit(700.0)).alias("avg_yearly"),
-    )
-
-
-_TPCH_Q17_SQL = """
-WITH li AS (
-  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-         CAST(round(l_extendedprice*100) AS BIGINT) AS price_c
-  FROM lineitem JOIN part ON p_partkey = l_partkey
-  WHERE p_brand = 'Brand#3' AND p_size <= 15
-), stats AS (
-  SELECT l_partkey AS s_partkey,
-         CAST(sum(qty) AS BIGINT) AS sum_qty,
-         count(*) AS cnt
-  FROM li GROUP BY l_partkey
-)
-SELECT count(*) AS n_rows,
-       CAST(sum(price_c) AS BIGINT) AS sum_price_c,
-       CAST(sum(price_c) AS BIGINT) / 700.0 AS avg_yearly
-FROM li JOIN stats ON l_partkey = s_partkey
-WHERE 5 * qty * cnt < sum_qty
-"""
-
-
-def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 discounted revenue, adapted (no ``l_shipmode``/
-    ``l_shipinstruct``; the disjunction is three (brand, size band,
-    quantity band) triples).  The OR-of-ANDs stays a single Catalyst
-    filter after one equi-join on the partkey; the join itself never
-    multiplies rows, and the shared quantity envelope (1..35) is pushed
-    to the lineitem scan.
-
-    Scale shape: part broadcasts; one pass over lineitem; scalar
-    aggregate."""
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    qty = F.col("l_quantity").cast("long")
-    rev = _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity").between(1, 35))
-        .select("l_partkey", qty.alias("qty"), rev.alias("rev"))
-    )
-    j = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 10)
-            & F.col("qty").between(1, 15)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(11, 25)
-            & F.col("qty").between(10, 25)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(20, 40)
-            & F.col("qty").between(20, 35)
-        )
-    )
-    return j.filter(cond).agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum("rev").alias("revenue_e4")
-    )
-
-
-_TPCH_Q19_SQL = """
-SELECT count(*) AS n_rows,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-         AS revenue_e4
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
-       AND CAST(l_quantity AS BIGINT) BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 25
-       AND CAST(l_quantity AS BIGINT) BETWEEN 10 AND 25)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 40
-       AND CAST(l_quantity AS BIGINT) BETWEEN 20 AND 35)
-"""
-
-
-def tpch_q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 global sales opportunity, adapted (no ``c_phone``; the
-    grouping key is the customer's nation).  Per-nation average of
-    POSITIVE account balances, customers strictly above their nation's
-    average with no RECENT orders (none since 1999-01-01 — the
-    reduced-schema stand-in for Q22's "no orders for 7 years"), counted
-    per nation.  The above-average test uses the exact integer rule
-    ``cents * n_pos > sum_pos_cents`` — no float average is ever
-    materialized.
-
-    Scale shape: the per-nation (sum, count) aggregate is 25 rows and
-    broadcasts back; the no-orders test is a LEFT ANTI join shuffling
-    on the custkey; final aggregate key is #nations."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", _money_cents("c_acctbal").alias("bal_c")
-    )
-    pos = (
-        cust.filter(F.col("bal_c") > 0)
-        .groupBy(F.col("c_nationkey").alias("p_nationkey"))
-        .agg(F.sum("bal_c").alias("sum_pos_c"), F.count(F.lit(1)).alias("n_pos"))
-    )
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-        .select("o_custkey")
-    )
-    rich = (
-        cust.join(
-            F.broadcast(pos), F.col("c_nationkey") == F.col("p_nationkey")
-        )
-        .filter(F.col("bal_c") * F.col("n_pos") > F.col("sum_pos_c"))
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-    )
-    return rich.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("numcust"),
-        F.sum("bal_c").alias("totacctbal_c"),
-    )
-
-
-_TPCH_Q22_SQL = """
-WITH cust AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(round(c_acctbal*100) AS BIGINT) AS bal_c
-  FROM customer
-), pos AS (
-  SELECT c_nationkey AS p_nationkey,
-         CAST(sum(bal_c) AS BIGINT) AS sum_pos_c,
-         count(*) AS n_pos
-  FROM cust WHERE bal_c > 0 GROUP BY c_nationkey
-)
-SELECT c_nationkey, count(*) AS numcust,
-       CAST(sum(bal_c) AS BIGINT) AS totacctbal_c
-FROM cust JOIN pos ON c_nationkey = p_nationkey
-WHERE bal_c * n_pos > sum_pos_c
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '1999-01-01')
-GROUP BY c_nationkey
-"""
-
-
-def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 minimum-cost supplier, adapted (no ``partsupp``: the
-    supply cost of a (part, supplier) pair is the minimum extended
-    price in cents that supplier ever charged for the part in
-    ``lineitem``, restricted to EUROPE suppliers — integral, so the
-    correlated "equals the regional minimum" test is exact).  Small
-    parts (``p_size <= 5``) only, all ties kept.
-
-    Scale shape: the supplier→nation→region chain broadcasts into the
-    lineitem scan; the (part, supp) min is one map-side-combinable
-    aggregate shuffling on the pair key; the per-part regional minimum
-    (O(#parts), dim-sized) broadcasts back — lineitem is scanned once
-    and never re-shuffled."""
-    rs = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(
-                load(spark, sf_dir, "region").filter(
-                    F.col("r_name") == "EUROPE"
-                )
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select(
-            "s_suppkey", "s_name", "n_name",
-            _money_cents("s_acctbal").alias("bal_c"),
-        )
-    )
-    cost = (
-        load(spark, sf_dir, "lineitem")
-        .select(
-            "l_partkey", "l_suppkey",
-            _money_cents("l_extendedprice").alias("price_c"),
-        )
-        .join(F.broadcast(rs), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("l_partkey", "l_suppkey", "s_name", "n_name", "bal_c")
-        .agg(F.min("price_c").alias("cost_c"))
-    )
-    best = cost.groupBy(F.col("l_partkey").alias("b_partkey")).agg(
-        F.min("cost_c").alias("min_c")
-    )
-    part = load(spark, sf_dir, "part").filter(F.col("p_size") <= 5)
-    return (
-        cost.join(
-            F.broadcast(best),
-            (F.col("l_partkey") == F.col("b_partkey"))
-            & (F.col("cost_c") == F.col("min_c")),
-        )
-        .join(
-            F.broadcast(part.select("p_partkey")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .select("bal_c", "s_name", "n_name", "p_partkey", "cost_c")
-    )
-
-
-_TPCH_Q2_SQL = """
-WITH rs AS (
-  SELECT s_suppkey, s_name, n_name,
-         CAST(round(s_acctbal*100) AS BIGINT) AS bal_c
-  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'
-), cost AS (
-  SELECT l_partkey, l_suppkey, s_name, n_name, bal_c,
-         CAST(min(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-           AS cost_c
-  FROM lineitem JOIN rs ON l_suppkey = s_suppkey
-  GROUP BY 1, 2, 3, 4, 5
-), best AS (
-  SELECT l_partkey AS b_partkey, min(cost_c) AS min_c FROM cost GROUP BY 1
-)
-SELECT bal_c, s_name, n_name, p_partkey, cost_c
-FROM cost JOIN best ON l_partkey = b_partkey AND cost_c = min_c
-JOIN part ON p_partkey = l_partkey
-WHERE p_size <= 5
-"""
-
-
-def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 product-type profit, adapted (no ``partsupp``: the unit
-    supply cost is the part's ``p_retailprice``, so profit_e4 =
-    price_c·(100−disc_c) − qty·retail_c·100 — every term integral in
-    10^-4 currency units).  Parts whose name contains ``gear``, profit
-    grouped by supplier nation and ship year.
-
-    Scale shape: part and supplier→nation broadcast into the single
-    lineitem pass; one shuffle on the (nation, year) aggregate key."""
-    part = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%gear%"))
-        .select("p_partkey", _money_cents("p_retailprice").alias("retail_c"))
-    )
-    supp = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "n_name")
-    )
-    qty = F.col("l_quantity").cast("long")
-    amount = (
-        _money_cents("l_extendedprice") * (100 - _money_cents("l_discount"))
-        - qty * F.col("retail_c") * 100
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "n_name",
-            F.year("l_shipdate").alias("o_year"),
-            amount.alias("amount_e4"),
-        )
-    )
-    return li.groupBy("n_name", "o_year").agg(
-        F.sum("amount_e4").alias("sum_profit_e4")
-    )
-
-
-_TPCH_Q9_SQL = """
-SELECT n_name, CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS o_year,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))
-                - CAST(l_quantity AS BIGINT)
-                  * CAST(round(p_retailprice*100) AS BIGINT) * 100)
-            AS BIGINT) AS sum_profit_e4
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN nation ON n_nationkey = s_nationkey
-WHERE p_name LIKE '%gear%'
-GROUP BY n_name, o_year
-"""
-
-
-def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 important stock identification, adapted (no
-    ``partsupp``: a part's held value for the three-nation supplier
-    group is Σ qty·price_c over its ``lineitem`` rows, and the
-    value-share cut — Q11's ``> sum(...) * FRACTION`` HAVING, whose
-    fixed fraction empties as the table grows — becomes the exact
-    integer above-average rule ``value_c · n_parts > 2 · total_c``,
-    i.e. parts worth more than twice the mean part value, which stays
-    populated at every scale factor).
-
-    Scale shape: supplier→nation broadcasts into one lineitem pass;
-    the per-part sum shuffles on the partkey; the (total, count) pair
-    is a single-row aggregate broadcast back — no second scan, no
-    global sort."""
-    supp = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load(spark, sf_dir, "nation").filter(
-                    F.col("n_name").isin("NATION_7", "NATION_12", "NATION_17")
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey")
-    )
-    val = F.col("l_quantity").cast("long") * _money_cents("l_extendedprice")
-    v = (
-        load(spark, sf_dir, "lineitem")
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(val).alias("value_c"))
-    )
-    tot = v.agg(
-        F.sum("value_c").alias("t"), F.count(F.lit(1)).alias("np")
-    )
-    return (
-        v.join(F.broadcast(tot))
-        .filter(F.col("value_c") * F.col("np") > F.lit(2) * F.col("t"))
-        .select("l_partkey", "value_c")
-    )
-
-
-_TPCH_Q11_SQL = """
-WITH v AS (
-  SELECT l_partkey, CAST(sum(CAST(l_quantity AS BIGINT)
-         * CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS value_c
-  FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON n_nationkey = s_nationkey
-  WHERE n_name IN ('NATION_7', 'NATION_12', 'NATION_17')
-  GROUP BY l_partkey
-), tot AS (SELECT CAST(sum(value_c) AS BIGINT) AS t, count(*) AS np FROM v)
-SELECT l_partkey, value_c FROM v, tot WHERE value_c * np > 2 * t
-"""
-
-
-def tpch_q12_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shipping-priority audit, adapted (no ``l_shipmode`` /
-    ``l_receiptdate``: lines bucket by ship LAG — ``slow`` when the
-    line shipped more than 60 days after the order date, ``fast``
-    otherwise — and the year window runs on ``l_shipdate``).  Per
-    bucket, how many lines belong to high-priority orders (URGENT /
-    HIGH) vs the rest; day arithmetic is integer in both engines.
-
-    Scale shape: the orders↔lineitem equi-join shuffles both sides on
-    the orderkey (both fact-sized — the sort-merge Q12 always needs);
-    the two-row aggregate is map-side combinable."""
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1998-01-01").cast("timestamp")
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .select("l_orderkey", "l_shipdate")
-    )
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-    bucket = F.when(
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 60, "slow"
-    ).otherwise("fast")
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        j.select(
-            bucket.alias("bucket"),
-            F.when(is_high, 1).otherwise(0).alias("h"),
-            F.when(is_high, 0).otherwise(1).alias("l"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.sum("h").alias("high_line_count"),
-            F.sum("l").alias("low_line_count"),
-        )
-    )
-
-
-_TPCH_Q12_SQL = """
-SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) > 60
-            THEN 'slow' ELSE 'fast' END AS bucket,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY bucket
-"""
-
-
-def tpch_q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 supplier counts by part attributes, adapted (no
-    ``partsupp``: the part↔supplier relation is the distinct pairs that
-    actually traded in ``lineitem``; the "customer complaints" NOT IN
-    exclusion becomes suppliers with a negative account balance).
-
-    Scale shape: the excluded-supplier set is dim-sized and broadcast
-    as a LEFT ANTI join; part broadcasts into the lineitem pass; the
-    distinct-supplier count shuffles once on the (brand, type, size)
-    key with a partial distinct below it."""
-    part = (
-        load(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#1")
-            & (F.col("p_type") != "ECONOMY")
-            & F.col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    bad = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select(F.col("s_suppkey").alias("bad_suppkey"))
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(
-            F.broadcast(bad),
-            F.col("l_suppkey") == F.col("bad_suppkey"),
-            "left_anti",
-        )
-    )
-    return li.groupBy("p_brand", "p_type", "p_size").agg(
-        F.countDistinct("l_suppkey").alias("supplier_cnt")
-    )
-
-
-_TPCH_Q16_SQL = """
-SELECT p_brand, p_type, p_size,
-       count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_brand <> 'Brand#1' AND p_type <> 'ECONOMY'
-  AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-"""
-
-
-def tpch_q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 potential part promotion, adapted (no ``partsupp``
-    ``availqty``: a supplier qualifies when the total quantity of
-    ``red…`` parts it shipped during 1997 exceeds an exact integral
-    threshold of 100 units) — EUROPE suppliers, with the qualifying
-    quantity kept in the output so the hash certifies the aggregate,
-    not just the survivor set.
-
-    Scale shape: the part filter broadcasts into one lineitem pass;
-    the per-supplier sum shuffles on the suppkey; the supplier→nation→
-    region chain broadcasts into the (tiny) qualifying set."""
-    part = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("red%"))
-        .select("p_partkey")
-    )
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1998-01-01").cast("timestamp")
-    shipped = (
-        load(spark, sf_dir, "lineitem")
-        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"))
-        .filter(F.col("sum_qty") > 100)
-    )
-    rs = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(
-                load(spark, sf_dir, "region").filter(
-                    F.col("r_name") == "EUROPE"
-                )
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("s_suppkey", "s_name", "n_name")
-    )
-    return shipped.join(
-        F.broadcast(rs), F.col("l_suppkey") == F.col("s_suppkey")
-    ).select("s_suppkey", "s_name", "n_name", "sum_qty")
-
-
-_TPCH_Q20_SQL = """
-SELECT s_suppkey, s_name, n_name,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-FROM lineitem JOIN part ON p_partkey = l_partkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN nation ON n_nationkey = s_nationkey
-JOIN region ON r_regionkey = n_regionkey
-WHERE p_name LIKE 'red%' AND r_name = 'EUROPE'
-  AND l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY s_suppkey, s_name, n_name
-HAVING sum(CAST(l_quantity AS BIGINT)) > 100
-"""
-
-
-def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 suppliers who kept orders waiting, adapted (no
-    ``l_receiptdate``/``l_commitdate``: a line is LATE when it shipped
-    more than 60 days after the order date).  ASIA suppliers, orders
-    with status ``F``, where the supplier's line is late, ANOTHER
-    supplier also has a line on the order (EXISTS), and NO other
-    supplier's line is late (NOT EXISTS).
-
-    The Spark plan answers both correlated subqueries with ONE
-    per-order aggregate instead of two more joins against lineitem:
-    ``n_s`` = distinct suppliers on the order (EXISTS ⇔ n_s ≥ 2) and
-    ``n_late`` = distinct LATE suppliers (NOT EXISTS another late ⇔
-    n_late = 1, since l1's own supplier is late) — the oracle runs the
-    textbook EXISTS / NOT EXISTS form, certifying the rewrite
-    (verified equal at sf0.01 and sf0.1 during design).
-
-    Scale shape: lineitem joins orders once on the orderkey (the
-    unavoidable fact-fact sort-merge), the per-order distinct counts
-    are one map-side-combinable aggregate on the same key — reusing
-    the join partitioning, so no extra shuffle — and the region chain
-    broadcasts into the late-line probe."""
-    # interval addition, NOT date_add: date_add truncates the timestamp
-    # to a date, which would diverge from the oracle's timestamp-
-    # preserving `+ INTERVAL 60 DAY` on any order with a time-of-day
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
-        "INTERVAL 60 DAYS"
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(
-            load(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderdate", "o_orderstatus"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-    )
-    ostats = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.countDistinct("l_suppkey").alias("n_s"),
-        F.countDistinct(F.when(late, F.col("l_suppkey"))).alias("n_late"),
-    )
-    rs = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(
-                load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("s_suppkey", "s_name")
-    )
-    l1 = (
-        li.filter((F.col("o_orderstatus") == "F") & late)
-        .join(F.broadcast(rs), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(ostats, F.col("l_orderkey") == F.col("k"))
-        .filter((F.col("n_s") >= 2) & (F.col("n_late") == 1))
-    )
-    return l1.groupBy("s_name").agg(F.count(F.lit(1)).alias("numwait"))
-
-
-_TPCH_Q21_SQL = """
-SELECT s_name, count(*) AS numwait
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON r_regionkey = n_regionkey
-JOIN lineitem l1 ON l1.l_suppkey = s_suppkey
-JOIN orders ON o_orderkey = l1.l_orderkey
-WHERE r_name = 'ASIA' AND o_orderstatus = 'F'
-  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
-GROUP BY s_name
 """
 
 
@@ -4936,114 +3642,6 @@ FROM documents GROUP BY lang
 """
 
 
-def _money_cents(col: str):
-    """2-decimal double → exact integer cents (both engines round the
-    near-integer product identically; no half-way cases exist)."""
-    return F.round(F.col(col) * 100).cast("long")
-
-
-def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 pricing summary in integer money arithmetic: cents,
-    cents·(100−disc_c) and cents·(100−disc_c)·(100+tax_c) keep every
-    cross-row sum integer-exact (float sum order differs between
-    engines; fixed-point doesn't).  Headroom: ≤1.1e11 per row, so int64
-    holds sums beyond sf100.
-
-    Scale shape: one scan → partial (map-side) aggregate on a 4-value
-    composite key; the only shuffle moves #groups rows."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    cents = _money_cents("l_extendedprice")
-    disc = 100 - _money_cents("l_discount")
-    tax = 100 + _money_cents("l_tax")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        F.sum(cents).alias("sum_base_cents"),
-        F.sum(cents * disc).alias("sum_disc_e4"),
-        F.sum(cents * disc * tax).alias("sum_charge_e6"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-
-
-_TPCH_Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-         AS sum_base_cents,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-         AS sum_disc_e4,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))
-                * (100 + CAST(round(l_tax*100) AS BIGINT))) AS BIGINT)
-         AS sum_charge_e6,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shipping-priority top-10 by revenue: the customer dim is
-    filtered then BROADCAST (segment is 1/5 of an already-small dim);
-    orders and lineitem carry their date filters into the scan
-    (predicate pushdown), the big join shuffles on orderkey only.
-    Revenue in integer 10^-4 units; top-k totally ordered (revenue
-    desc, orderkey) so the row set is deterministic under ties.
-
-    Scale shape: broadcast hash join on the dim, one shuffle on the
-    fact key, global top-10 via ordered limit (takeOrdered — no full
-    sort materialization)."""
-    cutoff = F.lit("1998-03-15").cast("timestamp")
-    cust = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < cutoff)
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-    )
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
-    rev = (_money_cents("l_extendedprice")
-           * (100 - _money_cents("l_discount")))
-    return (
-        li.select(F.col("l_orderkey"), rev.alias("rev"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum("rev").alias("revenue_e4"))
-        .select(
-            "l_orderkey",
-            "revenue_e4",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-        )
-        .orderBy(F.desc("revenue_e4"), "l_orderkey")
-        .limit(10)
-    )
-
-
-_TPCH_Q3_SQL = """
-SELECT l_orderkey,
-       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-         AS revenue_e4,
-       strftime(o_orderdate, '%Y-%m-%d') AS orderdate
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15'
-  AND l_shipdate > TIMESTAMP '1998-03-15'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue_e4 DESC, l_orderkey
-LIMIT 10
-"""
-
-
 def compressed_distinct_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT answered from dictionary buffers alone
     (``plans.compressed.distinct_values``): a dict block's dictionary
@@ -6091,28 +4689,6 @@ QUERIES = {
     "incremental_scan_agg": incremental_scan_agg,
     "time_travel_agg": time_travel_agg,
     "schema_evolution_agg": schema_evolution_agg,
-    "tpch_q1_pricing": tpch_q1_pricing,
-    "tpch_q3_shipping": tpch_q3_shipping,
-    "tpch_q5_local_supplier": tpch_q5_local_supplier,
-    "tpch_q6_forecast": tpch_q6_forecast,
-    "tpch_q10_returns": tpch_q10_returns,
-    "tpch_q14_promo": tpch_q14_promo,
-    "tpch_q18_large_orders": tpch_q18_large_orders,
-    "tpch_q4_priority": tpch_q4_priority,
-    "tpch_q7_volume_shipping": tpch_q7_volume_shipping,
-    "tpch_q8_market_share": tpch_q8_market_share,
-    "tpch_q13_order_distribution": tpch_q13_order_distribution,
-    "tpch_q15_top_supplier": tpch_q15_top_supplier,
-    "tpch_q17_small_quantity": tpch_q17_small_quantity,
-    "tpch_q19_discounted_revenue": tpch_q19_discounted_revenue,
-    "tpch_q22_global_sales": tpch_q22_global_sales,
-    "tpch_q2_min_cost_supplier": tpch_q2_min_cost_supplier,
-    "tpch_q9_product_profit": tpch_q9_product_profit,
-    "tpch_q11_important_stock": tpch_q11_important_stock,
-    "tpch_q12_ship_priority": tpch_q12_ship_priority,
-    "tpch_q16_supplier_counts": tpch_q16_supplier_counts,
-    "tpch_q20_excess_shippers": tpch_q20_excess_shippers,
-    "tpch_q21_waiting_suppliers": tpch_q21_waiting_suppliers,
     "point_lookup_rows": point_lookup_rows,
     "limit_pushdown_scan": limit_pushdown_scan,
     "compressed_topk_zonemap": compressed_topk_zonemap,
@@ -6140,9 +4716,6 @@ QUERIES = {
     "mass_delete_where_agg": mass_delete_where_agg,
     "delete_vector_compaction_agg": delete_vector_compaction_agg,
     "catalog_sql_agg": catalog_sql_agg,
-    "tpch_q6_compressed": tpch_q6_compressed,
-    "tpch_q1_compressed": tpch_q1_compressed,
-    "tpch_q14_compressed": tpch_q14_compressed,
     "metadata_count_rows": metadata_count_rows,
     "null_count_pruned": null_count_pruned,
     "dsv2_pushdown_agg": dsv2_pushdown_agg,
@@ -6186,6 +4759,8 @@ QUERIES = {
     "for_encode_ts": for_encode_ts,
     "delta_encode_ts": delta_encode_ts,
     "alp_roundtrip_price": alp_roundtrip_price,
+    "bss_roundtrip_embedding": bss_roundtrip_embedding,
+    "html_text_extract": html_text_extract,
     "compressed_sum_where": compressed_sum_where,
     "bitpack_width_events": bitpack_width_events,
     "fsst_roundtrip_text": fsst_roundtrip_text,
@@ -6215,9 +4790,6 @@ ORACLE_SQL = {
     "mass_delete_where_agg": _MASS_DELETE_WHERE_AGG_SQL,
     "delete_vector_compaction_agg": _DELETE_VECTOR_COMPACTION_AGG_SQL,
     "catalog_sql_agg": _CATALOG_SQL_AGG_SQL,
-    "tpch_q6_compressed": _TPCH_Q6_COMPRESSED_SQL,
-    "tpch_q1_compressed": _TPCH_Q1_SQL,
-    "tpch_q14_compressed": _TPCH_Q14_SQL,
     "metadata_count_rows": _METADATA_COUNT_ROWS_SQL,
     "null_count_pruned": _NULL_COUNT_PRUNED_SQL,
     "dsv2_pushdown_agg": _DSV2_PUSHDOWN_AGG_SQL,
@@ -6244,28 +4816,6 @@ ORACLE_SQL = {
     "incremental_scan_agg": _INCREMENTAL_SCAN_AGG_SQL,
     "time_travel_agg": _TIME_TRAVEL_AGG_SQL,
     "schema_evolution_agg": _SCHEMA_EVOLUTION_AGG_SQL,
-    "tpch_q1_pricing": _TPCH_Q1_SQL,
-    "tpch_q3_shipping": _TPCH_Q3_SQL,
-    "tpch_q5_local_supplier": _TPCH_Q5_SQL,
-    "tpch_q6_forecast": _TPCH_Q6_SQL,
-    "tpch_q10_returns": _TPCH_Q10_SQL,
-    "tpch_q14_promo": _TPCH_Q14_SQL,
-    "tpch_q18_large_orders": _TPCH_Q18_SQL,
-    "tpch_q4_priority": _TPCH_Q4_SQL,
-    "tpch_q7_volume_shipping": _TPCH_Q7_SQL,
-    "tpch_q8_market_share": _TPCH_Q8_SQL,
-    "tpch_q13_order_distribution": _TPCH_Q13_SQL,
-    "tpch_q15_top_supplier": _TPCH_Q15_SQL,
-    "tpch_q17_small_quantity": _TPCH_Q17_SQL,
-    "tpch_q19_discounted_revenue": _TPCH_Q19_SQL,
-    "tpch_q22_global_sales": _TPCH_Q22_SQL,
-    "tpch_q2_min_cost_supplier": _TPCH_Q2_SQL,
-    "tpch_q9_product_profit": _TPCH_Q9_SQL,
-    "tpch_q11_important_stock": _TPCH_Q11_SQL,
-    "tpch_q12_ship_priority": _TPCH_Q12_SQL,
-    "tpch_q16_supplier_counts": _TPCH_Q16_SQL,
-    "tpch_q20_excess_shippers": _TPCH_Q20_SQL,
-    "tpch_q21_waiting_suppliers": _TPCH_Q21_SQL,
     "compressed_topk_zonemap": _COMPRESSED_TOPK_SQL,
     "compressed_quantile_hist": _COMPRESSED_QUANTILE_SQL,
     "compressed_eq_probe": _COMPRESSED_EQ_PROBE_SQL,
@@ -6303,6 +4853,8 @@ ORACLE_SQL = {
     "for_encode_ts": _FOR_ENCODE_TS_SQL,
     "delta_encode_ts": _DELTA_ENCODE_TS_SQL,
     "alp_roundtrip_price": _ALP_ROUNDTRIP_PRICE_SQL,
+    "bss_roundtrip_embedding": _BSS_ROUNDTRIP_SQL,
+    "html_text_extract": _HTML_TEXT_EXTRACT_SQL,
     "compressed_sum_where": _COMPRESSED_SUM_WHERE_SQL,
     "bitpack_width_events": _BITPACK_WIDTH_EVENTS_SQL,
     "fsst_roundtrip_text": _FSST_ROUNDTRIP_TEXT_SQL,

@@ -178,10 +178,6 @@ from pyrle_spark.streaming.late_drop_stream import (  # noqa: E402
     _STREAM_LATE_DROP_JOIN_SQL,
     stream_late_drop_join,
 )
-from pyrle_spark.streaming.sessionize_stream import (  # noqa: E402
-    _STREAM_SESSIONIZE_SQL,
-    stream_sessionize,
-)
 
 QUERIES = {
     "stream_windowed_counts": stream_windowed_counts,
@@ -190,7 +186,6 @@ QUERIES = {
     "stream_outer_interval_join": stream_outer_interval_join,
     "stream_dedup_within_watermark": stream_dedup_within_watermark,
     "stream_late_drop_join": stream_late_drop_join,
-    "stream_sessionize": stream_sessionize,
     "stream_exact_dedup": stream_exact_dedup,
 }
 ORACLE_SQL = {
@@ -200,6 +195,5 @@ ORACLE_SQL = {
     "stream_outer_interval_join": _STREAM_OUTER_INTERVAL_JOIN_SQL,
     "stream_dedup_within_watermark": _STREAM_DEDUP_WITHIN_WATERMARK_SQL,
     "stream_late_drop_join": _STREAM_LATE_DROP_JOIN_SQL,
-    "stream_sessionize": _STREAM_SESSIONIZE_SQL,
     "stream_exact_dedup": _STREAM_EXACT_DEDUP_SQL,
 }

@@ -100,6 +100,37 @@ def test_runny_ints_pick_rle_and_compress(pairs):
 
 
 @settings(max_examples=MAX_EXAMPLES, deadline=None)
+@given(st.lists(st.integers(0, 2**63 - 1), max_size=200), st.data())
+def test_bitpack_roundtrip(xs, data):
+    nulls = data.draw(st.lists(st.booleans(), min_size=len(xs), max_size=len(xs)))
+    arr = pa.array(_with_nulls(xs, nulls), type=pa.int64())
+    roundtrip(encode_with("bitpack", arr), arr)
+    roundtrip(encode_with("bitpack", arr, zstd=True), arr)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet="aé𝄞zÿ\n ", min_size=1, max_size=64))
+def test_run_profile_kernel_matches_naive(s):
+    """``exact_find_runs`` over a string's codepoints (utf-32
+    reinterpret) vs a character-loop oracle, over adversarial unicode:
+    multibyte chars, repeats, singletons."""
+    from pyrle_spark.codecs.rle_codec import exact_find_runs
+
+    cps = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    runs, vals = exact_find_runs(cps)
+    naive = []
+    for ch in s:
+        if naive and naive[-1][0] == ch:
+            naive[-1][1] += 1
+        else:
+            naive.append([ch, 1])
+    assert len(runs) == len(naive)
+    assert [int(r) for r in runs] == [n for _, n in naive]
+    assert [chr(v) for v in vals] == [c for c, _ in naive]
+    assert int(runs.max()) == max(n for _, n in naive)
+
+
+@settings(max_examples=MAX_EXAMPLES, deadline=None)
 @given(floats)
 def test_float_codecs_roundtrip(xs):
     arr = pa.array(xs, type=pa.float64())

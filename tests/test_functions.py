@@ -43,36 +43,6 @@ def test_fake_features_deterministic():
     assert len(a) == multimodal.N_BINS
 
 
-def test_run_profile_kernel_matches_naive():
-    """payload_run_profile's vectorized codepoint-run kernel
-    (utf-32 reinterpret → exact_find_runs) vs a character-loop oracle,
-    over adversarial unicode: multibyte chars, repeats, singletons."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from pyrle_spark.codecs.rle_codec import exact_find_runs
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.text(alphabet="aé𝄞zÿ\n ", min_size=1, max_size=64))
-    def check(s):
-        cps = np.frombuffer(
-            s.encode("utf-32-le"), dtype=np.uint32
-        ).astype(np.int64)
-        runs, vals = exact_find_runs(cps)
-        naive = []
-        for ch in s:
-            if naive and naive[-1][0] == ch:
-                naive[-1][1] += 1
-            else:
-                naive.append([ch, 1])
-        assert len(runs) == len(naive)
-        assert [int(r) for r in runs] == [n for _, n in naive]
-        assert [chr(v) for v in vals] == [c for c, _ in naive]
-        assert int(runs.max()) == max(n for _, n in naive)
-
-    check()
-
-
 def test_resize_images_plumbing(spark):
     """Resize plumbing: schema, determinism, payload is a pure function
     of (bytes, h, w), independent of partitioning."""
@@ -237,20 +207,6 @@ def test_star_cc_long_chain(spark):
     assert len(comp) == 51 + 3 + 4
 
 
-def test_int8_quantization_quality(spark):
-    """int8 quantization must actually work as a quantizer: q values in
-    [-127, 127], reconstruction error per element bounded by scale/2."""
-    import pyspark.sql.functions as F
-
-    from pyrle_spark.functions.quantize import embedding_int8_stats
-
-    stats = embedding_int8_stats(spark, SF_SMALL).toPandas()
-    assert len(stats) > 0
-    assert (stats["scale"] >= 0).all()
-    # per-element error <= scale/2 -> L2 over 64 dims <= scale/2 * 8
-    assert (stats["l2_err"] <= stats["scale"] / 2 * 8 + 1e-9).all()
-
-
 def test_kmeans_fit_improves_cells(spark):
     """Lloyd's on the embeddings: cost (mean 1-cosine to the assigned
     centroid) is monotonically non-increasing across iterations and
@@ -413,74 +369,6 @@ def test_bm25_rank_orders_by_relevance(spark, tmp_path):
     assert got[0] > got[1] > got[2] > 0
 
 
-def _write_events(spark, path, rows):
-    import datetime as _dt
-
-    base = _dt.datetime(2024, 1, 1)
-    spark.createDataFrame(
-        [
-            (i, base + _dt.timedelta(hours=h), u, t, 1.0, "{}")
-            for i, (u, t, h) in enumerate(rows)
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.parquet(f"{path}/events.parquet")
-
-
-def test_funnel_conversion_orders_strictly(spark, tmp_path):
-    """Stage k requires an event strictly after the first stage-k−1
-    event: a click BEFORE the first view must not convert stage 2."""
-    from pyrle_spark.functions.events import funnel_conversion
-
-    d = str(tmp_path / "funnel")
-    _write_events(
-        spark,
-        d,
-        [
-            # user 10 converts the whole funnel in order
-            (10, "view", 0), (10, "click", 1), (10, "purchase", 2),
-            # user 20 clicked before ever viewing: stage 1 only
-            (20, "click", 0), (20, "view", 1),
-            # user 30 views and clicks, purchase precedes the click
-            (30, "purchase", 0), (30, "view", 1), (30, "click", 2),
-            # user 40 never views
-            (40, "purchase", 0),
-        ],
-    )
-    got = {r["stage"]: r["n_users"] for r in funnel_conversion(spark, d).collect()}
-    assert got == {1: 3, 2: 2, 3: 1}
-
-
-def test_retention_cohorts_triangle(spark, tmp_path):
-    """Cohort = floor(epoch_days/7) of the user's first event; a user
-    active in cohort-week + k counts once at offset k."""
-    from pyrle_spark.functions.events import retention_cohorts
-
-    d = str(tmp_path / "retention")
-    wk = 24 * 7  # hours per week
-    _write_events(
-        spark,
-        d,
-        [
-            (1, "view", 0), (1, "view", 1), (1, "view", wk),  # offsets 0, 1(wk)
-            (2, "view", 0), (2, "view", 2 * wk),
-            (3, "view", wk),  # later cohort
-        ],
-    )
-    got = {
-        (r["cohort_week"], r["week_offset"]): r["n_users"]
-        for r in retention_cohorts(spark, d).collect()
-    }
-    # epoch week of 2024-01-01 = floor(19723 / 7) = 2817
-    w0 = 19723 // 7
-    assert got == {
-        (w0, 0): 2,  # users 1 and 2 in their first week
-        (w0, 1): 1,  # user 1 back one week later
-        (w0, 2): 1,  # user 2 back two weeks later
-        (w0 + 1, 0): 1,  # user 3's own cohort
-    }
-
-
 def test_dataset_split_deterministic_and_proportional(spark):
     """Split assignment is a pure function of doc_id + salt (two runs
     identical) and globally close to the 80/10/10 boundaries."""
@@ -497,47 +385,6 @@ def test_dataset_split_deterministic_and_proportional(spark):
     assert totals["train"] + totals.get("val", 0) + totals.get("test", 0) == n_all
 
 
-def test_sequence_packing_offsets_contiguous(spark):
-    """Per lang, offsets are an exact exclusive prefix sum in doc_id
-    order (the bucketed two-pass scan equals the naive sequential one)
-    and chunk spans are consistent with the offsets."""
-    from pyrle_spark.functions.lm import CHUNK_TOKENS, sequence_packing
-
-    rows = sequence_packing(spark, SF_SMALL).collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r)
-    assert len(rows) == 500
-    for lang, rs in by_lang.items():
-        rs.sort(key=lambda r: r["doc_id"])
-        running = 0
-        for r in rs:
-            assert r["tok_offset"] == running, (lang, r["doc_id"])
-            assert r["first_chunk"] == r["tok_offset"] // CHUNK_TOKENS
-            assert (
-                r["last_chunk"] == (r["tok_offset"] + r["toks"] - 1) // CHUNK_TOKENS
-            )
-            assert r["n_chunks"] == r["last_chunk"] - r["first_chunk"] + 1 >= 1
-            running += r["toks"]
-
-
-def test_lm_novelty_bounds_and_split(spark):
-    """Novelty rows cover exactly the held-out split; unseen counts are
-    bounded by bigram counts; the terminal ratio matches the integers."""
-    from pyrle_spark.functions.lm import TRAIN_MOD, lm_bigram_novelty
-
-    rows = lm_bigram_novelty(spark, SF_SMALL).collect()
-    assert rows and all(r["doc_id"] % TRAIN_MOD == 0 for r in rows)
-    for r in rows:
-        assert 0 <= r["n_unseen"] <= r["n_bigrams"]
-        if r["n_bigrams"] == 0:
-            assert r["seen_frac"] is None
-        else:
-            assert r["seen_frac"] == pytest.approx(
-                (r["n_bigrams"] - r["n_unseen"]) / r["n_bigrams"]
-            )
-
-
 def test_semdedup_drops_exactly_injected(spark):
     """The injected scaled duplicates (and only they) are dropped: the
     natural corpus has no within-cluster pair above SEM_TAU, and the
@@ -551,29 +398,6 @@ def test_semdedup_drops_exactly_injected(spark):
     rows = semdedup_keep(spark, SF_SMALL).collect()
     dropped = {r["vec_id"] for r in rows if r["kept"] == 0}
     assert dropped == {SEM_DUP_OFFSET + i for i in range(N_SEM_DUP)}
-
-
-def test_bpe_pair_counts_matches_python(spark, ducks):
-    """Top-20 adjacent character pairs equal a pure-python recount."""
-    from collections import Counter
-
-    from pyrle_spark.functions.lm import TOP_PAIRS, bpe_pair_counts
-
-    texts = [
-        t
-        for (t,) in ducks.sql("SELECT text FROM documents").fetchall()
-    ]
-    counts = Counter()
-    for t in texts:
-        for w in t.strip().split():
-            for i in range(len(w) - 1):
-                counts[w[i : i + 2]] += 1
-    expected = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_PAIRS]
-    got = sorted(
-        ((r["pair"], r["n"]) for r in bpe_pair_counts(spark, SF_SMALL).collect()),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    assert got == expected
 
 
 def test_winnow_guarantee_floor(spark, tmp_path):
@@ -601,53 +425,6 @@ def test_winnow_guarantee_floor(spark, tmp_path):
     }
     assert set(pairs) == {(0, 1)}
     assert pairs[(0, 1)] >= 1
-
-
-def test_bpe_learn_and_apply_match_python(spark, ducks):
-    """Full BPE induction loop: 5 learned merges (vocab-table trainer,
-    frequency-weighted, lexicographic tie-break) and the fold-based
-    tokenizer both equal a pure-python BPE over the same corpus."""
-    from collections import Counter
-
-    from pyrle_spark.functions.lm import bpe_apply, bpe_learn
-
-    texts = [t for (t,) in ducks.sql("SELECT text FROM documents").fetchall()]
-    wfreq = Counter(w for t in texts for w in t.strip().split())
-
-    def py_merge(sym, a, b):
-        out = []
-        for s in sym:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        return out
-
-    vocab = {w: list(w) for w in wfreq}
-    ref = []
-    for _ in range(5):
-        pc = Counter()
-        for w, sym in vocab.items():
-            for i in range(len(sym) - 1):
-                pc[(sym[i], sym[i + 1])] += wfreq[w]
-        if not pc:
-            break
-        top = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-        ref.append(top)
-        vocab = {w: py_merge(sym, *top) for w, sym in vocab.items()}
-
-    merges = bpe_learn(spark, SF_SMALL, rounds=5)
-    assert merges == ref
-
-    df = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(8)
-    for r in bpe_apply(df, "text", merges).collect():
-        sym = []
-        for w in r["text"].strip().split():
-            s = list(w)
-            for a, b in merges:
-                s = py_merge(s, a, b)
-            sym.extend(s)
-        assert r["tokens"] == sym and r["n_tokens"] == len(sym)
 
 
 def test_lsh_hot_bucket_guards(spark, tmp_path):
