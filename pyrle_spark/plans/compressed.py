@@ -10,9 +10,13 @@ value* (rle codec) — the expensive byte payload is never rebuilt.  Only
 codecs with no value structure (fsst / raw) fall back to decoding the
 single column.
 
-Scale shape: one ``mapInArrow`` pass over the blocks manifest emits
-O(distinct-per-block) partial rows; ONE shuffle aggregates
-O(#blocks × distinct) partials to the final histogram.  No row data is
+Scale shape: every aggregate here is one read of the read planner
+(:mod:`~pyrle_spark.plans.read_plan`).  ``plan_read`` picks the blocks
+in the driver — resume-dedup winners, rename aliases, zone and bloom
+pruning on the aggregate's predicate, fully deleted blocks dropped — and
+:func:`_read_partials` runs one ``read_blocks`` pass over them: each
+block, with its merge-on-read deletes, maps to O(distinct-per-block)
+partial rows, and one small aggregate merges them.  No row data is
 shuffled, and for dict/rle blocks no row data is even decoded.
 """
 
@@ -25,15 +29,8 @@ from pyspark.sql import functions as F
 
 from pyrle_spark.codecs import Encoded
 from pyrle_spark.codecs.rawcodec import ZstdCodec
-from pyrle_spark.plans.encode_job import (
-    _session_tz,
-    dedup_blocks,
-    physical_column,
-    prune_blocks_eq,
-    prune_blocks_in,
-)
+from pyrle_spark.plans.encode_job import _session_tz
 from pyrle_spark.plans.read_plan import _range_mask, plan_read, read_blocks
-from pyrle_spark.sources.icetable import IceTable
 
 __all__ = [
     "count_nulls",
@@ -50,21 +47,82 @@ __all__ = [
     "topk_below_decode",
 ]
 
-_NULL_SENTINEL = None  # null slots aggregate into a NULL value row
+_SPARK_TYPE = {"string": "string", "int64": "long", "double": "double"}
+_VALUE_N = pa.schema([("value", pa.string()), ("n_rows", pa.int64())])
+_N = pa.schema([("n", pa.int64())])
 
 
-def _delete_map(table_dir: str, snapshot_id, block_rows: int) -> dict:
-    """{block_id: np.array(in-block deleted offsets)} visible at the
-    snapshot — the merge-on-read position deletes of
-    :func:`pyrle_spark.plans.encode_job.delete_rows`.  Driver-resident
-    and O(deleted rows); closures ship it to the Arrow passes so
-    compressed-domain answers agree with the decode path."""
-    from pyrle_spark.plans.encode_job import _delete_positions
+# ---------------------------------------------------------- planned reads
 
-    dmap: dict = {}
-    for p in _delete_positions(table_dir, snapshot_id):
-        dmap.setdefault(p // block_rows, []).append(p % block_rows)
-    return {b: np.asarray(v, dtype=np.int64) for b, v in dmap.items()}
+
+def _plan_blocks(spark, table_dir, columns, snapshot_id, filter_col=None,
+                 lo=None, hi=None, predicates=(), incomplete="raise"):
+    """Plan the blocks of ``columns`` with the read planner — resume
+    dedup, aliases, deletes and pruning all happen in the driver.  Given
+    ``filter_col``, blocks whose zone misses ``[lo, hi]`` are pruned and
+    the returned ``(plan, lo, hi)`` carry the bounds in the filter
+    column's physical domain (integer-clamped, epoch units for
+    timestamps), so every codec tier compares like with like.
+    ``predicates``: further :func:`~pyrle_spark.plans.read_plan.plan_read`
+    conjuncts, for pruning only."""
+    preds = [(filter_col, lo, hi)] if filter_col is not None else []
+    plan = plan_read(
+        table_dir,
+        columns=columns,
+        predicates=preds + list(predicates),
+        snapshot_id=snapshot_id,
+        session_tz=_session_tz(spark),
+        incomplete=incomplete,
+    )
+    if preds:
+        b = plan.preds[0].bounds(plan.types.get(filter_col))
+        if b is not None:
+            lo, hi = b[1], b[2]
+    return plan, lo, hi
+
+
+def _read_partials(spark, plan, columns, step, schema: pa.Schema) -> DataFrame:
+    """The one block reader of this module: a ``read_blocks`` pass over
+    ``plan``.  ``step(blk, *encs)`` gets a planned block (its id and
+    deleted offsets ``blk.kill``) and its ``Encoded`` for each logical
+    column of ``columns`` (None where the block lacks it), and returns
+    the block's partial rows as ``{field: list}`` (None = no rows).  Each
+    task emits its blocks' rows as one batch of ``schema``."""
+    phys = [plan.phys_of.get(c) for c in columns]
+    names = schema.names
+
+    def run(blocks):
+        out = {f: [] for f in names}
+        for blk in blocks:
+            rows = step(blk, *[blk.cols.get(p) for p in phys])
+            if rows:
+                for f in names:
+                    out[f].extend(rows[f])
+        yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+    ddl = ", ".join(f"{f.name} {_SPARK_TYPE[str(f.type)]}" for f in schema)
+    return read_blocks(spark, plan, run, ddl)
+
+
+# ------------------------------------------------------- per-block decoding
+
+
+def _unwrap(enc: Encoded):
+    """``(codec, meta, buffers)`` of a block with any ``+zstd`` wrapper
+    removed: the inner codec's layout, which every tier reads."""
+    if enc.codec.endswith("+zstd"):
+        meta, buffers = ZstdCodec.unwrap(enc.meta, enc.buffers)
+        return enc.codec[: -len("+zstd")], meta, buffers
+    return enc.codec, enc.meta, enc.buffers
+
+
+def _valid_bits(meta: dict, buffers: dict, n_rows: int):
+    """The block's validity as a bool array, or None (no null slot)."""
+    if not meta.get("has_validity"):
+        return None
+    return np.unpackbits(
+        np.frombuffer(buffers["validity"], dtype=np.uint8), count=n_rows
+    ).astype(bool)
 
 
 def _keep_mask(n: int, kill: np.ndarray) -> np.ndarray:
@@ -73,72 +131,163 @@ def _keep_mask(n: int, kill: np.ndarray) -> np.ndarray:
     return keep
 
 
+def _decode_live(enc: Encoded, kill) -> pa.Array:
+    """The block's column, decoded, without its merge-on-read deleted
+    rows — the exact tier every aggregate falls back to."""
+    from pyrle_spark.codecs import decode_array
+
+    arr = decode_array(enc)
+    if kill is not None and len(kill):
+        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
+    return arr
+
+
+def _native_values(arr: pa.Array):
+    """``(valid, values)`` numpy arrays of a decoded numeric column in its
+    NATIVE domain: integers as int64, timestamps as int64 epoch units of
+    their type (like the rle/dict tiers' stored values and the planned
+    bounds), everything else as float64; null slots read 0."""
+    valid = np.asarray(arr.is_valid(), dtype=bool)
+    if pa.types.is_timestamp(arr.type):
+        a = np.asarray(arr.cast(pa.int64()).fill_null(0), dtype=np.int64)
+    elif pa.types.is_integer(arr.type):
+        a = np.asarray(arr.fill_null(0), dtype=np.int64)
+    else:
+        a = np.asarray(arr.fill_null(0), dtype=np.float64)
+    return valid, a
+
+
+def _rle_runs_codes(meta: dict, buffers: dict):
+    """(runs, vals) of an (unwrapped) fixed no-validity rle block, or
+    None when the layout doesn't apply."""
+    from pyrle_spark.codecs.bitpack import ForCodec
+
+    if meta.get("kind") != "fixed" or meta.get("has_validity"):
+        return None
+    runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
+    if meta["vals_mode"] == "for":
+        vals = ForCodec.decode(meta["vals_meta"], {"packed": buffers["values"]})
+    else:
+        vals = np.frombuffer(
+            buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
+        )
+    return runs.astype(np.int64), vals
+
+
+def _dict_codes(meta: dict, buffers: dict):
+    """The code stream of an (unwrapped) dict block."""
+    from pyrle_spark.codecs.dictionary import _decode_codes
+
+    cbuf = {
+        k[len("codes_") :]: v for k, v in buffers.items() if k.startswith("codes_")
+    }
+    return _decode_codes(meta["codes_mode"], meta["codes_meta"], cbuf)
+
+
+def _dict_fixed_codes(codec: str, meta: dict, buffers: dict):
+    """(codes int64, uniques) of an (unwrapped) fixed-width dict block
+    without a validity bitmap, or None when the layout doesn't apply.
+    Float dictionaries are stored as bit patterns; ``uniques`` views them
+    back as floats."""
+    if codec != "dict" or meta.get("kind") != "fixed" or meta.get("has_validity"):
+        return None
+    codes = np.asarray(_dict_codes(meta, buffers), dtype=np.int64)
+    uniques = np.frombuffer(buffers["dict_data"], dtype=np.dtype(meta["dict_dtype"]))
+    if meta.get("orig_dtype"):
+        uniques = uniques.view(np.dtype(meta["orig_dtype"]))
+    return codes, uniques
+
+
+def _dict_codes_and_values(codec: str, meta: dict, buffers: dict, n_rows: int):
+    """(codes int array, values list, valid bool array | None) of an
+    (unwrapped) var-width dict block — the column never materializes
+    rows — or None when the layout doesn't apply."""
+    if codec != "dict" or meta["kind"] != "var":
+        return None
+    return (
+        _dict_codes(meta, buffers),
+        _dict_values(meta, buffers),
+        _valid_bits(meta, buffers, n_rows),
+    )
+
+
+def _dict_values(meta: dict, buffers: dict) -> list:
+    """The dictionary's value list from an (unwrapped) var-width dict
+    block's buffers — the ONE place the offsets/data layout is parsed."""
+    from pyrle_spark.codecs.bitpack import DeltaCodec
+
+    dict_offsets = DeltaCodec.decode(
+        meta["dict_offsets_meta"], {"packed": buffers["dict_offsets"]}
+    )
+    dict_data = buffers["dict_data"]
+    return [
+        bytes(dict_data[dict_offsets[i] : dict_offsets[i + 1]]).decode(
+            "utf-8", "surrogateescape"
+        )
+        for i in range(meta["n_dict"])
+    ]
+
+
+def _strs(values) -> list:
+    return [None if v is None else str(v) for v in values]
+
+
+# --------------------------------------------------- single-column aggregates
+
+
 def _block_value_counts(enc: Encoded, kill: np.ndarray | None = None):
     """(values: list, counts: np.ndarray, n_nulls: int) for one block —
     via codes/runs when the codec allows, full single-column decode
     otherwise.  ``kill``: in-block offsets deleted by merge-on-read —
     an affected block takes the exact decode-and-mask path (affected
     blocks are O(deleted)/block_rows of the table)."""
-    from pyrle_spark.codecs import decode_array
-
-    if kill is not None and len(kill):
-        arr = decode_array(enc)
-        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
-        vc = arr.drop_null().value_counts()
-        return (
-            vc.field("values").to_pylist(),
-            np.asarray(vc.field("counts")),
-            arr.null_count,
-        )
-
-    # dict blocks: counts straight off the code stream — ONE shared
-    # buffer-unpacking path (_dict_codes_and_values) for all of
-    # count_by_value / sum_by_value / distinct_values
-    packed = _dict_codes_and_values(enc)
-    if packed is not None:
-        codes, values, valid = packed
-        n_nulls = int((~valid).sum()) if valid is not None else 0
-        if valid is not None:
-            codes = codes[valid]
-        counts = np.bincount(codes, minlength=len(values))
-        keep = counts > 0
-        return (
-            [v for v, k in zip(values, keep) if k],
-            counts[keep],
-            n_nulls,
-        )
-    meta, buffers = enc.meta, enc.buffers
-    codec = enc.codec
-    if codec.endswith("+zstd"):
-        codec = codec[: -len("+zstd")]
-        meta, buffers = ZstdCodec.unwrap(meta, buffers)
-    valid = None
-    if meta.get("has_validity"):
-        valid = np.unpackbits(
-            np.frombuffer(buffers["validity"], dtype=np.uint8), count=enc.n_rows
-        ).astype(bool)
-    kind = meta["kind"]
-    if codec == "rle" and kind == "fixed" and valid is None:
-        from pyrle_spark.codecs.rle_codec import RleCodec
-        from pyrle_spark.codecs.bitpack import ForCodec
-
-        runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
-        if meta["vals_mode"] == "for":
-            vals = ForCodec.decode(meta["vals_meta"], {"packed": buffers["values"]})
-        else:
-            vals = np.frombuffer(
-                buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
+    if kill is None or not len(kill):
+        codec, meta, buffers = _unwrap(enc)
+        # dict blocks: counts straight off the code stream — ONE shared
+        # buffer-unpacking path (_dict_codes_and_values) for all of
+        # count_by_value / sum_by_value / distinct_values
+        packed = _dict_codes_and_values(codec, meta, buffers, enc.n_rows)
+        if packed is not None:
+            codes, values, valid = packed
+            n_nulls = int((~valid).sum()) if valid is not None else 0
+            if valid is not None:
+                codes = codes[valid]
+            counts = np.bincount(codes, minlength=len(values))
+            keep = counts > 0
+            return (
+                [v for v, k in zip(values, keep) if k],
+                counts[keep],
+                n_nulls,
             )
-        uniq, inv = np.unique(vals, return_inverse=True)
-        counts = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(counts, inv, runs.astype(np.int64))
-        return [x.item() for x in uniq], counts, 0
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" else None
+        if rv is not None:
+            runs, vals = rv
+            uniq, inv = np.unique(vals, return_inverse=True)
+            counts = np.zeros(len(uniq), dtype=np.int64)
+            np.add.at(counts, inv, runs)
+            return [x.item() for x in uniq], counts, 0
     # fallback: decode the one column and count exactly
-    arr = decode_array(enc)
+    arr = _decode_live(enc, kill)
     vc = arr.drop_null().value_counts()
-    values = vc.field("values").to_pylist()
-    counts = np.asarray(vc.field("counts"))
-    return values, counts, arr.null_count
+    return (
+        vc.field("values").to_pylist(),
+        np.asarray(vc.field("counts")),
+        arr.null_count,
+    )
+
+
+def _value_counts(spark, plan, column: str) -> DataFrame:
+    def step(blk, enc):
+        values, counts, n_nulls = _block_value_counts(enc, blk.kill)
+        out_v = [str(v) for v in values]
+        out_n = [int(c) for c in counts]
+        if n_nulls:
+            out_v.append(None)
+            out_n.append(n_nulls)
+        return {"value": out_v, "n_rows": out_n}
+
+    partial = _read_partials(spark, plan, [column], step, _VALUE_N)
+    return partial.groupBy("value").agg(F.sum("n_rows").alias("n_rows"))
 
 
 def count_by_value(
@@ -146,46 +295,14 @@ def count_by_value(
     table_dir: str,
     column: str,
     snapshot_id: str | None = None,
-    blocks: DataFrame | None = None,
 ) -> DataFrame:
     """``SELECT column, count(*) GROUP BY column`` computed from the
     encoded blocks.  Returns (value string, n_rows long); null slots
-    aggregate into a NULL value row.  ``blocks``: optional survivor
-    list (from the prune family) to restrict the scan.  Merge-on-read
-    deletes apply: affected blocks decode-and-mask, so the histogram
-    equals the decode path's."""
-    table = IceTable(table_dir)
-    column = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = table.read_table(spark, snapshot_id).filter(F.col("column") == column)
-    if blocks is not None:
-        enc = enc.join(
-            F.broadcast(blocks.select("block_id").distinct()), "block_id", "left_semi"
-        )
-    enc = dedup_blocks(enc)
-
-    def _partials(batches):
-        for batch in batches:
-            out_v: list = []
-            out_n: list = []
-            for row in batch.to_pylist():
-                e = Encoded.from_row(row)
-                values, counts, n_nulls = _block_value_counts(
-                    e, dmap.get(row["block_id"])
-                )
-                out_v.extend(str(v) for v in values)
-                out_n.extend(int(c) for c in counts)
-                if n_nulls:
-                    out_v.append(None)
-                    out_n.append(n_nulls)
-            yield pa.RecordBatch.from_pydict(
-                {"value": out_v, "n_rows": out_n},
-                schema=pa.schema([("value", pa.string()), ("n_rows", pa.int64())]),
-            )
-
-    partial = enc.mapInArrow(_partials, "value string, n_rows long")
-    return partial.groupBy("value").agg(F.sum("n_rows").alias("n_rows"))
+    aggregate into a NULL value row.  Merge-on-read deletes apply:
+    affected blocks decode-and-mask, so the histogram equals the decode
+    path's."""
+    plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
+    return _value_counts(spark, plan, column)
 
 
 def _block_numeric_stats(enc: Encoded, kill: np.ndarray | None = None):
@@ -195,44 +312,16 @@ def _block_numeric_stats(enc: Encoded, kill: np.ndarray | None = None):
     payload array — never any other column.  ``kill``: deleted in-block
     offsets → exact decode-and-mask (min/max cannot be subtracted, the
     block recomputes over the kept rows)."""
-    from pyrle_spark.codecs import decode_array
-
-    if kill is not None and len(kill):
-        arr = decode_array(enc)
-        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
-        a = np.asarray(arr.drop_null(), dtype=np.float64)
-        if len(a) == 0:
-            return 0, 0.0, None, None
-        return len(a), float(a.sum()), float(a.min()), float(a.max())
-
-    meta = enc.meta
-    codec = enc.codec
-    buffers = enc.buffers
-    if codec.endswith("+zstd"):
-        # unwrap like _block_value_counts does — else rle+zstd blocks
-        # silently miss the run-fold fast path and fully decode
-        codec = codec[: -len("+zstd")]
-        meta, buffers = ZstdCodec.unwrap(meta, buffers)
-    if (
-        codec == "rle"
-        and meta.get("kind") == "fixed"
-        and not meta.get("has_validity")
-    ):
-        from pyrle_spark.codecs.bitpack import ForCodec
-
-        runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
-        if meta["vals_mode"] == "for":
-            vals = ForCodec.decode(meta["vals_meta"], {"packed": buffers["values"]})
-        else:
-            vals = np.frombuffer(
-                buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
-            )
-        if len(vals) == 0:
-            return 0, 0.0, None, None
-        total = float(np.sum(runs.astype(np.float64) * vals.astype(np.float64)))
-        return int(runs.sum()), total, float(vals.min()), float(vals.max())
-    arr = decode_array(enc)
-    a = np.asarray(arr.drop_null(), dtype=np.float64)
+    if kill is None or not len(kill):
+        codec, meta, buffers = _unwrap(enc)
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" else None
+        if rv is not None:
+            runs, vals = rv
+            if len(vals) == 0:
+                return 0, 0.0, None, None
+            total = float(np.sum(runs.astype(np.float64) * vals.astype(np.float64)))
+            return int(runs.sum()), total, float(vals.min()), float(vals.max())
+    a = np.asarray(_decode_live(enc, kill).drop_null(), dtype=np.float64)
     if len(a) == 0:
         return 0, 0.0, None, None
     return len(a), float(a.sum()), float(a.min()), float(a.max())
@@ -243,7 +332,6 @@ def numeric_stats(
     table_dir: str,
     column: str,
     snapshot_id: str | None = None,
-    blocks: DataFrame | None = None,
 ) -> DataFrame:
     """``SELECT count, sum, min, max`` of a numeric column from the
     encoded blocks — one row out.  rle blocks never expand their runs;
@@ -252,41 +340,17 @@ def numeric_stats(
 
     Note: ``sum`` accumulates in float64 per block then across blocks —
     exact for int payloads up to 2^53 per the usual float-sum caveat."""
-    table = IceTable(table_dir)
-    column = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = table.read_table(spark, snapshot_id).filter(F.col("column") == column)
-    if blocks is not None:
-        enc = enc.join(
-            F.broadcast(blocks.select("block_id").distinct()), "block_id", "left_semi"
-        )
-    enc = dedup_blocks(enc)
+    plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
 
-    def _partials(batches):
-        for batch in batches:
-            rows = {"n": [], "total": [], "vmin": [], "vmax": []}
-            for row in batch.to_pylist():
-                n, total, vmin, vmax = _block_numeric_stats(
-                    Encoded.from_row(row), dmap.get(row["block_id"])
-                )
-                rows["n"].append(n)
-                rows["total"].append(total)
-                rows["vmin"].append(vmin)
-                rows["vmax"].append(vmax)
-            yield pa.RecordBatch.from_pydict(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("n", pa.int64()),
-                        ("total", pa.float64()),
-                        ("vmin", pa.float64()),
-                        ("vmax", pa.float64()),
-                    ]
-                ),
-            )
+    def step(blk, enc):
+        n, total, vmin, vmax = _block_numeric_stats(enc, blk.kill)
+        return {"n": [n], "total": [total], "vmin": [vmin], "vmax": [vmax]}
 
-    partial = enc.mapInArrow(_partials, "n long, total double, vmin double, vmax double")
+    schema = pa.schema(
+        [("n", pa.int64()), ("total", pa.float64()),
+         ("vmin", pa.float64()), ("vmax", pa.float64())]
+    )
+    partial = _read_partials(spark, plan, [column], step, schema)
     return partial.agg(
         F.sum("n").alias("n_rows"),
         F.sum("total").alias("sum_value"),
@@ -308,71 +372,31 @@ def _block_filtered_stats(
       values never materialize;
     - everything else decodes the single column and masks.
 
-    Nulls are excluded (SQL comparison semantics), and NaN never matches
-    a range predicate on any path.  ``kill``: deleted in-block offsets →
-    exact decode-and-mask fallback."""
-    from pyrle_spark.codecs import decode_array
-    from pyrle_spark.codecs.bitpack import ForCodec
-
-    lo_ = -np.inf if lo is None else lo
-    hi_ = np.inf if hi is None else hi
-    if kill is not None and len(kill):
-        arr = decode_array(enc)
-        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
-    else:
-        meta, codec, buffers = enc.meta, enc.codec, enc.buffers
-        if codec.endswith("+zstd"):
-            codec = codec[: -len("+zstd")]
-            meta, buffers = ZstdCodec.unwrap(meta, buffers)
-        if (
-            codec == "rle"
-            and meta.get("kind") == "fixed"
-            and not meta.get("has_validity")
-        ):
-            runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
-            if meta["vals_mode"] == "for":
-                vals = ForCodec.decode(
-                    meta["vals_meta"], {"packed": buffers["values"]}
-                )
-            else:
-                vals = np.frombuffer(
-                    buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
-                )
-            m = (vals >= lo_) & (vals <= hi_)
-            n = int(runs[m].sum())
+    Every tier compares via :func:`_range_mask` in the column's native
+    domain (int64, epoch units for timestamps), so the codec never
+    changes the count.  Nulls are excluded (SQL comparison semantics),
+    and NaN never matches.  ``kill``: deleted in-block offsets → exact
+    decode-and-mask fallback."""
+    if kill is None or not len(kill):
+        codec, meta, buffers = _unwrap(enc)
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" else None
+        if rv is not None:
+            runs, vals = rv
+            m = _range_mask(vals, lo, hi)
             total = float(
                 np.sum(runs[m].astype(np.float64) * vals[m].astype(np.float64))
             )
-            return n, total
-        if (
-            codec == "dict"
-            and meta.get("kind") == "fixed"
-            and not meta.get("has_validity")
-        ):
-            from pyrle_spark.codecs.dictionary import _decode_codes
-
-            cbuf = {
-                k[len("codes_") :]: v
-                for k, v in buffers.items()
-                if k.startswith("codes_")
-            }
-            codes = _decode_codes(meta["codes_mode"], meta["codes_meta"], cbuf)
-            uniques = np.frombuffer(
-                buffers["dict_data"], dtype=np.dtype(meta["dict_dtype"])
-            )
-            if meta.get("orig_dtype"):
-                uniques = uniques.view(np.dtype(meta["orig_dtype"]))
-            m = (uniques >= lo_) & (uniques <= hi_)
-            counts = np.bincount(
-                np.asarray(codes, dtype=np.int64), minlength=meta["n_dict"]
-            ).astype(np.int64)
-            n = int(counts[m].sum())
+            return int(runs[m].sum()), total
+        fx = _dict_fixed_codes(codec, meta, buffers)
+        if fx is not None:
+            codes, uniques = fx
+            m = _range_mask(uniques, lo, hi)
+            counts = np.bincount(codes, minlength=len(uniques))
             total = float(np.sum(counts[m] * uniques[m].astype(np.float64)))
-            return n, total
-        arr = decode_array(enc)
-    a = np.asarray(arr.drop_null(), dtype=np.float64)
-    m = (a >= lo_) & (a <= hi_)
-    return int(m.sum()), float(a[m].sum())
+            return int(counts[m].sum()), total
+    valid, a = _native_values(_decode_live(enc, kill))
+    m = valid & _range_mask(a, lo, hi)
+    return int(m.sum()), float(a[m].astype(np.float64).sum())
 
 
 def filtered_numeric_agg(
@@ -384,35 +408,27 @@ def filtered_numeric_agg(
     snapshot_id: str | None = None,
 ) -> DataFrame:
     """``SELECT count(*), sum(col) WHERE lo <= col <= hi`` from the
-    encoded blocks, with the predicate pushed BELOW decode: rle blocks
-    filter on run values and fold, fixed dict blocks filter on the
-    dictionary and histogram the codes, everything else decodes only
-    the one column.  One row out; nulls excluded; same float64
+    encoded blocks, with the predicate pushed BELOW decode: blocks whose
+    zone misses the range are never read, rle blocks filter on run
+    values and fold, fixed dict blocks filter on the dictionary and
+    histogram the codes, everything else decodes only the one column.
+    The bounds are compared in the column's physical domain (a datetime
+    bound on a timestamp column reads in its epoch units).  One row out;
+    nulls excluded; ``sum_match`` is 0 when no row matches; same float64
     accumulation caveat as :func:`numeric_stats`."""
-    table = IceTable(table_dir)
-    column = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = table.read_table(spark, snapshot_id).filter(F.col("column") == column)
-    enc = dedup_blocks(enc)
+    plan, lo, hi = _plan_blocks(
+        spark, table_dir, [column], snapshot_id, column, lo, hi
+    )
 
-    def _partials(batches):
-        for batch in batches:
-            ns, ts = [], []
-            for row in batch.to_pylist():
-                n, t = _block_filtered_stats(
-                    Encoded.from_row(row), lo, hi, dmap.get(row["block_id"])
-                )
-                ns.append(n)
-                ts.append(t)
-            yield pa.RecordBatch.from_pydict(
-                {"n": ns, "total": ts},
-                schema=pa.schema([("n", pa.int64()), ("total", pa.float64())]),
-            )
+    def step(blk, enc):
+        n, t = _block_filtered_stats(enc, lo, hi, blk.kill)
+        return {"n": [n], "total": [t]}
 
-    partial = enc.mapInArrow(_partials, "n long, total double")
+    schema = pa.schema([("n", pa.int64()), ("total", pa.float64())])
+    partial = _read_partials(spark, plan, [column], step, schema)
     return partial.agg(
-        F.sum("n").alias("n_match"), F.sum("total").alias("sum_match")
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_match"),
+        F.coalesce(F.sum("total"), F.lit(0.0)).alias("sum_match"),
     )
 
 
@@ -425,18 +441,18 @@ def topk_below_decode(
     snapshot_id: str | None = None,
 ) -> DataFrame:
     """Exact ``ORDER BY value_col DESC, id_col LIMIT k`` with block
-    decode gated by the manifest zone maps — the late-materialization
-    top-k of classic column stores (the generalization of pyrle's
-    run-level shortcuts: answer from structure first, touch payload
-    last; reference ``pyrle/rle.py:931-959`` computes stats from runs
-    the same way).
+    decode gated by the zone maps — the late-materialization top-k of
+    classic column stores (the generalization of pyrle's run-level
+    shortcuts: answer from structure first, touch payload last;
+    reference ``pyrle/rle.py:931-959`` computes stats from runs the same
+    way).
 
-    Two manifest-guided passes, both exact:
+    Two zone-guided passes, both exact:
 
-    1. Zone scan (driver-resident, O(#blocks) like the other bounded
-       collects): per-block ``zmax`` of ``value_col``.  A greedy cover
-       by descending ``zmax`` picks the fewest blocks whose LIVE row
-       count can reach ``k``; only those decode.
+    1. Zone scan (in the driver from the winners' thin rows, no Spark
+       job): per-block ``zmax`` of ``value_col``.  A greedy cover by
+       descending ``zmax`` picks the fewest blocks whose row count can
+       reach ``k``; only those decode.
     2. Refinement: with ``v_k`` = the k-th value of pass 1 (ties broken
        by ``id_col``), any undecoded block with ``zmax >= v_k`` (or no
        zone — conservative) could still hold a winner, so exactly those
@@ -445,24 +461,21 @@ def topk_below_decode(
     Merge-on-read deletes apply inside :func:`decode_table`, so a
     deleted former maximum can't win; a stale (pre-delete) ``zmax``
     only widens the candidate set, never narrows it.  At 10^12 rows the
-    zone scan is a manifest pass and decode cost is O(blocks near the
+    zone scan is a metadata pass and decode cost is O(blocks near the
     top), not O(table)."""
     import math
 
     from pyrle_spark.plans.encode_job import decode_table
+    from pyrle_spark.plans.read_plan import winner_thin
 
-    table = IceTable(table_dir)
-    phys = physical_column(table, value_col, snapshot_id)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(F.col("column") == phys)
-    )
+    aliases, thin = winner_thin(table_dir, snapshot_id)
+    phys = aliases.get(value_col, value_col)
     zones = [
-        (
-            int(r["block_id"]),
-            float(r["zmax"]) if r["zmax"] is not None else math.inf,
-            int(r["n_rows"]),
+        (int(b), math.inf if zmax is None else float(zmax), int(n))
+        for b, c, zmax, n in zip(
+            thin["block_id"], thin["column"], thin["zmax"], thin["n_rows"]
         )
-        for r in enc.select("block_id", "zmax", "n_rows").collect()
+        if c == phys
     ]
     # greedy cover: highest-zmax blocks first until >= k rows are in play
     zones.sort(key=lambda t: (-t[1], t[0]))
@@ -475,15 +488,12 @@ def topk_below_decode(
     rest = {bid: zmax for bid, zmax, _n in zones[len(cover) :]}
 
     def _decode(block_ids: list) -> DataFrame:
-        blocks = spark.createDataFrame(
-            [(int(b),) for b in block_ids], "block_id long"
-        )
         return decode_table(
             spark,
             table_dir,
             columns=sorted({value_col, id_col}),
             snapshot_id=snapshot_id,
-            blocks=blocks,
+            blocks=block_ids,
         ).select(id_col, value_col)
 
     head = _decode(cover) if cover else None
@@ -506,48 +516,6 @@ def topk_below_decode(
     return out.orderBy(F.col(value_col).desc(), F.col(id_col)).limit(k)
 
 
-def _dict_codes_and_values(enc: Encoded):
-    """(codes int array, values list, valid bool array | None) of a
-    var-width dict block — the group column never materializes rows."""
-    from pyrle_spark.codecs.dictionary import _decode_codes
-
-    meta, buffers = enc.meta, enc.buffers
-    codec = enc.codec
-    if codec.endswith("+zstd"):
-        codec = codec[: -len("+zstd")]
-        meta, buffers = ZstdCodec.unwrap(meta, buffers)
-    if codec != "dict" or meta["kind"] != "var":
-        return None
-    cbuf = {
-        k[len("codes_") :]: v for k, v in buffers.items() if k.startswith("codes_")
-    }
-    codes = _decode_codes(meta["codes_mode"], meta["codes_meta"], cbuf)
-    values = _dict_values(meta, buffers)
-    valid = None
-    if meta.get("has_validity"):
-        valid = np.unpackbits(
-            np.frombuffer(buffers["validity"], dtype=np.uint8), count=enc.n_rows
-        ).astype(bool)
-    return codes, values, valid
-
-
-def _dict_values(meta: dict, buffers: dict) -> list:
-    """The dictionary's value list from an (unwrapped) var-width dict
-    block's buffers — the ONE place the offsets/data layout is parsed."""
-    from pyrle_spark.codecs.bitpack import DeltaCodec
-
-    dict_offsets = DeltaCodec.decode(
-        meta["dict_offsets_meta"], {"packed": buffers["dict_offsets"]}
-    )
-    dict_data = buffers["dict_data"]
-    return [
-        bytes(dict_data[dict_offsets[i] : dict_offsets[i + 1]]).decode(
-            "utf-8", "surrogateescape"
-        )
-        for i in range(meta["n_dict"])
-    ]
-
-
 def distinct_values(
     spark: SparkSession,
     table_dir: str,
@@ -564,47 +532,25 @@ def distinct_values(
     null rows), and delete-affected blocks (a delete can erase a
     value's last occurrence).  Returns one ``value`` column; a NULL row
     appears iff the column has nulls."""
-    from pyrle_spark.codecs import decode_array
+    plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
 
-    table = IceTable(table_dir)
-    column = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(F.col("column") == column)
-    )
+    def step(blk, enc):
+        kill = blk.kill
+        codec, meta, buffers = _unwrap(enc)
+        if (
+            codec == "dict"
+            and meta["kind"] == "var"
+            and not meta.get("has_validity")
+            and (kill is None or not len(kill))
+        ):
+            return {"value": _dict_values(meta, buffers)}
+        arr = _decode_live(enc, kill)
+        out = [None] if arr.null_count else []
+        out.extend(str(v) for v in arr.drop_null().unique().to_pylist())
+        return {"value": out}
 
-    def _partials(batches):
-        for batch in batches:
-            out: list = []
-            for row in batch.to_pylist():
-                e = Encoded.from_row(row)
-                kill = dmap.get(row["block_id"])
-                meta, buffers = e.meta, e.buffers
-                codec = e.codec
-                if codec.endswith("+zstd"):
-                    codec = codec[: -len("+zstd")]
-                    meta, buffers = ZstdCodec.unwrap(meta, buffers)
-                if (
-                    codec == "dict"
-                    and meta["kind"] == "var"
-                    and not meta.get("has_validity")
-                    and (kill is None or not len(kill))
-                ):
-                    out.extend(_dict_values(meta, buffers))
-                else:
-                    arr = decode_array(e)
-                    if kill is not None and len(kill):
-                        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
-                    if arr.null_count:
-                        out.append(None)
-                    uniq = arr.drop_null().unique()
-                    out.extend(str(v) for v in uniq.to_pylist())
-            yield pa.RecordBatch.from_pydict(
-                {"value": out}, schema=pa.schema([("value", pa.string())])
-            )
-
-    return enc.mapInArrow(_partials, "value string").distinct()
+    schema = pa.schema([("value", pa.string())])
+    return _read_partials(spark, plan, [column], step, schema).distinct()
 
 
 def sum_by_value(
@@ -620,121 +566,71 @@ def sum_by_value(
     ``np.add.at`` — one int-indexed scatter per block; non-dict blocks
     decode the one column), the measure column decodes only its own
     payload array; rows with a NULL group or measure are excluded (SQL
-    aggregate semantics, NULL groups dropped).
+    aggregate semantics, NULL groups dropped).  A block lacking one of
+    the two columns contributes nothing.
 
-    Scale shape: both columns' block rows co-locate with one hash
-    shuffle on block_id (same layout as decode_table), each block emits
+    Scale shape: the read planner hands each task both columns of its
+    blocks, read file-direct (no shuffle); each block emits
     O(distinct-in-block) partials, and one tiny aggregation merges them.
     No full-width row is ever built.
     """
     from pyrle_spark.codecs import decode_array
 
-    table = IceTable(table_dir)
-    group_col = physical_column(table, group_col, snapshot_id)
-    measure_col = physical_column(table, measure_col, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = table.read_table(spark, snapshot_id).filter(
-        F.col("column").isin([group_col, measure_col])
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [group_col, measure_col], snapshot_id,
+        incomplete="skip",
     )
-    enc = dedup_blocks(enc)
-    enc = enc.repartition("block_id").sortWithinPartitions("block_id", "column")
 
-    def _partials(batches):
-        pending: dict = {}
+    def step(blk, g, m):
+        if g is None or m is None:
+            return None
+        kill = blk.kill
+        marr = decode_array(m)
+        mvalid = np.asarray(marr.is_valid()) if marr.null_count else None
+        mvals = np.asarray(marr.fill_null(0).cast(pa.float64()), dtype=np.float64)
+        codec, meta, buffers = _unwrap(g)
+        packed = _dict_codes_and_values(codec, meta, buffers, g.n_rows)
+        if packed is not None:
+            codes, values, gvalid = packed
+            mask = np.ones(len(codes), dtype=bool)
+            if kill is not None and len(kill):
+                mask &= _keep_mask(len(codes), kill)
+            if gvalid is not None:
+                mask &= gvalid
+            if mvalid is not None:
+                mask &= mvalid
+            idx = codes[mask]
+            sums = np.zeros(len(values))
+            cnts = np.zeros(len(values), dtype=np.int64)
+            np.add.at(sums, idx, mvals[mask])
+            np.add.at(cnts, idx, 1)
+            keep = cnts > 0
+            return {
+                "value": [v for v, k in zip(values, keep) if k],
+                "n_rows": cnts[keep].tolist(),
+                "total": sums[keep].tolist(),
+            }
+        keys = decode_array(g).to_pylist()
+        gkeep = _keep_mask(len(keys), kill) if kill is not None and len(kill) else None
+        agg: dict = {}
+        for i, k in enumerate(keys):
+            if gkeep is not None and not gkeep[i]:
+                continue
+            if k is None or (mvalid is not None and not mvalid[i]):
+                continue
+            c, s = agg.get(k, (0, 0.0))
+            agg[k] = (c + 1, s + mvals[i])
+        vals = sorted(agg)
+        return {
+            "value": [str(v) for v in vals],
+            "n_rows": [agg[v][0] for v in vals],
+            "total": [float(agg[v][1]) for v in vals],
+        }
 
-        def flush(bid, cols):
-            g = cols.get(group_col)
-            m = cols.get(measure_col)
-            if g is None or m is None:
-                return None
-            kill = dmap.get(bid)
-            marr = decode_array(m)
-            mvalid = np.asarray(marr.is_valid()) if marr.null_count else None
-            mvals = np.asarray(
-                marr.fill_null(0).cast(pa.float64()), dtype=np.float64
-            )
-            packed = _dict_codes_and_values(g)
-            if packed is not None:
-                codes, values, gvalid = packed
-                mask = np.ones(len(codes), dtype=bool)
-                if kill is not None and len(kill):
-                    mask &= _keep_mask(len(codes), kill)
-                if gvalid is not None:
-                    mask &= gvalid
-                if mvalid is not None:
-                    mask &= mvalid
-                idx = codes[mask]
-                w = mvals[mask]
-                sums = np.zeros(len(values))
-                cnts = np.zeros(len(values), dtype=np.int64)
-                np.add.at(sums, idx, w)
-                np.add.at(cnts, idx, 1)
-                keep = cnts > 0
-                return (
-                    [v for v, k in zip(values, keep) if k],
-                    cnts[keep],
-                    sums[keep],
-                )
-            garr = decode_array(g)
-            keys = garr.to_pylist()
-            gkeep = (
-                _keep_mask(len(keys), kill)
-                if kill is not None and len(kill)
-                else None
-            )
-            agg: dict = {}
-            for i, k in enumerate(keys):
-                if gkeep is not None and not gkeep[i]:
-                    continue
-                if k is None or (mvalid is not None and not mvalid[i]):
-                    continue
-                c, s = agg.get(k, (0, 0.0))
-                agg[k] = (c + 1, s + mvals[i])
-            vals = sorted(agg)
-            return (
-                [str(v) for v in vals],
-                np.array([agg[v][0] for v in vals], dtype=np.int64),
-                np.array([agg[v][1] for v in vals]),
-            )
-
-        def emit(res):
-            if res is None:
-                return None
-            values, cnts, sums = res
-            return pa.RecordBatch.from_pydict(
-                {
-                    "value": [str(v) for v in values],
-                    "n_rows": [int(c) for c in cnts],
-                    "total": [float(s) for s in sums],
-                },
-                schema=pa.schema(
-                    [
-                        ("value", pa.string()),
-                        ("n_rows", pa.int64()),
-                        ("total", pa.float64()),
-                    ]
-                ),
-            )
-
-        cur_bid = None
-        for batch in batches:
-            for row in batch.to_pylist():
-                bid = row["block_id"]
-                if bid != cur_bid:
-                    if cur_bid is not None:
-                        out = emit(flush(cur_bid, pending))
-                        if out is not None:
-                            yield out
-                    cur_bid = bid
-                    pending = {}
-                pending[row["column"]] = Encoded.from_row(row)
-        if cur_bid is not None:
-            out = emit(flush(cur_bid, pending))
-            if out is not None:
-                yield out
-
-    partial = enc.mapInArrow(_partials, "value string, n_rows long, total double")
+    schema = pa.schema(
+        [("value", pa.string()), ("n_rows", pa.int64()), ("total", pa.float64())]
+    )
+    partial = _read_partials(spark, plan, [group_col, measure_col], step, schema)
     return partial.groupBy("value").agg(
         F.sum("n_rows").alias("n_rows"), F.sum("total").alias("sum_value")
     )
@@ -747,15 +643,13 @@ def count_where_in(
     values: list,
     snapshot_id: str | None = None,
 ) -> DataFrame:
-    """Counts for specific values only: bloom-digest block pruning first
-    (blocks none of the values touched never leave the manifest), then
-    the compressed-domain count restricted to the survivors."""
-    table = IceTable(table_dir)
-    enc = table.read_table(spark, snapshot_id)
-    live = prune_blocks_in(
-        enc, physical_column(table, column, snapshot_id), values
+    """Counts for specific values only: the read planner prunes blocks by
+    zone and bloom digest (blocks none of the values touched are never
+    read), then the compressed-domain count runs over the survivors."""
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [column], snapshot_id, predicates=[(column, values)]
     )
-    hist = count_by_value(spark, table_dir, column, snapshot_id, blocks=live)
+    hist = _value_counts(spark, plan, column)
     return hist.filter(F.col("value").isin([str(v) for v in values]))
 
 
@@ -799,29 +693,19 @@ def _fsst_eq_mask(meta: dict, buffers: dict, value: str, n_rows: int):
 def _block_eq_count(enc: Encoded, value, kill: np.ndarray | None) -> int:
     """Rows equal to ``value`` in one block, compressed-domain where the
     codec allows: fsst compares encoded spans (:func:`_fsst_eq_mask`),
-    dict counts the value's code, delete-affected blocks take the exact
-    decode-and-mask path."""
+    dict counts the value's code, rle sums the runs of the value;
+    delete-affected blocks take the exact decode-and-mask path."""
     import pyarrow.compute as pc
 
-    from pyrle_spark.codecs import decode_array
-
     if kill is None or not len(kill):
-        meta, buffers = enc.meta, enc.buffers
-        codec = enc.codec
-        if codec.endswith("+zstd"):
-            codec = codec[: -len("+zstd")]
-            meta, buffers = ZstdCodec.unwrap(meta, buffers)
+        codec, meta, buffers = _unwrap(enc)
         if codec == "fsst" and isinstance(value, str):
             mask = _fsst_eq_mask(meta, buffers, value, enc.n_rows)
-            if meta.get("has_validity") or "validity" in enc.buffers:
-                vbuf = enc.buffers.get("validity") or buffers.get("validity")
-                if vbuf is not None:
-                    valid = np.unpackbits(
-                        np.frombuffer(vbuf, dtype=np.uint8), count=enc.n_rows
-                    ).astype(bool)
-                    mask &= valid
+            valid = _valid_bits(meta, buffers, enc.n_rows)
+            if valid is not None:
+                mask &= valid
             return int(mask.sum())
-        packed = _dict_codes_and_values(enc)
+        packed = _dict_codes_and_values(codec, meta, buffers, enc.n_rows)
         if packed is not None:
             codes, values, valid = packed
             try:
@@ -831,33 +715,28 @@ def _block_eq_count(enc: Encoded, value, kill: np.ndarray | None) -> int:
             if valid is not None:
                 codes = codes[valid]
             return int((codes == code).sum())
-        if (
-            codec == "rle"
-            and meta["kind"] == "fixed"
-            and not meta.get("has_validity")
-            and isinstance(value, (int, float))
-            and not isinstance(value, bool)
-        ):
+        numeric = isinstance(value, (int, float)) and not isinstance(value, bool)
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" and numeric else None
+        if rv is not None:
             # run fold: sum the lengths of runs whose value equals the
             # probe — O(runs), never expands to positions
-            from pyrle_spark.codecs.bitpack import ForCodec
-
-            runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
-            if meta["vals_mode"] == "for":
-                vals = ForCodec.decode(
-                    meta["vals_meta"], {"packed": buffers["values"]}
-                )
-            else:
-                vals = np.frombuffer(
-                    buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
-                )
+            runs, vals = rv
             return int(runs[vals == value].sum())
-    arr = decode_array(enc)
-    if kill is not None and len(kill):
-        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
+    arr = _decode_live(enc, kill)
     return int(
         pc.sum(pc.equal(arr, pa.scalar(value, type=arr.type))).as_py() or 0
     )
+
+
+def _count_matches(spark, plan, column: str, block_count) -> DataFrame:
+    """One ``n_match`` row: ``block_count(enc, kill)`` summed over the
+    planned blocks (0 when none survives pruning)."""
+
+    def step(blk, enc):
+        return {"n": [block_count(enc, blk.kill)]}
+
+    partial = _read_partials(spark, plan, [column], step, _N)
+    return partial.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n_match"))
 
 
 def count_where_eq(
@@ -868,59 +747,23 @@ def count_where_eq(
     snapshot_id: str | None = None,
 ) -> DataFrame:
     """``SELECT count(*) WHERE column = value`` with the predicate kept
-    in the compressed domain end-to-end: bloom digests prune blocks that
-    never saw the value, dict blocks count the value's code, and fsst
-    blocks compare ENCODED spans against the probe encoded with each
-    block's own symbol table — the full column never decodes on any
-    fast path.  One ``n_match`` row out.
+    in the compressed domain end-to-end: zone maps and bloom digests
+    prune blocks that never saw the value (in the driver), dict blocks
+    count the value's code, and fsst blocks compare ENCODED spans
+    against the probe encoded with each block's own symbol table — the
+    full column never decodes on any fast path.  One ``n_match`` row
+    out.
 
-    Scale shape: the bloom prune is an O(#blocks) manifest scan; one
-    mapInArrow pass over survivors emits one int per block; at 10^12
-    rows only delete-affected or exotic-codec blocks ever decode."""
-    table = IceTable(table_dir)
-    phys = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = table.read_table(spark, snapshot_id)
-    live = prune_blocks_eq(enc, phys, value)
-    enc = dedup_blocks(
-        enc.filter(F.col("column") == phys).join(
-            F.broadcast(live), "block_id", "left_semi"
-        )
+    Scale shape: the prune is an O(#blocks) metadata pass; one
+    read over the survivors emits one int per block; at 10^12 rows only
+    delete-affected or exotic-codec blocks ever decode."""
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [column], snapshot_id,
+        predicates=[(column, value, value)],
     )
-
-    def _partials(batches):
-        for batch in batches:
-            ns = [
-                _block_eq_count(
-                    Encoded.from_row(row), value, dmap.get(row["block_id"])
-                )
-                for row in batch.to_pylist()
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {"n": ns}, schema=pa.schema([("n", pa.int64())])
-            )
-
-    partial = enc.mapInArrow(_partials, "n long")
-    return partial.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n_match"))
-
-
-def _rle_runs_codes(meta: dict, buffers: dict):
-    """(runs, vals) of an (unwrapped) fixed no-validity rle block, or
-    None when the layout doesn't apply — shared by the pair-group-by
-    run-zip fast path."""
-    from pyrle_spark.codecs.bitpack import ForCodec
-
-    if meta.get("kind") != "fixed" or meta.get("has_validity"):
-        return None
-    runs = ForCodec.decode(meta["runs_meta"], {"packed": buffers["runs"]})
-    if meta["vals_mode"] == "for":
-        vals = ForCodec.decode(meta["vals_meta"], {"packed": buffers["values"]})
-    else:
-        vals = np.frombuffer(
-            buffers["values"], dtype=np.dtype(meta["vals_meta"]["dtype"])
-        )
-    return runs.astype(np.int64), vals
+    return _count_matches(
+        spark, plan, column, lambda enc, kill: _block_eq_count(enc, value, kill)
+    )
 
 
 def _block_factorize(enc: Encoded, kill: np.ndarray | None = None):
@@ -930,37 +773,23 @@ def _block_factorize(enc: Encoded, kill: np.ndarray | None = None):
     — the VALUES never materialize per row), everything else decodes the
     single column and dictionary-encodes it.  ``kill``: delete-affected
     blocks take the exact decode-and-mask path."""
-    from pyrle_spark.codecs import decode_array
-
-    if kill is not None and len(kill):
-        arr = decode_array(enc).filter(pa.array(_keep_mask(enc.n_rows, kill)))
-        denc = arr.dictionary_encode()
-        codes = np.asarray(denc.indices.fill_null(-1), dtype=np.int64)
-        return codes, denc.dictionary.to_pylist()
-
-    packed = _dict_codes_and_values(enc)
-    if packed is not None:
-        codes, values, valid = packed
-        codes = np.asarray(codes, dtype=np.int64)
-        if valid is not None:
-            codes = np.where(valid, codes, -1)
-        return codes, values
-
-    meta, buffers = enc.meta, enc.buffers
-    codec = enc.codec
-    if codec.endswith("+zstd"):
-        codec = codec[: -len("+zstd")]
-        meta, buffers = ZstdCodec.unwrap(meta, buffers)
-    if codec == "rle":
-        rv = _rle_runs_codes(meta, buffers)
+    if kill is None or not len(kill):
+        codec, meta, buffers = _unwrap(enc)
+        packed = _dict_codes_and_values(codec, meta, buffers, enc.n_rows)
+        if packed is not None:
+            codes, values, valid = packed
+            codes = np.asarray(codes, dtype=np.int64)
+            if valid is not None:
+                codes = np.where(valid, codes, -1)
+            return codes, values
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" else None
         if rv is not None:
             runs, vals = rv
             uniq, inv = np.unique(vals, return_inverse=True)
             return np.repeat(inv.astype(np.int64), runs), [
                 x.item() for x in uniq
             ]
-    arr = decode_array(enc)
-    denc = arr.dictionary_encode()
+    denc = _decode_live(enc, kill).dictionary_encode()
     codes = np.asarray(denc.indices.fill_null(-1), dtype=np.int64)
     return codes, denc.dictionary.to_pylist()
 
@@ -975,10 +804,7 @@ def _pair_hist(enc_a: Encoded, enc_b: Encoded, kill: np.ndarray | None):
     def _clean_rle(enc):
         if kill is not None and len(kill):
             return None
-        meta, buffers, codec = enc.meta, enc.buffers, enc.codec
-        if codec.endswith("+zstd"):
-            codec = codec[: -len("+zstd")]
-            meta, buffers = ZstdCodec.unwrap(meta, buffers)
+        codec, meta, buffers = _unwrap(enc)
         return _rle_runs_codes(meta, buffers) if codec == "rle" else None
 
     ra, rb = _clean_rle(enc_a), _clean_rle(enc_b)
@@ -1019,27 +845,31 @@ def _pair_hist(enc_a: Encoded, enc_b: Encoded, kill: np.ndarray | None):
     return va, vb, counts[nz]
 
 
-def _plan_blocks(spark, table_dir, columns, snapshot_id, filter_col=None,
-                 lo=None, hi=None):
-    """Plan the blocks of ``columns`` for a multi-column aggregate with
-    the read planner — resume dedup, deletes and, given ``filter_col``,
-    zone pruning on ``[lo, hi]`` all happen in the driver.  Returns
-    ``(plan, lo, hi)`` with the bounds in the filter column's physical
-    domain (integer-clamped, epoch units for timestamps), so every
-    codec tier compares like with like."""
-    preds = [(filter_col, lo, hi)] if filter_col is not None else []
-    plan = plan_read(
-        table_dir,
-        columns=columns,
-        predicates=preds,
-        snapshot_id=snapshot_id,
-        session_tz=_session_tz(spark),
-    )
-    if preds:
-        b = plan.preds[0].bounds(plan.types.get(filter_col))
-        if b is not None:
-            lo, hi = b[1], b[2]
-    return plan, lo, hi
+# ---------------------------------------------------- multi-column aggregates
+
+_PAIR_N = pa.schema(
+    [("value_a", pa.string()), ("value_b", pa.string()), ("n_rows", pa.int64())]
+)
+
+
+def _pair_keys(nz, nb: int, vals_a: list, vals_b: list) -> dict:
+    """``value_a`` / ``value_b`` string columns of the nonzero slots
+    ``nz`` of a ``(code_a + 1) * nb + (code_b + 1)`` pair index."""
+    return {
+        "value_a": [None if p // nb == 0 else str(vals_a[p // nb - 1]) for p in nz],
+        "value_b": [None if p % nb == 0 else str(vals_b[p % nb - 1]) for p in nz],
+    }
+
+
+def _integer_measure(enc: Encoded, kill, op: str, measure: str) -> pa.Array:
+    """A measure block decoded without its deleted rows; raises unless
+    it is an integer column (the pair aggregates sum in int64)."""
+    arr = _decode_live(enc, kill)
+    if not pa.types.is_integer(arr.type):
+        raise TypeError(
+            f"{op} needs an integer measure; {measure!r} blocks are {arr.type}"
+        )
+    return arr
 
 
 def group_count_pair(
@@ -1064,30 +894,12 @@ def group_count_pair(
     O(#distinct pairs) per block; the only shuffle is the final
     aggregate, whose key domain is the pair cardinality."""
     plan, _, _ = _plan_blocks(spark, table_dir, [col_a, col_b], snapshot_id)
-    pa_col, pb_col = plan.phys_of[col_a], plan.phys_of[col_b]
 
-    def _pairs(blocks):
-        for blk in blocks:
-            rows = blk.cols
-            va, vb, ns = _pair_hist(rows[pa_col], rows[pb_col], blk.kill)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "value_a": [None if v is None else str(v) for v in va],
-                    "value_b": [None if v is None else str(v) for v in vb],
-                    "n_rows": [int(n) for n in ns],
-                },
-                schema=pa.schema(
-                    [
-                        ("value_a", pa.string()),
-                        ("value_b", pa.string()),
-                        ("n_rows", pa.int64()),
-                    ]
-                ),
-            )
+    def step(blk, enc_a, enc_b):
+        va, vb, ns = _pair_hist(enc_a, enc_b, blk.kill)
+        return {"value_a": _strs(va), "value_b": _strs(vb), "n_rows": ns.tolist()}
 
-    partial = read_blocks(
-        spark, plan, _pairs, "value_a string, value_b string, n_rows long"
-    )
+    partial = _read_partials(spark, plan, [col_a, col_b], step, _PAIR_N)
     return partial.groupBy("value_a", "value_b").agg(
         F.sum("n_rows").alias("n_rows")
     )
@@ -1148,67 +960,35 @@ def group_sum_pair(
     Scale shape: one Arrow pass over the planned blocks, no shuffle of
     compressed buffers; O(#distinct pairs) rows per block out; final
     aggregate key = pair cardinality."""
-    from pyrle_spark.codecs import decode_array
+    cols = [col_a, col_b, measure]
+    plan, _, _ = _plan_blocks(spark, table_dir, cols, snapshot_id)
 
-    plan, _, _ = _plan_blocks(
-        spark, table_dir, [col_a, col_b, measure], snapshot_id
-    )
-    pa_col, pb_col, pm_col = (plan.phys_of[c] for c in (col_a, col_b, measure))
-
-    def _partials(blocks):
-        for blk in blocks:
-            bid, rows, kill = blk.block_id, blk.cols, blk.kill
-            codes_a, vals_a = _block_factorize(rows[pa_col], kill)
-            codes_b, vals_b = _block_factorize(rows[pb_col], kill)
-            m_enc = rows[pm_col]
-            arr = decode_array(m_enc)
-            if not pa.types.is_integer(arr.type):
-                raise TypeError(
-                    f"group_sum_pair needs an integer measure; "
-                    f"{measure!r} blocks are {arr.type}"
-                )
-            if kill is not None and len(kill):
-                arr = arr.filter(pa.array(_keep_mask(m_enc.n_rows, kill)))
-            m = np.asarray(arr.fill_null(0), dtype=np.int64)
-            if not (len(codes_a) == len(codes_b) == len(m)):
-                raise ValueError(
-                    f"pair group-by misalignment in block {bid}: "
-                    f"{len(codes_a)}/{len(codes_b)}/{len(m)} rows"
-                )
-            nb = len(vals_b) + 1
-            pair = (codes_a + 1) * nb + (codes_b + 1)
-            size = (len(vals_a) + 1) * nb
-            counts = np.bincount(pair, minlength=size)
-            sums = np.zeros(size, dtype=np.int64)
-            np.add.at(sums, pair, m)
-            nz = np.flatnonzero(counts)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "value_a": [
-                        None if p // nb == 0 else str(vals_a[p // nb - 1])
-                        for p in nz
-                    ],
-                    "value_b": [
-                        None if p % nb == 0 else str(vals_b[p % nb - 1])
-                        for p in nz
-                    ],
-                    "n_rows": [int(c) for c in counts[nz]],
-                    "sum_m": [int(s) for s in sums[nz]],
-                },
-                schema=pa.schema(
-                    [
-                        ("value_a", pa.string()),
-                        ("value_b", pa.string()),
-                        ("n_rows", pa.int64()),
-                        ("sum_m", pa.int64()),
-                    ]
-                ),
+    def step(blk, enc_a, enc_b, m_enc):
+        kill = blk.kill
+        codes_a, vals_a = _block_factorize(enc_a, kill)
+        codes_b, vals_b = _block_factorize(enc_b, kill)
+        arr = _integer_measure(m_enc, kill, "group_sum_pair", measure)
+        m = np.asarray(arr.fill_null(0), dtype=np.int64)
+        if not (len(codes_a) == len(codes_b) == len(m)):
+            raise ValueError(
+                f"pair group-by misalignment in block {blk.block_id}: "
+                f"{len(codes_a)}/{len(codes_b)}/{len(m)} rows"
             )
+        nb = len(vals_b) + 1
+        pair = (codes_a + 1) * nb + (codes_b + 1)
+        size = (len(vals_a) + 1) * nb
+        counts = np.bincount(pair, minlength=size)
+        sums = np.zeros(size, dtype=np.int64)
+        np.add.at(sums, pair, m)
+        nz = np.flatnonzero(counts)
+        return {
+            **_pair_keys(nz, nb, vals_a, vals_b),
+            "n_rows": counts[nz].tolist(),
+            "sum_m": sums[nz].tolist(),
+        }
 
-    partial = read_blocks(
-        spark, plan, _partials,
-        "value_a string, value_b string, n_rows long, sum_m long",
-    )
+    schema = _PAIR_N.append(pa.field("sum_m", pa.int64()))
+    partial = _read_partials(spark, plan, cols, step, schema)
     return partial.groupBy("value_a", "value_b").agg(
         F.sum("n_rows").alias("n_rows"), F.sum("sum_m").alias("sum_m")
     )
@@ -1225,58 +1005,23 @@ def _block_filter_mask(enc: Encoded, lo, hi, kill):
     codec choice can never change the answer).  NULL and NaN never
     match (SQL comparison semantics); delete-affected blocks take the
     exact decode-and-mask path."""
-    from pyrle_spark.codecs import decode_array
-
     if kill is None or not len(kill):
-        meta, codec, buffers = enc.meta, enc.codec, enc.buffers
-        if codec.endswith("+zstd"):
-            codec = codec[: -len("+zstd")]
-            meta, buffers = ZstdCodec.unwrap(meta, buffers)
-        if codec == "rle":
-            rv = _rle_runs_codes(meta, buffers)
-            if rv is not None:
-                runs, vals = rv
-                m = _range_mask(vals, lo, hi)
-                if m.all():
-                    return None
-                return np.repeat(m, runs)
-        if (
-            codec == "dict"
-            and meta.get("kind") == "fixed"
-            and not meta.get("has_validity")
-        ):
-            from pyrle_spark.codecs.dictionary import _decode_codes
-
-            cbuf = {
-                k[len("codes_") :]: v
-                for k, v in buffers.items()
-                if k.startswith("codes_")
-            }
-            codes = np.asarray(
-                _decode_codes(meta["codes_mode"], meta["codes_meta"], cbuf),
-                dtype=np.int64,
-            )
-            uniques = np.frombuffer(
-                buffers["dict_data"], dtype=np.dtype(meta["dict_dtype"])
-            )
-            if meta.get("orig_dtype"):
-                uniques = uniques.view(np.dtype(meta["orig_dtype"]))
+        codec, meta, buffers = _unwrap(enc)
+        rv = _rle_runs_codes(meta, buffers) if codec == "rle" else None
+        if rv is not None:
+            runs, vals = rv
+            m = _range_mask(vals, lo, hi)
+            if m.all():
+                return None
+            return np.repeat(m, runs)
+        fx = _dict_fixed_codes(codec, meta, buffers)
+        if fx is not None:
+            codes, uniques = fx
             hit = _range_mask(uniques, lo, hi)
             if hit.all():
                 return None
             return hit[codes]
-    arr = decode_array(enc)
-    if kill is not None and len(kill):
-        arr = arr.filter(pa.array(_keep_mask(enc.n_rows, kill)))
-    valid = np.asarray(arr.is_valid(), dtype=bool)
-    if pa.types.is_timestamp(arr.type):
-        # timestamps compare in epoch units of their type, like the
-        # rle/dict tiers' stored values and the planned bounds
-        a = np.asarray(arr.cast(pa.int64()).fill_null(0), dtype=np.int64)
-    elif pa.types.is_integer(arr.type):
-        a = np.asarray(arr.fill_null(0), dtype=np.int64)
-    else:
-        a = np.asarray(arr.fill_null(0), dtype=np.float64)
+    valid, a = _native_values(_decode_live(enc, kill))
     return valid & _range_mask(a, lo, hi)
 
 
@@ -1307,178 +1052,31 @@ def group_count_where(
     the shape that makes ``WHERE ts BETWEEN …  GROUP BY host`` cheap at
     100 TB.  Returns (value_a string, n_rows long); NULL keys group as
     NULL.  Merge-on-read deletes apply."""
+    cols = [key_col, filter_col]
     plan, lo, hi = _plan_blocks(
-        spark, table_dir, [key_col, filter_col], snapshot_id, filter_col, lo, hi
-    )
-    pk, pf = plan.phys_of[key_col], plan.phys_of[filter_col]
-
-    def _partials(blocks):
-        for blk in blocks:
-            bid, rows, kill = blk.block_id, blk.cols, blk.kill
-            codes, vals = _block_factorize(rows[pk], kill)
-            mask = _block_filter_mask(rows[pf], lo, hi, kill)
-            if mask is not None:
-                if len(mask) != len(codes):
-                    raise ValueError(
-                        f"filtered group-by misalignment in block {bid}: "
-                        f"{len(codes)} key rows vs {len(mask)} filter rows"
-                    )
-                codes = codes[mask]
-            counts = np.bincount(codes + 1, minlength=len(vals) + 1)
-            nz = np.flatnonzero(counts)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "value_a": [
-                        None if p == 0 else str(vals[p - 1]) for p in nz
-                    ],
-                    "n_rows": [int(c) for c in counts[nz]],
-                },
-                schema=pa.schema(
-                    [("value_a", pa.string()), ("n_rows", pa.int64())]
-                ),
-            )
-
-    partial = read_blocks(spark, plan, _partials, "value_a string, n_rows long")
-    return partial.groupBy("value_a").agg(F.sum("n_rows").alias("n_rows"))
-
-
-def group_sums_where(
-    spark: SparkSession,
-    table_dir: str,
-    key_a: str,
-    key_b: str | None,
-    measures: list,
-    filter_col: str | None = None,
-    lo=None,
-    hi=None,
-    snapshot_id: str | None = None,
-) -> DataFrame:
-    """``SELECT a, b, count(*), sum(m1), …, sum(mk) WHERE lo <= f <= hi
-    GROUP BY a, b`` below row decode — the TPC-H Q1 shape.  Combines
-    :func:`group_sum_pair`'s code-paired two-key histogram with
-    :func:`group_count_where`'s three filter-pushdown tiers (manifest
-    zone prune → zone containment → codec-level mask), and folds ANY
-    number of integer measures into the pair domain in one pass — one
-    ``np.add.at`` per measure against the same pair index, so adding a
-    measure costs one array fold, never another scan.
-
-    All sums accumulate in int64 end-to-end (the cross-engine exactness
-    rule); a float measure block raises.  Measure NULLs contribute 0
-    and still count in ``n_rows``.  Merge-on-read deletes apply to
-    keys, filter, and measures alike.
-
-    ``key_b=None`` runs the single-key form (``GROUP BY a`` only):
-    ``value_b`` comes back as the constant ``"_all"`` for the caller to
-    drop — the histogram then feeds aggregate-below-join consumers
-    (:func:`agg_join_dim`'s shape with a filter, e.g. TPC-H Q14's
-    per-partkey revenue under a shipdate window).
-
-    Returns (value_a string, value_b string, n_rows long,
-    sum_<m> long per measure).
-
-    Scale shape: O(#blocks) prune in the driver, one Arrow pass over the
-    surviving blocks, O(#distinct pairs) rows per block out; the final aggregate's key is pair cardinality (Q1: 6 groups
-    regardless of corpus size)."""
-    from pyrle_spark.codecs import decode_array
-
-    logical = [key_a, *measures] + [c for c in (key_b, filter_col) if c]
-    plan, lo, hi = _plan_blocks(
-        spark, table_dir, logical, snapshot_id, filter_col, lo, hi
-    )
-    pa_col = plan.phys_of[key_a]
-    pb_col = plan.phys_of[key_b] if key_b is not None else None
-    pm_cols = [plan.phys_of[m] for m in measures]
-    pf = plan.phys_of[filter_col] if filter_col else None
-    sum_names = [f"sum_{m}" for m in measures]
-    out_schema = pa.schema(
-        [("value_a", pa.string()), ("value_b", pa.string()),
-         ("n_rows", pa.int64())]
-        + [(s, pa.int64()) for s in sum_names]
+        spark, table_dir, cols, snapshot_id, filter_col, lo, hi
     )
 
-    def _partials(blocks):
-        for blk in blocks:
-            bid, rows, kill = blk.block_id, blk.cols, blk.kill
-            codes_a, vals_a = _block_factorize(rows[pa_col], kill)
-            if pb_col is not None:
-                codes_b, vals_b = _block_factorize(rows[pb_col], kill)
-            else:  # single-key form: one constant pseudo-slot
-                codes_b = np.zeros(len(codes_a), dtype=np.int64)
-                vals_b = ["_all"]
-            ms = []
-            for m_name, pm in zip(measures, pm_cols):
-                m_enc = rows[pm]
-                arr = decode_array(m_enc)
-                if not pa.types.is_integer(arr.type):
-                    raise TypeError(
-                        f"group_sums_where needs integer measures; "
-                        f"{m_name!r} blocks are {arr.type}"
-                    )
-                if kill is not None and len(kill):
-                    arr = arr.filter(
-                        pa.array(_keep_mask(m_enc.n_rows, kill))
-                    )
-                ms.append(np.asarray(arr.fill_null(0), dtype=np.int64))
-            if pf is not None:
-                mask = _block_filter_mask(rows[pf], lo, hi, kill)
-            else:
-                mask = None
-            if mask is not None:
-                if len(mask) != len(codes_a):
-                    raise ValueError(
-                        f"filtered pair group-by misalignment in block "
-                        f"{bid}: {len(codes_a)} key rows vs {len(mask)} "
-                        "filter rows"
-                    )
-                codes_a = codes_a[mask]
-                codes_b = codes_b[mask]
-                ms = [m[mask] for m in ms]
-            if not all(len(m) == len(codes_a) for m in ms) or len(
-                codes_a
-            ) != len(codes_b):
+    def step(blk, k_enc, f_enc):
+        codes, vals = _block_factorize(k_enc, blk.kill)
+        mask = _block_filter_mask(f_enc, lo, hi, blk.kill)
+        if mask is not None:
+            if len(mask) != len(codes):
                 raise ValueError(
-                    f"pair group-by misalignment in block {bid}"
+                    f"filtered group-by misalignment in block {blk.block_id}: "
+                    f"{len(codes)} key rows vs {len(mask)} filter rows"
                 )
-            nb = len(vals_b) + 1
-            pair = (codes_a + 1) * nb + (codes_b + 1)
-            size = (len(vals_a) + 1) * nb
-            counts = np.bincount(pair, minlength=size)
-            sums = []
-            for m in ms:
-                s = np.zeros(size, dtype=np.int64)
-                np.add.at(s, pair, m)
-                sums.append(s)
-            nz = np.flatnonzero(counts)
-            if not len(nz):
-                continue
-            cols = {
-                "value_a": [
-                    None if p // nb == 0 else str(vals_a[p // nb - 1])
-                    for p in nz
-                ],
-                "value_b": [
-                    None if p % nb == 0 else str(vals_b[p % nb - 1])
-                    for p in nz
-                ],
-                "n_rows": [int(c) for c in counts[nz]],
-            }
-            for s_name, s in zip(sum_names, sums):
-                cols[s_name] = [int(v) for v in s[nz]]
-            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
+            codes = codes[mask]
+        counts = np.bincount(codes + 1, minlength=len(vals) + 1)
+        nz = np.flatnonzero(counts)
+        return {
+            "value_a": [None if p == 0 else str(vals[p - 1]) for p in nz],
+            "n_rows": counts[nz].tolist(),
+        }
 
-    partial = read_blocks(
-        spark,
-        plan,
-        _partials,
-        ", ".join(
-            ["value_a string", "value_b string", "n_rows long"]
-            + [f"{s} long" for s in sum_names]
-        ),
-    )
-    return partial.groupBy("value_a", "value_b").agg(
-        F.sum("n_rows").alias("n_rows"),
-        *[F.sum(s).alias(s) for s in sum_names],
-    )
+    schema = pa.schema([("value_a", pa.string()), ("n_rows", pa.int64())])
+    partial = _read_partials(spark, plan, cols, step, schema)
+    return partial.groupBy("value_a").agg(F.sum("n_rows").alias("n_rows"))
 
 
 def group_minmax_pair(
@@ -1506,84 +1104,52 @@ def group_minmax_pair(
     Scale shape: one Arrow pass over the planned blocks, no shuffle of
     compressed buffers; O(#distinct pairs) rows per block out; final
     aggregate key = pair cardinality."""
-    from pyrle_spark.codecs import decode_array
+    cols = [col_a, col_b, measure]
+    plan, _, _ = _plan_blocks(spark, table_dir, cols, snapshot_id)
 
-    plan, _, _ = _plan_blocks(
-        spark, table_dir, [col_a, col_b, measure], snapshot_id
-    )
-    pa_col, pb_col, pm_col = (plan.phys_of[c] for c in (col_a, col_b, measure))
-
-    def _partials(blocks):
-        for blk in blocks:
-            bid, rows, kill = blk.block_id, blk.cols, blk.kill
-            codes_a, vals_a = _block_factorize(rows[pa_col], kill)
-            codes_b, vals_b = _block_factorize(rows[pb_col], kill)
-            m_enc = rows[pm_col]
-            arr = decode_array(m_enc)
-            if not pa.types.is_integer(arr.type):
-                raise TypeError(
-                    f"group_minmax_pair needs an integer measure; "
-                    f"{measure!r} blocks are {arr.type}"
-                )
-            if kill is not None and len(kill):
-                arr = arr.filter(pa.array(_keep_mask(m_enc.n_rows, kill)))
-            valid = np.asarray(arr.is_valid(), dtype=bool)
-            m = np.asarray(arr.fill_null(0), dtype=np.int64)
-            if not (len(codes_a) == len(codes_b) == len(m)):
-                raise ValueError(
-                    f"pair group-by misalignment in block {bid}: "
-                    f"{len(codes_a)}/{len(codes_b)}/{len(m)} rows"
-                )
-            nb = len(vals_b) + 1
-            pair = (codes_a + 1) * nb + (codes_b + 1)
-            size = (len(vals_a) + 1) * nb
-            counts = np.bincount(pair, minlength=size)
-            mins = np.full(size, np.iinfo(np.int64).max, dtype=np.int64)
-            maxs = np.full(size, np.iinfo(np.int64).min, dtype=np.int64)
-            nvalid = np.zeros(size, dtype=np.int64)
-            vp, vm = pair[valid], m[valid]
-            np.minimum.at(mins, vp, vm)
-            np.maximum.at(maxs, vp, vm)
-            np.add.at(nvalid, vp, 1)
-            nz = np.flatnonzero(counts)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "value_a": [
-                        None if p // nb == 0 else str(vals_a[p // nb - 1])
-                        for p in nz
-                    ],
-                    "value_b": [
-                        None if p % nb == 0 else str(vals_b[p % nb - 1])
-                        for p in nz
-                    ],
-                    "n_rows": [int(c) for c in counts[nz]],
-                    "min_m": [
-                        None if nvalid[p] == 0 else int(mins[p]) for p in nz
-                    ],
-                    "max_m": [
-                        None if nvalid[p] == 0 else int(maxs[p]) for p in nz
-                    ],
-                },
-                schema=pa.schema(
-                    [
-                        ("value_a", pa.string()),
-                        ("value_b", pa.string()),
-                        ("n_rows", pa.int64()),
-                        ("min_m", pa.int64()),
-                        ("max_m", pa.int64()),
-                    ]
-                ),
+    def step(blk, enc_a, enc_b, m_enc):
+        kill = blk.kill
+        codes_a, vals_a = _block_factorize(enc_a, kill)
+        codes_b, vals_b = _block_factorize(enc_b, kill)
+        arr = _integer_measure(m_enc, kill, "group_minmax_pair", measure)
+        valid = np.asarray(arr.is_valid(), dtype=bool)
+        m = np.asarray(arr.fill_null(0), dtype=np.int64)
+        if not (len(codes_a) == len(codes_b) == len(m)):
+            raise ValueError(
+                f"pair group-by misalignment in block {blk.block_id}: "
+                f"{len(codes_a)}/{len(codes_b)}/{len(m)} rows"
             )
+        nb = len(vals_b) + 1
+        pair = (codes_a + 1) * nb + (codes_b + 1)
+        size = (len(vals_a) + 1) * nb
+        counts = np.bincount(pair, minlength=size)
+        mins = np.full(size, np.iinfo(np.int64).max, dtype=np.int64)
+        maxs = np.full(size, np.iinfo(np.int64).min, dtype=np.int64)
+        nvalid = np.zeros(size, dtype=np.int64)
+        vp, vm = pair[valid], m[valid]
+        np.minimum.at(mins, vp, vm)
+        np.maximum.at(maxs, vp, vm)
+        np.add.at(nvalid, vp, 1)
+        nz = np.flatnonzero(counts)
+        return {
+            **_pair_keys(nz, nb, vals_a, vals_b),
+            "n_rows": counts[nz].tolist(),
+            "min_m": [None if nvalid[p] == 0 else int(mins[p]) for p in nz],
+            "max_m": [None if nvalid[p] == 0 else int(maxs[p]) for p in nz],
+        }
 
-    partial = read_blocks(
-        spark, plan, _partials,
-        "value_a string, value_b string, n_rows long, min_m long, max_m long",
+    schema = _PAIR_N.append(pa.field("min_m", pa.int64())).append(
+        pa.field("max_m", pa.int64())
     )
+    partial = _read_partials(spark, plan, cols, step, schema)
     return partial.groupBy("value_a", "value_b").agg(
         F.sum("n_rows").alias("n_rows"),
         F.min("min_m").alias("min_m"),
         F.max("max_m").alias("max_m"),
     )
+
+
+# ------------------------------------------------------ string predicates
 
 
 def _block_prefix_count(enc: Encoded, prefix: str, kill) -> int:
@@ -1612,10 +1178,8 @@ def _block_str_match_count(enc: Encoded, py_pred, arrow_pred, kill) -> int:
     flavors."""
     import pyarrow.compute as pc
 
-    from pyrle_spark.codecs import decode_array
-
     if kill is None or not len(kill):
-        packed = _dict_codes_and_values(enc)
+        packed = _dict_codes_and_values(*_unwrap(enc), enc.n_rows)
         if packed is not None:
             codes, values, valid = packed
             hit = np.array(
@@ -1629,9 +1193,7 @@ def _block_str_match_count(enc: Encoded, py_pred, arrow_pred, kill) -> int:
                 codes = codes[valid]
             counts = np.bincount(codes, minlength=len(values))
             return int(counts[hit].sum())
-    arr = decode_array(enc)
-    if kill is not None and len(kill):
-        arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
+    arr = _decode_live(enc, kill)
     return int(pc.sum(arrow_pred(arr.drop_null())).as_py() or 0)
 
 
@@ -1643,44 +1205,28 @@ def count_where_prefix(
     snapshot_id: str | None = None,
 ) -> DataFrame:
     """``SELECT count(*) WHERE column LIKE 'prefix%'`` with string
-    zonemap pruning on the manifest: a block can hold a match only if
-    ``zmax >= prefix`` and ``zmin < prefix⁺`` (prefix with its last
-    code point incremented), so on prefix-clustered layouts almost no
-    block is touched.  Survivors count in the compressed domain where
-    the codec allows (dictionary startswith, codes never decode to
-    strings) and decode only otherwise.  One ``n_match`` row out.
+    zonemap pruning in the read planner: a block can hold a match only
+    if its zone meets ``[prefix, prefix⁺]`` (prefix with its last code
+    point incremented), so on prefix-clustered layouts almost no block
+    is touched.  Survivors count in the compressed domain where the
+    codec allows (dictionary startswith, codes never decode to strings)
+    and decode only otherwise.  One ``n_match`` row out.
 
-    Pruning is a true superset filter: zonemaps predate deletes and
-    deletes only shrink matches."""
-    table = IceTable(table_dir)
-    phys = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(F.col("column") == phys)
-    )
+    Pruning is a true superset filter: the range admits every string
+    that starts with ``prefix``, zonemaps predate deletes and deletes
+    only shrink matches; the per-row count stays exact."""
+    preds = []
     if prefix:
-        keep = F.col("zmax").isNull() | (F.col("zmax") >= F.lit(prefix))
         last = prefix[-1]
-        if ord(last) < 0x10FFFF:
-            upper = prefix[:-1] + chr(ord(last) + 1)
-            keep = keep & (F.col("zmin").isNull() | (F.col("zmin") < F.lit(upper)))
-        enc = enc.filter(keep)
-
-    def _partials(batches):
-        for batch in batches:
-            ns = [
-                _block_prefix_count(
-                    Encoded.from_row(row), prefix, dmap.get(row["block_id"])
-                )
-                for row in batch.to_pylist()
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {"n": ns}, schema=pa.schema([("n", pa.int64())])
-            )
-
-    partial = enc.mapInArrow(_partials, "n long")
-    return partial.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n_match"))
+        upper = prefix[:-1] + chr(ord(last) + 1) if ord(last) < 0x10FFFF else None
+        preds = [(column, prefix, upper)]
+    plan, _, _ = _plan_blocks(
+        spark, table_dir, [column], snapshot_id, predicates=preds
+    )
+    return _count_matches(
+        spark, plan, column,
+        lambda enc, kill: _block_prefix_count(enc, prefix, kill),
+    )
 
 
 def _block_contains_count(enc: Encoded, sub: str, kill) -> int:
@@ -1718,32 +1264,14 @@ def count_where_contains(
     their single column for a vectorized Arrow ``match_substring``.
     One ``n_match`` row out.
 
-    Scale shape: O(#blocks) manifest scan, one mapInArrow emitting one
-    int per block, column-pruned to the probed column — on a
-    dictionary-friendly corpus the bytes read are the dictionaries,
-    not the data."""
-    table = IceTable(table_dir)
-    phys = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(F.col("column") == phys)
+    Scale shape: one read emitting one int per block, column-pruned to
+    the probed column — on a dictionary-friendly corpus the bytes
+    decoded are the dictionaries, not the data."""
+    plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
+    return _count_matches(
+        spark, plan, column,
+        lambda enc, kill: _block_contains_count(enc, sub, kill),
     )
-
-    def _partials(batches):
-        for batch in batches:
-            ns = [
-                _block_contains_count(
-                    Encoded.from_row(row), sub, dmap.get(row["block_id"])
-                )
-                for row in batch.to_pylist()
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {"n": ns}, schema=pa.schema([("n", pa.int64())])
-            )
-
-    partial = enc.mapInArrow(_partials, "n long")
-    return partial.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n_match"))
 
 
 def agg_join_dim(
@@ -1805,39 +1333,20 @@ def count_nulls(
     column: str,
     snapshot_id: str | None = None,
 ) -> int:
-    """Exact NULL count of one column with validity-aware pruning: a
+    """Exact NULL count of one column with validity-aware skipping: a
     block whose meta carries no ``has_validity`` flag stores ZERO nulls
     (the validity bitmap is only attached when some slot is null), so
     only null-bearing blocks decode — on a mostly-complete corpus the
-    scan touches almost nothing.  Delete-aware: merge-on-read kills
+    scan decodes almost nothing.  Delete-aware: merge-on-read kills
     mask the bitmap before counting (removing a NULL row must lower the
     answer).  Deletes never create nulls, so validity-free blocks stay
-    pruned regardless."""
-    table = IceTable(table_dir)
-    phys = physical_column(table, column, snapshot_id)
-    block_rows = int(table.properties(snapshot_id)["block_rows"])
-    dmap = _delete_map(table_dir, snapshot_id, block_rows)
-    enc = dedup_blocks(
-        table.read_table(spark, snapshot_id).filter(F.col("column") == phys)
-    ).filter(
-        F.get_json_object(F.col("meta"), "$.has_validity") == "true"
-    )
+    skipped regardless."""
+    plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
 
-    def _count(batches):
-        from pyrle_spark.codecs import decode_array
+    def step(blk, enc):
+        if not enc.meta.get("has_validity"):
+            return None
+        return {"n": [_decode_live(enc, blk.kill).null_count]}
 
-        for batch in batches:
-            total = 0
-            for row in batch.to_pylist():
-                e = Encoded.from_row(row)
-                arr = decode_array(e)
-                kill = dmap.get(row["block_id"])
-                if kill is not None and len(kill):
-                    arr = arr.filter(pa.array(_keep_mask(len(arr), kill)))
-                total += arr.null_count
-            yield pa.RecordBatch.from_pydict(
-                {"n": pa.array([total], pa.int64())}
-            )
-
-    parts = enc.mapInArrow(_count, "n long").agg(F.sum("n")).first()[0]
-    return int(parts or 0)
+    n = _read_partials(spark, plan, [column], step, _N).agg(F.sum("n")).first()[0]
+    return int(n or 0)

@@ -2,8 +2,8 @@
 
 Every read of an encoded table goes through the two halves here:
 ``decode_table`` / ``scan_encoded``, ``verify_checksums``,
-``explain_scan``, the multi-column compressed aggregates and the
-``format("pyrle")`` reader.
+``explain_scan``, every compressed-domain aggregate of
+:mod:`~pyrle_spark.plans.compressed` and the ``format("pyrle")`` reader.
 
 - :func:`plan_read` runs in the driver and launches no Spark job.  It
   reads the thin columns (``block_id, column, arrow_type, n_rows, zmin,
@@ -720,10 +720,10 @@ def plan_read(
     return plan
 
 
-def explain(table_dir: str, predicates=None, any_of=None, snapshot_id=None,
-            session_tz=None) -> dict:
-    """Per-tier survivor counts for :func:`~pyrle_spark.plans.encode_job.
-    explain_scan`, from the winners' thin rows; no Spark job."""
+def winner_thin(table_dir: str, snapshot_id=None) -> tuple:
+    """``(column aliases, thin columns)`` of the snapshot, the thin
+    columns holding one row per (block, column): its resume-dedup
+    winner.  Read in the driver; no Spark job."""
     from pyrle_spark.sources.icetable import IceTable
 
     table = IceTable(table_dir)
@@ -734,7 +734,14 @@ def explain(table_dir: str, predicates=None, any_of=None, snapshot_id=None,
     paths = [f["path"] for f in table._manifest(snap)["files"]] if snap else []
     thin = _read_thin(paths)
     win = _winners(thin)
-    wthin = {c: [thin[c][i] for i in win.values()] for c in THIN_COLS}
+    return aliases, {c: [thin[c][i] for i in win.values()] for c in THIN_COLS}
+
+
+def explain(table_dir: str, predicates=None, any_of=None, snapshot_id=None,
+            session_tz=None) -> dict:
+    """Per-tier survivor counts for :func:`~pyrle_spark.plans.encode_job.
+    explain_scan`, from the winners' thin rows; no Spark job."""
+    aliases, wthin = winner_thin(table_dir, snapshot_id)
     total = set(wthin["block_id"])
 
     report = []

@@ -2362,6 +2362,18 @@ def test_filtered_stats_below_decode():
             m = (data >= lo_) & (data <= hi_)
             assert n == int(m.sum()), (codec, lo, hi)
             assert abs(tot - float(data[m].sum())) < 1e-6, (codec, lo, hi)
+    # int64 beyond 2^53: every codec compares in the integer domain
+    # (a float64 compare reads 2^53+1 as 2^53)
+    big = pa.array([2**53, 2**53 + 1, 2**53 + 1, 2**53 + 3], type=pa.int64())
+    for codec in ["rle", "dict", "raw", "for", "bitpack", "delta"]:
+        enc = encode_with(codec, big)
+        for lo, hi, want in [
+            (None, 2**53, 1),
+            (2**53 + 1, 2**53 + 1, 2),
+            (2**53 + 2, None, 1),
+            (2**53 + 1, 2**53 + 2, 2),
+        ]:
+            assert _block_filtered_stats(enc, lo, hi)[0] == want, (codec, lo, hi)
 
 
 def test_schema_evolution_type_widening(spark, tmp_path):

@@ -19,7 +19,20 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from pyrle_spark.plans.compressed import group_count_where, group_sums_where
+from pyrle_spark.plans.compressed import (
+    count_by_value,
+    count_nulls,
+    count_where_contains,
+    count_where_eq,
+    count_where_in,
+    count_where_prefix,
+    distinct_values,
+    filtered_numeric_agg,
+    group_count_where,
+    numeric_stats,
+    sum_by_value,
+    topk_below_decode,
+)
 from pyrle_spark.plans.encode_job import (
     EncodeConfig,
     _residual_expr,
@@ -198,6 +211,20 @@ def test_pruning_bites_and_explain_launches_no_job(spark, table):
     assert info["survivor_blocks"] == 3  # blocks 1..3 hold i in [100, 250]
 
 
+AGGREGATES = {
+    "count_by_value": lambda s, t: count_by_value(s, t, "s").collect(),
+    "numeric_stats": lambda s, t: numeric_stats(s, t, "i").collect(),
+    "filtered_numeric_agg": lambda s, t: filtered_numeric_agg(s, t, "i", 10, 90).collect(),
+    "distinct_values": lambda s, t: distinct_values(s, t, "s").collect(),
+    "sum_by_value": lambda s, t: sum_by_value(s, t, "s", "i").collect(),
+    "count_where_in": lambda s, t: count_where_in(s, t, "s", ["s0042", "s0500"]).collect(),
+    "count_where_eq": lambda s, t: count_where_eq(s, t, "s", "s0042").collect(),
+    "count_where_prefix": lambda s, t: count_where_prefix(s, t, "s", "s01").collect(),
+    "count_where_contains": lambda s, t: count_where_contains(s, t, "s", "42").collect(),
+    "count_nulls": lambda s, t: count_nulls(s, t, "i"),
+}
+
+
 def test_job_counts_pinned(spark, table):
     t, _ = table
     assert spark_jobs(spark, lambda: verify_checksums(spark, t))[1] == 1
@@ -211,6 +238,15 @@ def test_job_counts_pinned(spark, table):
         spark, lambda: group_count_where(spark, t, "s", "i", 10, 90).collect()
     )[1] <= 2
     assert spark_jobs(spark, lambda: explain_scan(spark, t, point))[1] == 0
+    # each compressed aggregate: one read of the planned blocks plus the
+    # final aggregate's stage
+    for name, run in AGGREGATES.items():
+        assert spark_jobs(spark, lambda: run(spark, t))[1] <= 2, name
+    # top-k: the zone scan runs in the driver; the k-th value and the
+    # answer are one job each
+    assert spark_jobs(
+        spark, lambda: topk_below_decode(spark, t, "i", "w", 5).collect()
+    )[1] <= 2
 
 
 @pytest.mark.parametrize("codec", ["for", "delta"])
@@ -224,21 +260,19 @@ def test_timestamp_bounds_in_compressed_aggregates(spark, tmp_path, codec):
         i.alias("doc_seq"),
         F.concat(F.lit("k"), (i % 12).cast("string")).alias("k"),
         F.timestamp_seconds(F.lit(T0) + i * 37 + (i % 5)).alias("ts"),
-        (i % 97).alias("m"),
     )
     encode_table(
         spark, df, t,
-        EncodeConfig(columns=["k", "ts", "m"], order_col="doc_seq",
+        EncodeConfig(columns=["k", "ts"], order_col="doc_seq",
                      block_rows=512, codec_overrides={"ts": codec}),
     )
     lo, hi = _ts(700), _ts(3100)
     pdf = df.toPandas()
     sel = pdf[(pdf["ts"] >= lo) & (pdf["ts"] <= hi)]
     want_n = sel.groupby("k").size().to_dict()
-    want_m = sel.groupby("k")["m"].sum().to_dict()
     for bounds in [(lo, hi), (lo.replace(tzinfo=dt.timezone.utc),
                               hi.replace(tzinfo=dt.timezone.utc))]:
         got = group_count_where(spark, t, "k", "ts", *bounds).collect()
         assert {r["value_a"]: r["n_rows"] for r in got} == want_n
-        got = group_sums_where(spark, t, "k", None, ["m"], "ts", *bounds).collect()
-        assert {r["value_a"]: r["sum_m"] for r in got} == want_m
+        got = filtered_numeric_agg(spark, t, "ts", *bounds).first()
+        assert got["n_match"] == len(sel)
