@@ -336,7 +336,8 @@ def numeric_stats(
     """``SELECT count, sum, min, max`` of a numeric column from the
     encoded blocks — one row out.  rle blocks never expand their runs;
     everything else decodes only the one column's payload.  Nulls are
-    excluded (SQL aggregate semantics).
+    excluded (SQL aggregate semantics); with no live row ``n_rows`` and
+    ``sum_value`` are 0 and the bounds NULL.
 
     Note: ``sum`` accumulates in float64 per block then across blocks —
     exact for int payloads up to 2^53 per the usual float-sum caveat."""
@@ -352,8 +353,8 @@ def numeric_stats(
     )
     partial = _read_partials(spark, plan, [column], step, schema)
     return partial.agg(
-        F.sum("n").alias("n_rows"),
-        F.sum("total").alias("sum_value"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
+        F.coalesce(F.sum("total"), F.lit(0.0)).alias("sum_value"),
         F.min("vmin").alias("min_value"),
         F.max("vmax").alias("max_value"),
     )

@@ -760,6 +760,12 @@ def test_compressed_domain_respects_deletes(spark, tmp_path):
     }
     assert got_s == exp_s
 
+    # every row deleted: the planner reads no block, the answer stays
+    # zero rows summing to zero
+    delete_rows(spark, out, list(range(8192)))
+    row = numeric_stats(spark, out, "bucket").collect()[0]
+    assert (row["n_rows"], row["sum_value"], row["min_value"]) == (0, 0.0, None)
+
 
 @pytest.mark.parametrize(
     "doomed",
