@@ -10,8 +10,8 @@ value* (rle codec) — the expensive byte payload is never rebuilt.  Only
 codecs with no value structure (fsst / raw) fall back to decoding the
 single column.
 
-Scale shape: every aggregate here is one read of the read planner
-(:mod:`~pyrle_spark.plans.read_plan`).  ``plan_read`` picks the blocks
+Scale shape: every aggregate here reads its blocks through the read
+planner (:mod:`~pyrle_spark.plans.read_plan`).  ``plan_read`` picks the blocks
 in the driver — resume-dedup winners, rename aliases, zone and bloom
 pruning on the aggregate's predicate, fully deleted blocks dropped — and
 :func:`_read_partials` runs one ``read_blocks`` pass over them: each
