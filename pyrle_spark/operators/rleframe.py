@@ -5,7 +5,7 @@ Two layouts share one class:
 - **unblocked** (default): one row per key — ``(key columns ..., runs
   array<bigint>, values array<double>)``.  The reference's dict-of-Rle
   (rledict.py:37-131) becomes rows; its full-outer key alignment for
-  binary ops (methods.py:68-120) becomes a full-outer join; its per-key
+  binary ops (methods.py:68-120) becomes a key cogroup; its per-key
   ray parallelism (rledict.py:155-176) becomes Spark tasks.
 - **blocked** (``block_positions`` set): ``(key columns ..., block_id,
   runs, values)`` — each row holds the fixed position span
@@ -23,18 +23,25 @@ compat layer (pyrle_spark.kernels.rlecore), so both layers share exact
 semantics — including the zero-extension and normalization quirks.
 
 In the unblocked layout ``from_intervals``, the binary ops, ``getitems``
-and ``to_ranges`` are each one key-grouped Arrow pass.
+and ``to_ranges`` are each one key-grouped Arrow pass.  A binary op of
+two fresh coverages is ONE pass in all: ``coverage(A) + coverage(B)``
+cogroups both sides' interval events by key and runs the coverage
+kernel and the op in the same task.
 
-Materialization policy: sources
-(``from_intervals``, ``read_parquet``, ``from_rledict``) and row-local
-maps stay lazy; a binary op (arithmetic or comparison of two frames)
-ends with an eager ``localCheckpoint()``, so ``getitems``, ``to_ranges``
-and every later action read the combined frame instead of recomputing
-both operands and the join — the frame behaves like the reference's
-eager ``Rle``.  Trade-off: a local checkpoint truncates lineage and
-keeps its blocks on the executors, so if an executor is lost the frame
-cannot be recomputed and actions on it fail; the blocks are freed when
-the frame is garbage-collected.
+Materialization policy:
+- sources (``from_intervals``, ``read_parquet``, ``from_rledict``) and
+  row-local maps stay lazy.  An unblocked ``from_intervals`` frame holds
+  only its validated ``(key, s, e, w)`` event rows; its keyed coverage
+  DataFrame is built the first time ``.df`` is read, so a frame that
+  only feeds a binary op never plans it;
+- a binary op (arithmetic or comparison of two frames) ends with an
+  eager ``localCheckpoint()``, so ``getitems``, ``to_ranges`` and every
+  later action read the combined frame instead of recomputing both
+  operands — the frame behaves like the reference's eager ``Rle``.
+  Trade-off: a local checkpoint truncates lineage and keeps its blocks
+  on the executors, so if an executor is lost the frame cannot be
+  recomputed and actions on it fail; the blocks are freed when the
+  frame is garbage-collected.
 
 Blocked-mode semantics notes:
 - a missing BLOCK of a key that exists on both sides is a tail
@@ -117,11 +124,81 @@ def _split_blocks(runs, values, block_positions: int):
         yield b, lens.astype(np.int64), values[i:j].copy()
 
 
+def _coverage(tbl: pa.Table, start_col: str, end_col: str):
+    """One key's coverage ``(runs, values)`` from its ``(s, e, w)`` event
+    rows: each +w Start and -w End event goes straight to the reference
+    kernel (coverage.pyx:28-81 semantics), which sums events that share
+    a position exactly as :class:`RleDict` does.  A null position fails
+    with the source column named (the RleDict oracle refuses it too)."""
+    for c, name in (("s", start_col), ("e", end_col)):
+        if tbl.column(c).null_count:
+            raise ValueError(f"from_intervals: null in column {name!r}")
+    w = tbl.column("w").to_numpy()
+    pos = np.concatenate([tbl.column("s").to_numpy(), tbl.column("e").to_numpy()])
+    runs, values = k.coverage(pos, np.concatenate([w, -w]))
+    return k.normalize(runs, values)
+
+
+def _first_rle(tbl: pa.Table):
+    """``(runs, values)`` of the first row of a runs/values table."""
+    return (
+        tbl.column("runs")[0].values.to_numpy(),
+        # a NaN value may be stored as a null list element
+        tbl.column("values")[0].values.to_numpy(zero_copy_only=False),
+    )
+
+
+def _list_rows(col) -> list:
+    """Each row of an Arrow list column as a numpy view (None for a null
+    row); a null element of a double list reads as NaN."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.values.to_numpy(zero_copy_only=False)
+    off = col.offsets.to_numpy()
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    return [flat[off[i] : off[i + 1]] if valid[i] else None for i in range(len(col))]
+
+
+def _merge_pair(op: str, a, b, a_tail: bool = False, b_tail: bool = False):
+    """The op on one aligned pair of RLEs, each ``(runs, values)`` or None
+    for a missing side.  A missing side is one run of the present side's
+    length: NaN for eq/ne when it is a tail extension (``*_tail``: a
+    blocked key that exists on that side, just shorter — the equalize
+    rules, rle.py:17-31), else 0 (a zero-Rle, methods.py:104-111).  Only
+    EQUALITY comparisons extend with NaN (rle.py:272); order comparisons
+    go through ``__sub__``'s zero-extension (rle.py:438)."""
+    tail_fill = np.nan if op in ("cmp_eq", "cmp_ne") else 0.0
+
+    def fill(present_runs, tail):
+        total = int(np.sum(present_runs))
+        if not total:
+            return _empty_rle()
+        return np.array([total], dtype=np.int64), np.array([tail_fill if tail else 0.0])
+
+    if a is None:
+        a = fill(b[0], a_tail)
+    if b is None:
+        b = fill(a[0], b_tail)
+    if op.startswith("cmp_"):
+        return k.compare_op(op[len("cmp_") :], *a, *b)
+    return k.binary_op(op, *a, *b)
+
+
 class RleFrame:
-    def __init__(self, df: DataFrame, key_cols=("key",), block_positions=None):
-        self.df = df
+    def __init__(self, df: DataFrame | None, key_cols=("key",), block_positions=None):
+        self._df = df
+        # (event rows, start_col, end_col) of a fresh unblocked coverage
+        self._events = None
         self.key_cols = list(key_cols)
         self.block_positions = block_positions
+
+    @property
+    def df(self) -> DataFrame:
+        """The frame's keyed runs/values rows.  A fresh ``from_intervals``
+        frame builds its coverage pass here, the first time it is read."""
+        if self._df is None:
+            self._df = self._coverage_df()
+        return self._df
 
     @property
     def blocked(self) -> bool:
@@ -153,11 +230,12 @@ class RleFrame:
     ) -> "RleFrame":
         """Interval coverage per key (methods.py:139-156 distributed).
 
-        Unblocked: one key-grouped Arrow pass over the raw interval rows.
-        Each group's +value Start and -value End events go straight to
-        the reference kernel (coverage.pyx:28-81 semantics), which sums
-        events that share a position exactly as :class:`RleDict` does —
-        no relational pre-aggregation, so no shuffle beyond the grouping.
+        Unblocked: one key-grouped Arrow pass over the raw interval rows
+        (:func:`_coverage` per key) — no relational pre-aggregation, so
+        no shuffle beyond the grouping.  The frame keeps the event rows
+        and plans that pass only when ``.df`` is first read; a binary op
+        with another frame runs the coverage inside its own cogroup
+        pass instead (see :meth:`_binary`).
 
         With ``block_positions`` set the frame is built DIRECTLY in the
         blocked layout and no task ever holds a whole key: the Arrow
@@ -168,8 +246,25 @@ class RleFrame:
         relational boundary-union fill.
 
         A null Start or End fails the first action with an error naming
-        the column (the RleDict oracle refuses such input too)."""
+        the column (the RleDict oracle refuses such input too).  The
+        unblocked layout checks it in the coverage task; the blocked
+        layout pre-aggregates in SQL before any Python runs, so it
+        checks it there with ``raise_error``."""
         key_cols = list(key_cols)
+        val = F.col(value_col).cast("double") if value_col else F.lit(1.0)
+        if block_positions is None:
+            rf = cls(None, key_cols)
+            rf._events = (
+                df.select(
+                    *key_cols,
+                    F.col(start_col).cast("long").alias("s"),
+                    F.col(end_col).cast("long").alias("e"),
+                    val.alias("w"),
+                ),
+                start_col,
+                end_col,
+            )
+            return rf
 
         def position(c):
             return (
@@ -181,31 +276,38 @@ class RleFrame:
                 .cast("long")
             )
 
-        val = F.col(value_col).cast("double") if value_col else F.lit(1.0)
         src = df.select(
             *key_cols,
             position(start_col).alias("s"),
             position(end_col).alias("e"),
             val.alias("w"),
         )
-        if block_positions is not None:
-            return cls._from_events_blocked(src, key_cols, block_positions)
+        return cls._from_events_blocked(src, key_cols, block_positions)
+
+    def _coverage_df(self) -> DataFrame:
+        """The key-grouped coverage pass of a fresh ``from_intervals``."""
+        events, start_col, end_col = self._events
+        key_cols = self.key_cols
 
         def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             tbl = pa.Table.from_batches(list(batches))
             if tbl.num_rows == 0:
                 return
-            w = tbl.column("w").to_numpy()
-            pos = [tbl.column("s").to_numpy(), tbl.column("e").to_numpy()]
-            runs, values = k.coverage(np.concatenate(pos), np.concatenate([w, -w]))
-            runs, values = k.normalize(runs, values)
-            out = {c: [tbl.column(c)[0].as_py()] for c in key_cols}
-            out["runs"] = [runs]
-            out["values"] = [values]
-            yield pa.RecordBatch.from_pydict(out)
+            runs, values = _coverage(tbl, start_col, end_col)
+            group = {c: [tbl.column(c)[0].as_py()] for c in key_cols}
+            yield _rle_batch(group, [runs], [values])
 
-        keyed = src.groupBy(*key_cols).applyInArrow(build, _keyed_schema(key_cols))
-        return cls(keyed, key_cols)
+        return events.groupBy(*key_cols).applyInArrow(build, _keyed_schema(key_cols))
+
+    def _cogroup_side(self):
+        """This frame's side of a fused binary pass: the rows to group by
+        key, and the step that turns one key's rows into its
+        ``(runs, values)``.  A fresh coverage hands over its event rows,
+        any other frame its runs/values row."""
+        if self._events is not None:
+            events, start_col, end_col = self._events
+            return events, lambda tbl: _coverage(tbl, start_col, end_col)
+        return self.df.select(*self.key_cols, "runs", "values"), _first_rle
 
     @classmethod
     def _from_events_blocked(
@@ -458,15 +560,26 @@ class RleFrame:
     # ------------------------------------------------------------ binary ops
 
     def _binary(self, other: "RleFrame", op: str) -> "RleFrame":
-        """Full-outer alignment + row-local merge kernel
-        (methods.py:80-120 distributed).  Unblocked: align on key;
-        missing side → zero-Rle of the present side's length
-        (methods.py:104-111).  Blocked: align on (key, block_id) — each
-        task merges one block; a missing block of a PRESENT key is a
-        tail extension (0 for arithmetic, NaN for comparisons — the
-        equalize rules, rle.py:17-31), a fully missing key is a
-        zero-Rle as in the unblocked path.  The result is computed once,
-        here, and locally checkpointed (see the module docstring)."""
+        """Key alignment + per-pair merge kernel (methods.py:80-120
+        distributed); the pair step is :func:`_merge_pair` in both layouts.
+
+        Unblocked: one ``groupBy(key).cogroup(...).applyInArrow`` pass.
+        Each side gives one key's ``(runs, values)`` from its own rows —
+        a fresh ``from_intervals`` frame runs its coverage kernel on its
+        event rows in the same task, any other frame hands over its
+        runs/values row — so ``coverage(A) + coverage(B)`` is a single
+        Python stage after the key shuffle.  A key on one side only
+        meets a zero-Rle of its length (methods.py:104-111).
+
+        Blocked: a full-outer join on (key, block_id) — each task merges
+        one block; a missing block of a PRESENT key is a tail extension
+        (0 for arithmetic, NaN for eq/ne — the equalize rules,
+        rle.py:17-31), a fully missing key is a zero-Rle as in the
+        unblocked layout.  The keyed presence window needs both sides'
+        block rows, so this layout keeps the join.
+
+        The result is computed once, here, and locally checkpointed (see
+        the module docstring)."""
         if self.blocked != other.blocked or (
             self.blocked and self.block_positions != other.block_positions
         ):
@@ -474,6 +587,28 @@ class RleFrame:
                 "binary ops need matching layouts: rechunk both frames with "
                 "the same block_positions (or unchunk both)"
             )
+        key_cols = self.key_cols
+        if self.blocked:
+            out = self._binary_blocked(other, op)
+        else:
+            rows_a, step_a = self._cogroup_side()
+            rows_b, step_b = other._cogroup_side()
+
+            def merge(key, left: pa.Table, right: pa.Table) -> pa.Table:
+                a = step_a(left) if left.num_rows else None
+                b = step_b(right) if right.num_rows else None
+                runs, values = _merge_pair(op, a, b)
+                group = {c: [v.as_py()] for c, v in zip(key_cols, key)}
+                return pa.Table.from_batches([_rle_batch(group, [runs], [values])])
+
+            out = (
+                rows_a.groupBy(*key_cols)
+                .cogroup(rows_b.groupBy(*key_cols))
+                .applyInArrow(merge, _keyed_schema(key_cols))
+            )
+        return RleFrame(out.localCheckpoint(), key_cols, self.block_positions)
+
+    def _binary_blocked(self, other: "RleFrame", op: str) -> DataFrame:
         group_cols = self._group_cols
         a = self.df.select(
             *group_cols,
@@ -485,67 +620,43 @@ class RleFrame:
             F.col("runs").alias("runs_b"),
             F.col("values").alias("values_b"),
         )
-        joined = a.join(b, on=group_cols, how="full_outer")
-        blocked = self.blocked
-        if blocked:
-            # per-key presence: distinguishes "key shorter" (tail extend)
-            # from "key absent" (zero-Rle); keyed window, never global
-            wk = W.partitionBy(*self.key_cols)
-            joined = joined.withColumn(
+        # per-key presence: distinguishes "key shorter" (tail extend)
+        # from "key absent" (zero-Rle); keyed window, never global
+        wk = W.partitionBy(*self.key_cols)
+        joined = (
+            a.join(b, on=group_cols, how="full_outer")
+            .withColumn(
                 "a_present", F.max(F.col("runs_a").isNotNull().cast("int")).over(wk)
-            ).withColumn(
+            )
+            .withColumn(
                 "b_present", F.max(F.col("runs_b").isNotNull().cast("int")).over(wk)
             )
-        key_cols = self.key_cols
-        is_cmp = op.startswith("cmp_")
-        # only EQUALITY comparisons extend with NaN (rle.py:272); order
-        # comparisons go through __sub__'s zero-extension (rle.py:438,
-        # 17-31) — blocked and unblocked layouts must agree on this
-        is_nan_ext = op in ("cmp_eq", "cmp_ne")
-
-        def fill_missing(present_runs, is_tail_extension):
-            total = int(np.sum(present_runs))
-            if not total:
-                return _empty_rle()
-            fill = float("nan") if (is_nan_ext and is_tail_extension) else 0.0
-            return np.array([total], dtype=np.int64), np.array([fill])
+        )
 
         def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                pdf = batch.to_pandas()
+                ra, va, rb, vb = (
+                    _list_rows(batch.column(c))
+                    for c in ("runs_a", "values_a", "runs_b", "values_b")
+                )
+                a_tail = batch.column("a_present").to_numpy().astype(bool)
+                b_tail = batch.column("b_present").to_numpy().astype(bool)
                 out_runs, out_vals = [], []
-                for row in pdf.itertuples(index=False):
-                    rd = row._asdict()
-                    ra, va = rd["runs_a"], rd["values_a"]
-                    rb, vb = rd["runs_b"], rd["values_b"]
-                    if ra is None:
-                        ra, va = fill_missing(
-                            np.asarray(rb, dtype=np.int64),
-                            blocked and bool(rd["a_present"]),
-                        )
-                    if rb is None:
-                        rb, vb = fill_missing(
-                            np.asarray(ra, dtype=np.int64),
-                            blocked and bool(rd["b_present"]),
-                        )
-                    args = (
-                        np.asarray(ra, dtype=np.int64),
-                        np.asarray(va, dtype=np.float64),
-                        np.asarray(rb, dtype=np.int64),
-                        np.asarray(vb, dtype=np.float64),
+                for i in range(batch.num_rows):
+                    runs, values = _merge_pair(
+                        op,
+                        None if ra[i] is None else (ra[i], va[i]),
+                        None if rb[i] is None else (rb[i], vb[i]),
+                        a_tail[i],
+                        b_tail[i],
                     )
-                    if is_cmp:
-                        runs, values = k.compare_op(op[len("cmp_"):], *args)
-                    else:
-                        runs, values = k.binary_op(op, *args)
                     out_runs.append(runs)
                     out_vals.append(values)
                 yield _rle_batch(
                     {c: batch.column(c) for c in group_cols}, out_runs, out_vals
                 )
 
-        out = joined.mapInArrow(merge, _keyed_schema(key_cols, blocked))
-        return RleFrame(out.localCheckpoint(), key_cols, self.block_positions)
+        return joined.mapInArrow(merge, _keyed_schema(self.key_cols, blocked=True))
 
     def __add__(self, other):
         return self._apply_or_binary(other, "add")

@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 from pyrle_spark.codecs import Encoded
 from pyrle_spark.codecs.rawcodec import ZstdCodec
 from pyrle_spark.plans.encode_job import _session_tz
-from pyrle_spark.plans.read_plan import _range_mask, plan_read, read_blocks
+from pyrle_spark.plans.read_plan import (
+    _domain,
+    _range_mask,
+    _zone_value,
+    plan_read,
+    read_blocks,
+)
 
 __all__ = [
     "count_nulls",
@@ -451,9 +457,10 @@ def topk_below_decode(
     Two zone-guided passes, both exact:
 
     1. Zone scan (in the driver from the winners' thin rows, no Spark
-       job): per-block ``zmax`` of ``value_col``.  A greedy cover by
-       descending ``zmax`` picks the fewest blocks whose row count can
-       reach ``k``; only those decode.
+       job): per-block ``zmax`` of ``value_col``, parsed in the
+       column's physical domain (epoch units for timestamps).  A greedy
+       cover by descending ``zmax`` picks the fewest blocks whose row
+       count can reach ``k``; only those decode.
     2. Refinement: with ``v_k`` = the k-th value of pass 1 (ties broken
        by ``id_col``), any undecoded block with ``zmax >= v_k`` (or no
        zone — conservative) could still hold a winner, so exactly those
@@ -464,29 +471,34 @@ def topk_below_decode(
     only widens the candidate set, never narrows it.  At 10^12 rows the
     zone scan is a metadata pass and decode cost is O(blocks near the
     top), not O(table)."""
-    import math
-
-    from pyrle_spark.plans.encode_job import decode_table
-    from pyrle_spark.plans.read_plan import winner_thin
+    from pyrle_spark.plans.encode_job import _widest_type, decode_table
+    from pyrle_spark.plans.read_plan import _ts_parts, _us_to_unit, winner_thin
 
     aliases, thin = winner_thin(table_dir, snapshot_id)
     phys = aliases.get(value_col, value_col)
-    zones = [
-        (int(b), math.inf if zmax is None else float(zmax), int(n))
+    types = {a for c, a in zip(thin["column"], thin["arrow_type"]) if c == phys}
+    at = _widest_type(value_col, types) if types else None
+    # zones in the column's physical domain (epoch units for timestamps);
+    # None = no usable zone, so the block can always hold a winner
+    zones = sorted(
+        (int(b), _zone_value(zmax, at, "hi"), int(n))
         for b, c, zmax, n in zip(
             thin["block_id"], thin["column"], thin["zmax"], thin["n_rows"]
         )
         if c == phys
-    ]
-    # greedy cover: highest-zmax blocks first until >= k rows are in play
-    zones.sort(key=lambda t: (-t[1], t[0]))
+    )
+    # greedy cover: zoneless blocks, then highest zmax first (block id on
+    # a tie; the sort is stable) until >= k rows are in play
+    zones = [z for z in zones if z[1] is None] + sorted(
+        (z for z in zones if z[1] is not None), key=lambda z: z[1], reverse=True
+    )
     cover, cum = [], 0
     for bid, _zmax, n in zones:
         if cum >= k:
             break
         cover.append(bid)
         cum += n
-    rest = {bid: zmax for bid, zmax, _n in zones[len(cover) :]}
+    rest = zones[len(cover) :]
 
     def _decode(block_ids: list) -> DataFrame:
         return decode_table(
@@ -498,16 +510,25 @@ def topk_below_decode(
         ).select(id_col, value_col)
 
     head = _decode(cover) if cover else None
-    vk = -math.inf
+    vk = None  # the k-th value in the zones' domain; None = no bound
     if head is not None:
         kth = (
             head.orderBy(F.col(value_col).desc(), F.col(id_col))
             .limit(k)
-            .collect()
-        )  # bounded: <= k rows
-        if len(kth) == k:
-            vk = float(kth[-1][value_col])
-    extra = [bid for bid, zmax in rest.items() if zmax >= vk]
+            .toArrow()  # bounded: <= k rows
+            .column(value_col)
+        )
+        if len(kth) == k and kth[k - 1].is_valid:
+            vk = kth[k - 1]
+            if pa.types.is_timestamp(vk.type):
+                # Spark hands timestamps over in microseconds; floor to
+                # the column's unit, so the bound can only admit blocks
+                vk = _us_to_unit(vk.cast(pa.int64()).as_py(), _ts_parts(at)[0], "hi")
+            else:
+                vk = vk.as_py()
+    extra = [
+        bid for bid, zmax, _n in rest if vk is None or zmax is None or zmax >= vk
+    ]
     parts = [p for p in (head, _decode(extra) if extra else None) if p is not None]
     if not parts:
         return spark.createDataFrame([], f"{id_col} long, {value_col} long")
@@ -1153,6 +1174,14 @@ def group_minmax_pair(
 # ------------------------------------------------------ string predicates
 
 
+def _require_string(plan, column: str, fn: str) -> None:
+    """Refuse a string predicate on a non-string column in the driver,
+    before any Spark job (Arrow's string kernels have no other types)."""
+    at = plan.types.get(column)
+    if at is not None and _domain(at) != "str":
+        raise TypeError(f"{fn}: column {column!r} is {at}, not a string column")
+
+
 def _block_prefix_count(enc: Encoded, prefix: str, kill) -> int:
     """Rows starting with ``prefix`` in one block: dict blocks test the
     DICTIONARY (O(#distinct) startswith, counts off the code stream);
@@ -1224,6 +1253,7 @@ def count_where_prefix(
     plan, _, _ = _plan_blocks(
         spark, table_dir, [column], snapshot_id, predicates=preds
     )
+    _require_string(plan, column, "count_where_prefix")
     return _count_matches(
         spark, plan, column,
         lambda enc, kill: _block_prefix_count(enc, prefix, kill),
@@ -1269,6 +1299,7 @@ def count_where_contains(
     the probed column — on a dictionary-friendly corpus the bytes
     decoded are the dictionaries, not the data."""
     plan, _, _ = _plan_blocks(spark, table_dir, [column], snapshot_id)
+    _require_string(plan, column, "count_where_contains")
     return _count_matches(
         spark, plan, column,
         lambda enc, kill: _block_contains_count(enc, sub, kill),

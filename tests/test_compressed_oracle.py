@@ -28,6 +28,7 @@ from pyrle_spark.plans.compressed import (
     topk_below_decode,
 )
 from pyrle_spark.plans.encode_job import EncodeConfig, delete_rows, encode_table
+from tests.conftest import spark_jobs
 
 BR = 512
 N = 4096  # 8 blocks
@@ -208,3 +209,65 @@ def test_topk_below_decode(spark, table, k):
         con, f"SELECT rid, v FROM src ORDER BY v DESC NULLS LAST, rid LIMIT {k}"
     )
     assert got == want
+
+
+@pytest.fixture(scope="module")
+def ts_table(spark, tmp_path_factory):
+    """A 2,048-row, 4-block table with a timestamp column ``ts``: ties
+    across blocks, nulls in block 1, and a delete of the latest rows of
+    block 3 (its zone still names them)."""
+    i = F.col("id")
+    sec = (i * 7919) % 601 + F.when(i >= 3 * BR, 300).otherwise(0)
+    src = spark.range(0, 4 * BR, 1, 4).select(
+        i.alias("doc_seq"),
+        i.alias("rid"),
+        F.when(((i / BR).cast("long") == 1) & (i % 3 == 0), None)
+        .otherwise(F.timestamp_seconds(F.lit(1_700_000_000) + sec))
+        .alias("ts"),
+    )
+    t = str(tmp_path_factory.mktemp("coracle_ts") / "t")
+    encode_table(
+        spark, src, t,
+        EncodeConfig(columns=["rid", "ts"], order_col="doc_seq", block_rows=BR),
+    )
+    late = [
+        r["rid"]
+        for r in src.filter(i >= 3 * BR).orderBy(F.col("ts").desc()).limit(40).collect()
+    ]
+    delete_rows(spark, t, late)
+    con = duckdb.connect()
+    con.register("src_arrow", src.toArrow())
+    con.execute(
+        "CREATE TABLE src AS SELECT * FROM src_arrow "
+        f"WHERE doc_seq NOT IN ({', '.join(map(str, late))})"
+    )
+    return t, con
+
+
+@pytest.mark.parametrize("k", [1, 25, 700])
+def test_topk_below_decode_timestamp(spark, ts_table, k):
+    t, con = ts_table
+    got = [
+        (r["rid"], r["us"])
+        for r in topk_below_decode(spark, t, "ts", "rid", k)
+        .select("rid", F.unix_micros("ts").alias("us"))
+        .collect()
+    ]
+    want = _q(
+        con,
+        f"SELECT rid, epoch_us(ts) FROM src ORDER BY ts DESC NULLS LAST, rid LIMIT {k}",
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("fn", [count_where_prefix, count_where_contains])
+@pytest.mark.parametrize("col", ["v", "rid"])
+def test_string_predicate_on_non_string_refused(spark, table, fn, col):
+    """A string predicate on an int column is refused in the driver, with
+    the column and its type named, before any Spark job."""
+    t, _ = table
+    refused, jobs = spark_jobs(
+        spark, lambda: pytest.raises(TypeError, fn, spark, t, col, "12")
+    )
+    refused.match(f"{fn.__name__}: column '{col}' is int64, not a string column")
+    assert jobs == 0
