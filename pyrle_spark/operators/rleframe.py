@@ -1088,8 +1088,7 @@ class RleFrame:
             starts = q.column("Start").to_numpy()
             order = np.argsort(starts, kind="stable")
             ids, qs, qe, runs, vals = k.getitems(
-                rle.column("runs")[0].values.to_numpy(),
-                rle.column("values")[0].values.to_numpy(zero_copy_only=False),
+                *_first_rle(rle),
                 starts[order],
                 q.column("End").to_numpy()[order],
             )
