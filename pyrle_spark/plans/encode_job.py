@@ -18,12 +18,14 @@ Design (scale-first, see SURVEY.md §3.1/§4.2):
   count scales with block count, executors just drain the task queue.
   Otherwise one hash repartition on block_id restores block integrity.
 - Output is an Iceberg-style table (sources/icetable.py) of encoded
-  rows; every snapshot carries per-partition **lineage** rows (blocks,
-  rows, bytes in/out, codecs, MB/s, checksums) in its manifest.
+  rows.  Each encode task writes its own data file; the driver checks
+  the tasks' stat rows and commits one snapshot whose manifest carries
+  per-partition **lineage** rows (blocks, rows, bytes in/out, codecs,
+  MB/s).
 - **Resume**: a rerun reads the complete block ids of the current
   snapshot from its data files' thin columns in the driver (no Spark
-  job), anti-joins the input against them and encodes only the
-  remainder.
+  job), filters them out of the input and encodes only the remainder;
+  a pass with nothing left commits no snapshot.
 - Decode reverses the pass (same streaming mapInArrow, one row group per
   block) and is verified against stored crc32 checksums per
   (block, column) — no join against the source needed at scale.
@@ -37,7 +39,9 @@ Spark tasks.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
 import time
 import zlib
 from dataclasses import dataclass, field
@@ -437,8 +441,9 @@ def encode_table(
 
     With ``config.blocks_per_pass`` set, the job commits one snapshot per
     block range — a kill loses at most one in-flight pass (snapshot
-    commits are atomic), and the rerun's resume anti-join skips every
-    committed complete block.  This is the checkpoint granularity knob:
+    commits are atomic), and the rerun's resume filter skips every
+    committed complete block; a range with nothing left to encode
+    commits no snapshot.  This is the checkpoint granularity knob:
     at 10^12 docs you'd commit every O(10k) blocks, keeping both the
     redo window and the manifest append small.
     """
@@ -511,7 +516,7 @@ def _prior_props_guarded(table: IceTable, cols: list) -> tuple:
     clash = prior_dropped & set(cols)
     if clash:
         # stale pre-drop blocks still live in the data files; the
-        # resume anti-join would see them as committed and decode
+        # resume filter would see them as committed and decode
         # would serve pre-drop data for the "new" column
         raise ValueError(
             f"columns {sorted(clash)} were dropped from {table.path} but "
@@ -581,12 +586,16 @@ def _encode_pass_inner(
         )
     table = IceTable(out_dir)
     prior, committed, resumed_blocks = _prior_state(table, cols, config)
-    prior_cols, prior_dropped, prior_aliases, prior_src_schema, prior_carry = prior
-    if committed:
-        done = spark.createDataFrame(
-            [(b,) for b in sorted(committed)], "block_id long"
-        )
-        base = base.join(done, base["_block_id"] == done["block_id"], "left_anti")
+    done = sorted(
+        b for b in committed or ()
+        if block_range is None or block_range[0] <= b < block_range[1]
+    )
+    if done:
+        # resume: drop committed blocks before the shuffle.  A literal
+        # set (Catalyst InSet) launches no job, where a join against a
+        # driver-built frame costs a collect or a shuffle of both sides;
+        # with blocks_per_pass it holds at most one pass's blocks
+        base = base.filter(~F.col("_block_id").isin(done))
     work = base
     skip_sort = config.block_aligned and config.input_presorted
     if not config.block_aligned:
@@ -600,26 +609,35 @@ def _encode_pass_inner(
         work = work.repartition(nparts, "_block_id")
     if not skip_sort:
         work = work.sortWithinPartitions("_block_id", "_order")
-    encoded = work.mapInArrow(
-        _make_encode_fn(
-            cols,
-            config.zstd_threshold,
-            verify_order=skip_sort,
-            overrides=dict(config.codec_overrides) or None,
-        ),
-        ENCODED_SPARK_SCHEMA,
-    )
-    src_schema_json = {c: base.schema[c].dataType.jsonValue() for c in cols}
-    return _commit_encoded(
-        spark,
-        table,
-        encoded,
-        config,
+    encode = _make_encode_fn(
         cols,
-        (prior_cols, prior_dropped, prior_aliases, prior_src_schema, prior_carry),
-        resumed_blocks,
-        out_dir,
-        src_schema_json,
+        config.zstd_threshold,
+        verify_order=skip_sort,
+        overrides=dict(config.codec_overrides) or None,
+    )
+    snap_id = table.new_snapshot_id()
+    data_dir = os.path.join(out_dir, "data", snap_id)
+    t0 = time.time()
+    # each task writes its own data file (_write_block_file); only the
+    # stat rows come back to the driver
+    stats = work.mapInArrow(
+        lambda batches: _write_block_file(encode(batches), data_dir),
+        _STAT_SPARK_SCHEMA,
+    ).toArrow()
+    wall_s = time.time() - t0
+    # nothing left to encode: commit no snapshot — unless the table is
+    # new or the pass adds columns, whose snapshot records their types
+    if stats.num_rows == 0 and committed is not None and set(cols) <= prior[0]:
+        return _noop_summary(table, resumed_blocks)
+    src_schema_json = {c: base.schema[c].dataType.jsonValue() for c in cols}
+    return _commit_blocks(
+        table,
+        snap_id,
+        stats,
+        cols,
+        _snapshot_properties(config, cols, prior, src_schema_json),
+        resumed_blocks=resumed_blocks,
+        wall_s=wall_s,
     )
 
 
@@ -644,85 +662,132 @@ def _snapshot_properties(config: EncodeConfig, cols, prior, src_schema_json) -> 
     }
 
 
-def _commit_encoded(
-    spark: SparkSession,
-    table: IceTable,
-    encoded: DataFrame,
-    config: EncodeConfig,
-    cols: list,
-    prior: tuple,
-    resumed_blocks: int,
-    out_dir: str,
-    src_schema_json: dict,
-) -> dict:
-    t0 = time.time()
-    snap_id = table.write_snapshot(
-        encoded,
-        mode="append",
-        # buffers are already codec-compressed; parquet re-compression
-        # would only burn JVM CPU next to 32 busy python workers
-        write_options={
-            "compression": "none",
-            # encoded rows carry multi-MB pre-compressed buffers; the
-            # default 128MB row groups just inflate writer heap (the
-            # whole group buffers in memory per task) with zero scan
-            # benefit — blocks are fetched by block_id, not range-scanned
-            "parquet.block.size": str(16 * 1024 * 1024),
-        },
-        properties=_snapshot_properties(config, cols, prior, src_schema_json),
+# ------------------------------------------- one block writer, one commit
+#
+# Every encode lands the same way — encode_table, encode_parquet_dir and
+# the format("pyrle") writer alike (Iceberg's commit protocol): each task
+# streams its encoded block batches into ONE uniquely named data file it
+# writes itself (:func:`_write_block_file`) and reports only per-(block,
+# column) stat rows; the driver checks those rows and links exactly the
+# reported files in one metadata commit (:func:`_commit_blocks`).  The
+# encoded bytes never cross into the JVM.
+
+_STAT_SPARK_SCHEMA = (
+    "block_id long, column string, codec string, n_rows long, "
+    "bytes_in long, bytes_out long, encode_ns long, n_runs long, "
+    "part_id int, file string, file_bytes long"
+)
+_STAT_COLS = [
+    "block_id", "column", "codec", "n_rows", "bytes_in", "bytes_out",
+    "encode_ns", "n_runs", "part_id",
+]
+_STAT_PA_SCHEMA = pa.schema(
+    [_ENCODED_PA_SCHEMA.field(c) for c in _STAT_COLS]
+    + [("file", pa.string()), ("file_bytes", pa.int64())]
+)
+
+
+def _write_block_file(encoded, data_dir: str):
+    """Task side of every encode: write the encoded block batches
+    ``encoded`` (the :func:`_make_encode_fn` kernel's output) into ONE
+    uniquely named data file under ``data_dir`` — pyarrow writer, one row
+    group per block, since multi-MB pre-compressed buffers want small
+    groups — and yield only their stat rows (``_STAT_PA_SCHEMA``).
+    Kill-atomic: the file is written under a ``.inprogress`` name and
+    renamed at close, so a killed attempt never leaves a readable
+    ``.parquet`` — only an orphan vacuum() reclaims — and the manifest
+    links exactly what successful attempts reported.  A task with no
+    rows writes no file."""
+    import uuid as _uuid
+
+    import pyarrow.parquet as pq
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else 0
+    writer = None
+    final = tmp = None
+    kept = []
+    try:
+        for enc_rb in encoded:
+            if writer is None:
+                os.makedirs(data_dir, exist_ok=True)
+                final = os.path.join(
+                    data_dir, f"part-{pid:05d}-{_uuid.uuid4().hex[:8]}.parquet"
+                )
+                tmp = final + ".inprogress"
+                writer = pq.ParquetWriter(
+                    tmp, _ENCODED_PA_SCHEMA, compression="none"
+                )
+            writer.write_batch(enc_rb)
+            kept.append(enc_rb.select(_STAT_COLS))
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return
+    os.replace(tmp, final)
+    stats = pa.Table.from_batches(kept)
+    n = stats.num_rows
+    stats = stats.append_column("file", pa.array([final] * n, pa.string()))
+    stats = stats.append_column(
+        "file_bytes", pa.array([os.path.getsize(final)] * n, pa.int64())
     )
-    wall_s = time.time() - t0
-    # lineage: per-partition metrics aggregated from THIS pass's files only.
-    # ONE Spark job at (part_id, column, codec) granularity — that's
-    # O(parts × cols × codecs) rows, tiny at any scale — then rolled up
-    # driver-side into the per-partition and per-column views plus the
-    # aligned-mode guard (previously three separate scan jobs).
-    manifest0 = table._manifest(snap_id)
-    # [-0:] would be the WHOLE list: a fully-resumed pass adds zero files
-    # and must report zero lineage, not re-attribute prior snapshots'
-    n_added = manifest0["added_files"]
-    added = [f["path"] for f in manifest0["files"][-n_added:]] if n_added else []
-    enc_df = (
-        spark.read.parquet(*added)
-        if added
-        else table.read_table(spark, snap_id).limit(0)
+    yield from stats.combine_chunks().to_batches()
+
+
+def _remove_files(paths) -> None:
+    """Best-effort removal of written data files (and of their
+    directories once empty) — the cleanup of a refused write."""
+    for p in set(paths):
+        with contextlib.suppress(OSError):
+            os.remove(p)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(p))
+
+
+def _check_split_blocks(stats: pa.Table) -> None:
+    """The split-block check, run on a write's stat rows before anything
+    commits: a (block, column) written twice means the input was not
+    clustered by block — a scan split or a task boundary cut a block in
+    two, or a task revisited it.  Read-side dedup would keep one part
+    and silently drop the other's rows, so the written files are removed
+    and the write fails instead."""
+    import pyarrow.compute as pc
+
+    g = stats.group_by(["block_id", "column"], use_threads=False).aggregate(
+        [([], "count_all")]
     )
-    cells = (
-        enc_df.groupBy("part_id", "column", "codec")
-        .agg(
-            F.count(F.lit(1)).alias("blocks"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-            F.sum("encode_ns").alias("encode_ns"),
-            F.sum("n_runs").alias("runs_emitted"),
-            F.sum(
-                F.when(F.col("n_rows") != config.block_rows, 1).otherwise(0)
-            ).alias("partial_blocks"),
-        )
-        .collect()
+    dup = g.filter(pc.greater(g["count_all"], 1))
+    if dup.num_rows == 0:
+        return
+    bid = dup["block_id"][0].as_py()
+    files = sorted(
+        set(stats.filter(pc.equal(stats["block_id"], bid))["file"].to_pylist())
     )
-    return _finish_snapshot(
-        table, out_dir, snap_id, cells, cols, config, resumed_blocks, wall_s
+    _remove_files(stats["file"].to_pylist())
+    raise ValueError(
+        f"block {bid} was written more than once (files {files}): the "
+        "input was not clustered by block — repartition by "
+        "floor(order_col / block_rows) and sortWithinPartitions(order_col), "
+        "or encode it with encode_table(block_aligned=False)"
     )
 
 
-def _finish_snapshot(
-    table: IceTable,
-    out_dir: str,
-    snap_id: str,
-    cells: list,
-    cols: list,
-    config: EncodeConfig,
-    resumed_blocks: int,
-    wall_s: float,
-) -> dict:
-    """Roll lineage cells (one row per (part_id, column, codec)) into the
-    per-partition and per-column lineage views, run the aligned-mode
-    partial-block guard, and attach the lineage to the snapshot manifest."""
+def _lineage(stats: pa.Table, cols: list) -> tuple:
+    """Roll a write's stat rows (``_STAT_COLS``) into the per-partition
+    and per-column lineage views, through one cell per (part_id, column,
+    codec); sums follow SQL (all-null ``n_runs`` sums to None)."""
+    g = stats.group_by(["part_id", "column", "codec"], use_threads=False).aggregate([
+        ("block_id", "count"), ("n_rows", "sum"), ("bytes_in", "sum"),
+        ("bytes_out", "sum"), ("encode_ns", "sum"), ("n_runs", "sum"),
+    ])
+    names = {"block_id_count": "blocks", "n_rows_sum": "rows",
+             "n_runs_sum": "runs_emitted"}
+    cells = g.rename_columns(
+        [names.get(c, c.removesuffix("_sum")) for c in g.column_names]
+    ).to_pylist()
     lineage_by_part: dict = {}
     col_by_key: dict = {}
-    partials_by_col: dict = {}
     for c in cells:
         p = lineage_by_part.setdefault(
             c["part_id"],
@@ -745,76 +810,83 @@ def _finish_snapshot(
         cc["bytes_out"] += c["bytes_out"]
         if c["runs_emitted"] is not None:
             cc["runs_emitted"] = (cc["runs_emitted"] or 0) + c["runs_emitted"]
-        partials_by_col[c["column"]] = (
-            partials_by_col.get(c["column"], 0) + c["partial_blocks"]
-        )
-    lineage_rows = sorted(lineage_by_part.values(), key=lambda r: r["part_id"])
-    per_column = sorted(col_by_key.values(), key=lambda r: (r["column"], r["codec"]))
-    for row in lineage_rows:
+    parts = sorted(lineage_by_part.values(), key=lambda r: r["part_id"])
+    for row in parts:
         ns = max(row["encode_ns"], 1)
         row["encode_mb_per_s"] = round(row["bytes_in"] / 1e6 / (ns / 1e9), 2)
-    # aligned-mode guard: a scan split that broke a block in two would
-    # silently emit duplicate partial blocks; only the single trailing
-    # block may be partial (per column)
-    if config.block_aligned and cells:
-        bad = {c: n for c, n in partials_by_col.items() if n > 1}
-        if bad:
-            raise RuntimeError(
-                f"block_aligned encode produced split blocks: {bad}; "
-                "the input scan is not block-aligned — write the source "
-                "with generate_webtext(block_rows=...) or use "
-                "block_aligned=False"
-            )
-    summary = {
-        "snapshot_id": snap_id,
-        "wall_s": round(wall_s, 3),
-        "resumed_committed_blocks": resumed_blocks,
-        "bytes_in": int(sum(r["bytes_in"] for r in lineage_rows)) if lineage_rows else 0,
-        "bytes_out": int(sum(r["bytes_out"] for r in lineage_rows)) if lineage_rows else 0,
-        "partitions": lineage_rows,
-        "columns": per_column,
-    }
-    # attach lineage to the snapshot manifest (atomic re-commit of metadata)
-    import os
+    return parts, sorted(col_by_key.values(), key=lambda r: (r["column"], r["codec"]))
 
-    snap_path = os.path.join(out_dir, "metadata", f"snap-{snap_id}.json")
-    with open(snap_path) as f:
-        manifest = json.load(f)
-    manifest["properties"]["lineage"] = {
-        "partitions": lineage_rows,
+
+def _commit_blocks(
+    table: IceTable,
+    snap_id: str,
+    stats: pa.Table,
+    cols: list,
+    properties: dict,
+    mode: str = "append",
+    resumed_blocks: int = 0,
+    wall_s: float = 0.0,
+) -> dict:
+    """Driver side of every encode: check the tasks' stat rows
+    (:func:`_check_split_blocks`), roll them up into lineage, and link
+    the reported files as snapshot ``snap_id`` in one metadata commit
+    that carries the lineage.  Returns the encode summary."""
+    _check_split_blocks(stats)
+    parts, per_column = _lineage(stats, cols)
+    wall_s = round(wall_s, 3)
+    files = sorted(
+        set(zip(stats["file"].to_pylist(), stats["file_bytes"].to_pylist()))
+    )
+    table.commit_files(
+        snap_id,
+        [{"path": f, "bytes": b} for f, b in files],
+        _encoded_schema_json(),
+        mode=mode,
+        properties={
+            **properties,
+            "lineage": {"partitions": parts, "columns": per_column, "wall_s": wall_s},
+        },
+    )
+    return {
+        "snapshot_id": snap_id,
+        "wall_s": wall_s,
+        "resumed_committed_blocks": resumed_blocks,
+        "bytes_in": sum(r["bytes_in"] for r in parts),
+        "bytes_out": sum(r["bytes_out"] for r in parts),
+        "partitions": parts,
         "columns": per_column,
-        "wall_s": summary["wall_s"],
     }
-    tmp = snap_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, default=str)
-    os.replace(tmp, snap_path)
-    return summary
+
+
+def _noop_summary(table: IceTable, resumed_blocks: int) -> dict:
+    """The summary of a pass that found every block committed: it commits
+    no snapshot and reports the current one with zero lineage."""
+    return {
+        "snapshot_id": table.current_snapshot_id(),
+        "wall_s": 0.0,
+        "resumed_committed_blocks": resumed_blocks,
+        "bytes_in": 0,
+        "bytes_out": 0,
+        "partitions": [],
+        "columns": [],
+    }
 
 
 # ------------------------------------------------- file-direct encode path
 #
-# encode_table's mapInArrow-over-a-JVM-scan pays a double transfer of every
-# raw byte: parquet → JVM columnar batches → Arrow IPC over the local
-# socket → Python.  Measured on webtext that transfer, not the codecs, is
-# the encode bottleneck (BENCH/BASELINE.md: a no-op scan+transfer pass
-# costs the same as the full encode).  encode_parquet_dir removes it: the
-# driver plans — file footers, the resume set, the task payloads, the
-# snapshot commit — while the Arrow workers stream
-# parquet → codecs → parquet directly, exactly a DataSourceV2 columnar
-# reader/writer pair.  The driver touches O(#files) footers and the
+# encode_table reads its input through a Spark scan, so every raw byte
+# crosses twice before a codec sees it: parquet → JVM columnar batches →
+# Arrow IPC over the local socket → Python.  Measured on webtext that
+# transfer, not the codecs, is the encode bottleneck (BENCH/BASELINE.md:
+# a no-op scan+transfer pass costs the same as the full encode).
+# encode_parquet_dir removes it for block-aligned parquet input: the
+# driver plans — file footers, the resume set, the task payloads — and
+# the Arrow workers read parquet with pyarrow, so the raw bytes never
+# enter the JVM.  Both paths land their blocks the same way (the shared
+# writer and commit above); the driver touches O(#files) footers and the
 # manifest's thin columns, never data.
 
 _FOOTER_SCHEMA = "path string, min_order long, max_order long, n_rows long"
-_STAT_SPARK_SCHEMA = (
-    "block_id long, column string, codec string, n_rows long, "
-    "bytes_in long, bytes_out long, encode_ns long, n_runs long, "
-    "part_id int, file string, file_bytes long"
-)
-_STAT_COLS = [
-    "block_id", "column", "codec", "n_rows", "bytes_in", "bytes_out",
-    "encode_ns", "n_runs", "part_id",
-]
 
 
 def _file_footer_stats(path: str, order_col: str):
@@ -952,68 +1024,6 @@ def _make_file_encode_fn(
     return file_stream
 
 
-def _make_direct_write_fn(
-    columns: list,
-    order_col: str,
-    block_rows: int,
-    zstd_threshold: float,
-    data_dir: str,
-):
-    """File-direct encode + direct parquet write over one task's work
-    rows (see :func:`_make_file_encode_fn`): the task writes ONE
-    uniquely named data file itself (pyarrow writer, one row group per
-    block — multi-MB pre-compressed buffers want small groups) and yields
-    only per-block lineage stats.  Kill-atomic: the file is written under
-    a ``.inprogress`` name and renamed at close, so a killed attempt never
-    leaves a readable ``.parquet`` — only an orphan vacuum() reclaims —
-    and the manifest links exactly what successful attempts reported."""
-    encode = _make_file_encode_fn(columns, order_col, block_rows, zstd_threshold)
-
-    def stream(work):
-        import os
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        writer = None
-        final = tmp = None
-        kept = []
-        try:
-            for enc_rb in encode(work):
-                if writer is None:
-                    os.makedirs(data_dir, exist_ok=True)
-                    final = os.path.join(
-                        data_dir,
-                        f"part-{pid:05d}-{_uuid.uuid4().hex[:8]}.parquet",
-                    )
-                    tmp = final + ".inprogress"
-                    writer = pq.ParquetWriter(
-                        tmp, _ENCODED_PA_SCHEMA, compression="none"
-                    )
-                writer.write_batch(enc_rb)
-                kept.append(enc_rb.select(_STAT_COLS))
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            return
-        os.replace(tmp, final)
-        fsize = os.path.getsize(final)
-        stats = pa.Table.from_batches(kept)
-        stats = stats.append_column(
-            "file", pa.array([final] * stats.num_rows, type=pa.string())
-        )
-        stats = stats.append_column(
-            "file_bytes",
-            pa.array([fsize] * stats.num_rows, type=pa.int64()),
-        )
-        yield from stats.combine_chunks().to_batches()
-
-    return stream
-
-
 def _parquet_source_schema(path: str, cols: list) -> dict:
     """Logical Spark type per column from a parquet footer (the
     ``source_schema`` snapshot property, used to type empty tables)."""
@@ -1025,30 +1035,6 @@ def _parquet_source_schema(path: str, cols: list) -> dict:
         c: from_arrow_type(_jvm_equivalent_type(sch.field(c).type)).jsonValue()
         for c in cols
     }
-
-
-def _stat_cells(stats: pa.Table, block_rows: int) -> list:
-    """Roll per-(block, column) stat rows (``_STAT_COLS``) into one
-    lineage cell per (part_id, column, codec), the input of
-    :func:`_finish_snapshot`; sums follow SQL (all-null ``n_runs`` sums
-    to None)."""
-    import pyarrow.compute as pc
-
-    partial = pc.cast(pc.not_equal(stats["n_rows"], block_rows), pa.int64())
-    g = (
-        stats.append_column("partial_blocks", partial)
-        .group_by(["part_id", "column", "codec"], use_threads=False)
-        .aggregate([
-            ("block_id", "count"), ("n_rows", "sum"), ("bytes_in", "sum"),
-            ("bytes_out", "sum"), ("encode_ns", "sum"), ("n_runs", "sum"),
-            ("partial_blocks", "sum"),
-        ])
-    )
-    names = {"block_id_count": "blocks", "n_rows_sum": "rows",
-             "n_runs_sum": "runs_emitted"}
-    return g.rename_columns(
-        [names.get(c, c.removesuffix("_sum")) for c in g.column_names]
-    ).to_pylist()
 
 
 def encode_parquet_dir(
@@ -1067,7 +1053,7 @@ def encode_parquet_dir(
       over the files' block spans);
     - rows within a file are sorted by ``order_col`` (the shared encode
       kernel verifies strict monotonicity per block).
-    Arbitrary layouts should use :func:`encode_table` (JVM scan +
+    Arbitrary layouts should use :func:`encode_table` (Spark scan +
     shuffle-to-blocks), which handles any input.
 
     Resume is exact and file-granular → block-granular: the driver reads
@@ -1083,18 +1069,16 @@ def encode_parquet_dir(
     The split is fixed before the job starts: there is no dynamic
     rebalancing, so files of very different sizes make uneven tasks.
 
-    Each task writes its own kill-atomic data file (Iceberg's commit
-    protocol: uniquely named task files + one metadata commit of the
-    reported list), so the encoded bytes never cross into the JVM either;
-    the job's only output is the per-(block, column) stat rows, which the
-    driver rolls up into the lineage cells.
+    Blocks land like every encode's: each task writes its own
+    kill-atomic data file (:func:`_write_block_file`) and the job's only
+    output is the per-(block, column) stat rows, which the driver checks
+    and commits (:func:`_commit_blocks`).  A fully committed input
+    launches no job and commits no snapshot.
 
-    Output is bit-identical to ``encode_table(..., block_aligned=True,
-    input_presorted=True)`` on the same input (pinned by tests): blocks
-    are a property of the data, not of the path that encoded them.
+    Output is bit-identical to :func:`encode_table` on the same input,
+    aligned or shuffled (pinned by tests): blocks are a property of the
+    data, not of the path that encoded them.
     """
-    import os
-
     cols = list(config.columns)
     if not config.block_aligned:
         raise ValueError(
@@ -1163,22 +1147,11 @@ def encode_parquet_dir(
     else:
         work_rows = [(p, None) for _, _, p in spans]
     if not work_rows:
-        # everything already committed: no-op pass, keep current snapshot
-        return {
-            "snapshot_id": table._read_meta()["current_snapshot_id"],
-            "wall_s": 0.0,
-            "resumed_committed_blocks": resumed_blocks,
-            "bytes_in": 0,
-            "bytes_out": 0,
-            "partitions": [],
-            "columns": [],
-        }
+        return _noop_summary(table, resumed_blocks)
     src_schema_json = _parquet_source_schema(files[0], cols)
     snap_id = table.new_snapshot_id()
-    write = _make_direct_write_fn(
-        cols, config.order_col, br, config.zstd_threshold,
-        os.path.join(out_dir, "data", snap_id),
-    )
+    data_dir = os.path.join(out_dir, "data", snap_id)
+    encode = _make_file_encode_fn(cols, config.order_col, br, config.zstd_threshold)
     t0 = time.time()
     # ONE job runs the whole encode; its output is the raw stat rows,
     # O(blocks × columns), rolled up here.  A lost-executor recompute
@@ -1188,23 +1161,17 @@ def encode_parquet_dir(
     stats = run_tasks(
         spark,
         [json.dumps(part) for part in contiguous_slices(work_rows, par)],
-        lambda payload: write(json.loads(payload)),
+        lambda payload: _write_block_file(encode(json.loads(payload)), data_dir),
         _STAT_SPARK_SCHEMA,
     ).toArrow()
-    wall_s = time.time() - t0
-    file_list = sorted(
-        set(zip(stats["file"].to_pylist(), stats["file_bytes"].to_pylist()))
-    )
-    snap_id = table.commit_files(
+    return _commit_blocks(
+        table,
         snap_id,
-        [{"path": f, "bytes": b} for f, b in file_list],
-        _encoded_schema_json(),
-        mode="append",
-        properties=_snapshot_properties(config, cols, prior, src_schema_json),
-    )
-    return _finish_snapshot(
-        table, out_dir, snap_id, _stat_cells(stats, br), cols, config,
-        resumed_blocks, wall_s,
+        stats,
+        cols,
+        _snapshot_properties(config, cols, prior, src_schema_json),
+        resumed_blocks=resumed_blocks,
+        wall_s=time.time() - t0,
     )
 
 
@@ -2043,7 +2010,7 @@ def rename_column(spark: SparkSession, table_dir: str, old: str, new: str) -> di
     The alias is MATERIALIZED at the next :func:`compact_table`, which
     rewrites block rows under their logical names and clears the map.
     Until then, encode passes touching an aliased column are refused
-    (the resume anti-join matches on physical names and would treat the
+    (the resume filter matches on physical names and would treat the
     logical name as a brand-new column).
 
     Returns ``{"snapshot_id", "columns", "column_aliases"}``."""

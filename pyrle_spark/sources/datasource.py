@@ -28,12 +28,14 @@ of library calls — a user gets the full planner integration for free:
   snapshot (``option("snapshot", <id-or-ref>)`` time-travels) are
   masked out of the decoded batches, exactly as in :func:`decode_table`.
 - **writes speak the Iceberg commit protocol** through Spark's writer
-  lifecycle: each task encodes its (pre-clustered, pre-sorted) rows and
-  writes ONE uniquely named data file under ``.inprogress`` rename
-  (kill-atomic), returns the file + lineage stats as its commit message,
-  and the driver's ``commit()`` links exactly the reported files in one
-  locked metadata transaction — task retries/speculation leave only
-  vacuum()-able orphans, never phantom manifest entries.
+  lifecycle, on the same block writer and commit as every encode
+  (:mod:`pyrle_spark.plans.encode_job`): each task encodes its
+  (pre-clustered, pre-sorted) rows and writes ONE uniquely named data
+  file under ``.inprogress`` rename (kill-atomic), returns the file's
+  stat rows as its commit message, and the driver's ``commit()`` checks
+  them and links exactly the reported files in one locked metadata
+  transaction — task retries/speculation leave only vacuum()-able
+  orphans, never phantom manifest entries.
 
 Scale shape at 10^12 docs: the driver reads O(#block-columns) thin
 rows and O(deleted) positions; raw bytes move parquet → Python worker →
@@ -68,8 +70,7 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -293,10 +294,12 @@ class PyrleReader(DataSourceReader):
 
 @dataclass
 class _EncodeCommit(WriterCommitMessage):
-    file: str
-    bytes: int
-    block_ids: list
-    cells: list = field(default_factory=list)  # (part_id, column, codec) stats
+    stats: list  # the task's stat-row batches (encode_job._STAT_PA_SCHEMA)
+
+    @property
+    def file(self) -> str:
+        """The task's data file ("" when it wrote none)."""
+        return self.stats[0]["file"][0].as_py() if self.stats else ""
 
 
 def _encode_task(
@@ -309,22 +312,11 @@ def _encode_task(
 ) -> "_EncodeCommit":
     """Task side of every V2 write (batch and streaming): derive block
     ids from the order column, verify global monotonicity (the encode
-    kernel only checks within-block order; a block revisited after a
-    different block would silently fork into two partial rows), stream
-    through the shared encode kernel, and write ONE kill-atomic data
-    file.  Returns the file + per-(column, codec) lineage cells."""
-    import pyarrow.parquet as pq
-    from pyspark import TaskContext
+    kernel only checks within-block order), and land the blocks through
+    the shared encode kernel and block writer — ONE kill-atomic data
+    file.  Returns the file's stat rows."""
+    from pyrle_spark.plans.encode_job import _make_encode_fn, _write_block_file
 
-    from pyrle_spark.plans.encode_job import (
-        _ENCODED_PA_SCHEMA,
-        _make_encode_fn,
-        _stat_cells,
-        _STAT_COLS,
-    )
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx else 0
     inner = _make_encode_fn(list(columns), zstd_threshold, verify_order=True)
     state = {"last": None}
 
@@ -355,51 +347,52 @@ def _encode_task(
                 names=["_block_id", "_order"] + list(columns),
             )
 
-    os.makedirs(data_dir, exist_ok=True)
-    final = os.path.join(
-        data_dir, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
-    )
-    tmp = final + ".inprogress"
-    writer = None
-    kept = []
-    try:
-        for enc_rb in inner(tagged(iterator)):
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, _ENCODED_PA_SCHEMA, compression="none"
-                )
-            writer.write_batch(enc_rb)
-            kept.append(enc_rb.select(_STAT_COLS))
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is None:
-        return _EncodeCommit(file="", bytes=0, block_ids=[])
-    os.replace(tmp, final)
-    stats = pa.Table.from_batches(kept)
     return _EncodeCommit(
-        file=final,
-        bytes=os.path.getsize(final),
-        block_ids=sorted(set(stats.column("block_id").to_pylist())),
-        cells=_stat_cells(stats, block_rows),
+        stats=list(_write_block_file(inner(tagged(iterator)), data_dir))
     )
 
 
-def _check_disjoint_blocks(msgs: list) -> None:
-    """A block written by two tasks means the input was not clustered by
-    block — fail the commit instead of committing two partial rows that
-    dedup-on-read would silently halve."""
-    seen: dict = {}
-    for m in msgs:
-        for b in m.block_ids:
-            if b in seen and seen[b] != m.file:
-                raise ValueError(
-                    f"block {b} was written by two tasks ({seen[b]} and "
-                    f"{m.file}): the input was not clustered by block — "
-                    "repartition by floor(order_col / block_rows) and "
-                    "sortWithinPartitions(order_col) before writing"
-                )
-            seen[b] = m.file
+def _stats_of(messages) -> pa.Table:
+    """The stat rows of a write's task commit messages, as one table."""
+    from pyrle_spark.plans.encode_job import _STAT_PA_SCHEMA
+
+    return pa.Table.from_batches(
+        [b for m in messages or [] if m is not None for b in m.stats],
+        schema=_STAT_PA_SCHEMA,
+    )
+
+
+def _abort(messages) -> None:
+    """Remove the data files the tasks of a failed or replayed write
+    reported."""
+    from pyrle_spark.plans.encode_job import _remove_files
+
+    _remove_files(_stats_of(messages)["file"].to_pylist())
+
+
+def _commit(w: "PyrleWriter", messages, snap_id: str, mode: str,
+            wall_s: float, extra: dict | None = None) -> None:
+    """Driver side of every V2 write: the shared encode commit
+    (split-block check, then one metadata commit with lineage)."""
+    from pyrle_spark.plans.encode_job import (
+        EncodeConfig,
+        _commit_blocks,
+        _prior_props_guarded,
+        _snapshot_properties,
+    )
+    from pyrle_spark.sources.icetable import IceTable
+
+    table = IceTable(w.path)
+    cols = list(w.columns)
+    config = EncodeConfig(
+        columns=cols, order_col=w.order_col, block_rows=w.block_rows
+    )
+    prior = _prior_props_guarded(table, cols)
+    props = _snapshot_properties(config, cols, prior, w.src_schema_json)
+    _commit_blocks(
+        table, snap_id, _stats_of(messages), cols, {**props, **(extra or {})},
+        mode=mode, wall_s=wall_s,
+    )
 
 
 class PyrleWriter(DataSourceArrowWriter):
@@ -453,51 +446,13 @@ class PyrleWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        from pyrle_spark.plans.encode_job import (
-            EncodeConfig,
-            _encoded_schema_json,
-            _finish_snapshot,
-            _prior_props_guarded,
-            _snapshot_properties,
-        )
-        from pyrle_spark.sources.icetable import IceTable
-
-        msgs = [m for m in messages if m is not None and m.file]
-        _check_disjoint_blocks(msgs)
-        table = IceTable(self.path)
-        config = EncodeConfig(
-            columns=list(self.columns),
-            order_col=self.order_col,
-            block_rows=self.block_rows,
-            block_aligned=True,
-            zstd_threshold=self.zstd_threshold,
-        )
-        prior = _prior_props_guarded(table, list(self.columns))
-        table.commit_files(
-            self.snap_id,
-            [
-                {"path": m.file, "bytes": m.bytes}
-                for m in sorted(msgs, key=lambda m: m.file)
-            ],
-            _encoded_schema_json(),
-            mode="overwrite" if self.overwrite else "append",
-            properties=_snapshot_properties(
-                config, list(self.columns), prior, self.src_schema_json
-            ),
-        )
-        cells = [c for m in msgs for c in m.cells]
-        _finish_snapshot(
-            table, self.path, self.snap_id, cells, list(self.columns),
-            config, 0, time.time() - self.t0,
+        _commit(
+            self, messages, self.snap_id,
+            "overwrite" if self.overwrite else "append", time.time() - self.t0,
         )
 
     def abort(self, messages):
-        for m in messages or []:
-            if m is not None and getattr(m, "file", ""):
-                try:
-                    os.remove(m.file)
-                except OSError:
-                    pass
+        _abort(messages)
 
 
 # ------------------------------------------------------------ streaming
@@ -668,63 +623,24 @@ class PyrleStreamWriter(DataSourceStreamArrowWriter):
         return -1
 
     def commit(self, messages, batchId: int) -> None:
-        from pyrle_spark.plans.encode_job import (
-            EncodeConfig,
-            _encoded_schema_json,
-            _finish_snapshot,
-            _prior_props_guarded,
-            _snapshot_properties,
-        )
         from pyrle_spark.sources.icetable import IceTable
 
-        msgs = [m for m in messages if m is not None and m.file]
         table = IceTable(self.path)
         if table.exists() and batchId <= self._last_committed_batch(table):
             # replayed micro-batch (failure between this commit and the
             # checkpoint advance): already in the snapshot log — drop the
             # re-written task files instead of committing duplicates
-            self.abort(messages, batchId)
+            _abort(messages)
             return
-        if not msgs:
+        if not any(m is not None and m.stats for m in messages):
             return
-        _check_disjoint_blocks(msgs)
-        w = self._w
-        config = EncodeConfig(
-            columns=list(w.columns),
-            order_col=w.order_col,
-            block_rows=w.block_rows,
-            block_aligned=True,
-            zstd_threshold=w.zstd_threshold,
-        )
-        prior = _prior_props_guarded(table, list(w.columns))
-        props = _snapshot_properties(
-            config, list(w.columns), prior, w.src_schema_json
-        )
-        props["stream_batch_id"] = batchId
-        props["stream_sink_id"] = self.sink_id
-        snap_id = table.new_snapshot_id()
-        table.commit_files(
-            snap_id,
-            [
-                {"path": m.file, "bytes": m.bytes}
-                for m in sorted(msgs, key=lambda m: m.file)
-            ],
-            _encoded_schema_json(),
-            mode="append",
-            properties=props,
-        )
-        cells = [c for m in msgs for c in m.cells]
-        _finish_snapshot(
-            table, self.path, snap_id, cells, list(w.columns), config, 0, 0.0
+        _commit(
+            self._w, messages, table.new_snapshot_id(), "append", 0.0,
+            {"stream_batch_id": batchId, "stream_sink_id": self.sink_id},
         )
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            if m is not None and getattr(m, "file", ""):
-                try:
-                    os.remove(m.file)
-                except OSError:
-                    pass
+        _abort(messages)
 
 
 class PyrleDataSource(DataSource):

@@ -29,12 +29,8 @@ import dataclasses
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from pyrle_spark.plans.encode_job import (
-    EncodeConfig,
-    decode_table,
-    dedup_blocks,
-    encode_table,
-)
+from pyrle_spark.plans.encode_job import EncodeConfig, decode_table, encode_table
+from pyrle_spark.plans.read_plan import winner_thin
 from pyrle_spark.sources.icetable import IceTable
 
 __all__ = ["encode_stream"]
@@ -63,31 +59,34 @@ def encode_stream(
             properties={**config.properties, "stream_epoch": epoch_id},
         )
         df = batch_df.select(cfg.order_col, *cfg.columns)
-        table = IceTable(table_dir)
         br = cfg.block_rows
-        if table.exists():
-            bids = (
-                df.select(
-                    F.floor(F.col(cfg.order_col) / F.lit(br))
-                    .cast("long")
-                    .alias("block_id")
-                ).distinct()
-            )
-            # blocks this batch touches that exist only PARTIALLY: pull
-            # their current rows in so the re-encode is whole
-            partial = (
-                dedup_blocks(table.read_table(spark))
-                .filter(F.col("n_rows") < br)
-                .join(F.broadcast(bids), "block_id", "left_semi")
-                .select("block_id")
+        # blocks the table holds only PARTIALLY, read in the driver from
+        # the current snapshot's thin columns (no Spark job)
+        partial = set()
+        if IceTable(table_dir).exists():
+            _, wthin = winner_thin(table_dir)
+            partial = {
+                b for b, n in zip(wthin["block_id"], wthin["n_rows"]) if n < br
+            }
+        if partial:
+            # the ones this batch touches: pull their current rows in so
+            # the re-encode is whole
+            bid = F.floor(F.col(cfg.order_col) / F.lit(br)).cast("long")
+            touched = [
+                r[0]
+                for r in df.select(bid.alias("b"))
+                .filter(F.col("b").isin(sorted(partial)))
                 .distinct()
-            )
-            if partial.count() > 0:
+                .collect()
+            ]
+            if touched:
                 prev = decode_table(
-                    spark, table_dir, blocks=partial, apply_deletes=False
-                ).select(
-                    F.col("_order").alias(cfg.order_col), *cfg.columns
-                )
+                    spark,
+                    table_dir,
+                    columns=list(cfg.columns),
+                    blocks=touched,
+                    apply_deletes=False,
+                ).select(F.col("_order").alias(cfg.order_col), *cfg.columns)
                 # a replayed file may re-deliver rows the fragment already
                 # holds: one row per position wins (contents are identical)
                 df = df.unionByName(prev).dropDuplicates([cfg.order_col])

@@ -1,8 +1,10 @@
-"""File-direct encode path (encode_parquet_dir): bit-identity with the
-JVM-scan path, exact resume at block granularity, layout guards
-(misaligned files, blocks spanning files, unsorted rows), the
-direct-write commit protocol's kill-atomicity, and the one-job task
-layout (job counts, contiguous per-task block ranges, lineage)."""
+"""The encode paths and their one block writer: encode_parquet_dir's
+bit-identity with encode_table (aligned and shuffled), exact resume at
+block granularity, layout guards (misaligned files, blocks spanning
+files, unsorted rows, split blocks refused before the commit), the
+direct-write commit protocol's kill-atomicity, and the task layout
+(job counts of both paths, contiguous per-task block ranges,
+lineage)."""
 
 from __future__ import annotations
 
@@ -75,15 +77,25 @@ def _signatures(spark, table_dir):
     )
 
 
-def test_identical_to_jvm_scan_path(spark, src_dir, tmp_path):
+@pytest.mark.parametrize(
+    "layout",
+    [
+        pytest.param(dict(block_aligned=True, input_presorted=True), id="aligned"),
+        pytest.param(dict(block_aligned=False, input_presorted=False), id="shuffle"),
+    ],
+)
+def test_identical_to_jvm_scan_path(spark, src_dir, tmp_path, layout):
     """The file-direct encode produces byte-identical blocks to
-    encode_table on the same input — blocks are a property of the data,
-    not of the path that encoded them.  Covers the timestamp
-    normalization (_jvm_equivalent_type): warc_ts is stored ns-naive in
-    parquet but reaches the codecs as us/UTC either way."""
+    encode_table on the same input, aligned or through the block_id
+    shuffle — blocks are a property of the data, not of the path that
+    encoded them.  Covers the timestamp normalization
+    (_jvm_equivalent_type): warc_ts is stored ns-naive in parquet but
+    reaches the codecs as us/UTC either way."""
     out_jvm = str(tmp_path / "jvm")
     out_direct = str(tmp_path / "direct")
-    s_jvm = encode_table(spark, spark.read.parquet(src_dir), out_jvm, _cfg())
+    s_jvm = encode_table(
+        spark, spark.read.parquet(src_dir), out_jvm, _cfg(**layout)
+    )
     s_dir = encode_parquet_dir(spark, src_dir, out_direct, _cfg())
     assert _signatures(spark, out_jvm) == _signatures(spark, out_direct)
     assert s_jvm["bytes_out"] == s_dir["bytes_out"] > 0
@@ -286,3 +298,62 @@ def test_lineage_matches_table_rows(spark, many_src, tmp_path):
     assert got == sorted(parts.values(), key=lambda p: p["part_id"])
     assert sum(p["rows"] for p in got) == MANY_BLOCK * MANY_FILES
     assert s["bytes_out"] == sum(r["bytes_out"] for r in rows)
+
+
+def test_encode_table_job_counts_pinned(spark, src_dir, tmp_path):
+    """encode_table lands its blocks like encode_parquet_dir: one job
+    aligned, the block_id shuffle's map job plus the write job
+    unaligned, and a fully resumed call runs only the (empty) scan — it
+    commits no snapshot and returns the current one with zero lineage."""
+    wt = spark.read.parquet(src_dir)
+    got = {}
+    for name, layout in [
+        ("aligned", dict(block_aligned=True, input_presorted=True)),
+        ("shuffle", dict(block_aligned=False, input_presorted=False)),
+    ]:
+        out = str(tmp_path / name)
+        cfg = _cfg(**layout)
+        s1, fresh = spark_jobs(spark, lambda: encode_table(spark, wt, out, cfg))
+        snaps = len(IceTable(out).snapshots())
+        s2, noop = spark_jobs(spark, lambda: encode_table(spark, wt, out, cfg))
+        assert len(IceTable(out).snapshots()) == snaps == 1
+        assert s2["snapshot_id"] == s1["snapshot_id"]
+        assert s2["resumed_committed_blocks"] == N_ROWS // BLOCK
+        assert s2["bytes_out"] == 0 and s2["partitions"] == []
+        assert verify_checksums(spark, out)["bad"] == 0
+        got[name] = (fresh, noop)
+    assert got == {"aligned": (1, 1), "shuffle": (2, 2)}
+
+
+def test_blocks_per_pass_noop_commits_nothing(spark, src_dir, tmp_path):
+    """A blocks_per_pass rerun over a fully committed table commits no
+    snapshot in any of its passes."""
+    out = str(tmp_path / "passes")
+    cfg = _cfg(blocks_per_pass=3)
+    s1 = encode_table(spark, spark.read.parquet(src_dir), out, cfg)
+    snaps = len(IceTable(out).snapshots())
+    assert snaps == s1["passes"] == 3
+    s2 = encode_table(spark, spark.read.parquet(src_dir), out, cfg)
+    assert len(IceTable(out).snapshots()) == snaps
+    assert s2["snapshot_id"] == s1["snapshot_id"]
+    assert s2["bytes_out"] == 0
+    assert decode_table(spark, out).count() == N_ROWS
+
+
+def test_split_block_refused_before_commit(spark, tmp_path):
+    """block_aligned input whose partitions cut every block apart: the
+    split-block check on the tasks' stat rows refuses the write before
+    anything commits — no table, no data files left behind."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "split")
+    df = spark.range(2048).withColumn("v", F.col("id") % 7).repartition(4)
+    with pytest.raises(ValueError, match="clustered"):
+        encode_table(
+            spark, df, out,
+            EncodeConfig(columns=["v"], order_col="id", block_rows=512,
+                         block_aligned=True),
+        )
+    assert not IceTable(out).exists()
+    left = [n for _, _, names in os.walk(out) for n in names]
+    assert left == []
