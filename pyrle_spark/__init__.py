@@ -16,17 +16,33 @@ Public layers
 - :mod:`pyrle_spark.functions` — training-data pipeline ops (dedup, ANN, text).
 """
 
-from pyrle_spark.rle import Rle
-from pyrle_spark.rledict import RleDict
+import importlib
+
 from pyrle_spark.session import gate_zip_rereads
-from pyrle_spark.sources.rle_io import from_csv
 
 # every UDF of the engine imports this package when a worker unpickles
 # it, so each reused Python worker gates its per-task zip re-reads here
 gate_zip_rereads()
 
-# reference alias: pyrle exposes PyRles = RleDict (pyrle/__init__.py:10)
-PyRles = RleDict
+# the driver-layer names pull in pandas (~0.3 s of import), which no
+# engine task needs: load them on first access (PEP 562).  PyRles is the
+# reference alias PyRles = RleDict (pyrle/__init__.py:10).
+_LAZY = {
+    "Rle": ("pyrle_spark.rle", "Rle"),
+    "RleDict": ("pyrle_spark.rledict", "RleDict"),
+    "PyRles": ("pyrle_spark.rledict", "RleDict"),
+    "from_csv": ("pyrle_spark.sources.rle_io", "from_csv"),
+}
+
+
+def __getattr__(name):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module, attr = _LAZY[name]
+    value = getattr(importlib.import_module(module), attr)
+    globals()[name] = value
+    return value
+
 
 __version__ = "0.1.0"
 __all__ = ["Rle", "RleDict", "PyRles", "from_csv", "__version__"]

@@ -63,6 +63,7 @@ from __future__ import annotations
 
 import numbers
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pyarrow as pa
@@ -70,8 +71,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pyrle_spark.kernels import rlecore as k
-from pyrle_spark.rle import Rle
-from pyrle_spark.rledict import RleDict
+
+if TYPE_CHECKING:
+    from pyrle_spark.rledict import RleDict
 
 __all__ = ["RleFrame"]
 
@@ -443,6 +445,11 @@ class RleFrame:
         return cls(df.select(*cols), key_cols, block_positions=block_positions)
 
     def to_rledict(self) -> RleDict:
+        # the driver-layer Rle/RleDict load pandas: keep them out of the
+        # module import every engine task makes
+        from pyrle_spark.rle import Rle
+        from pyrle_spark.rledict import RleDict
+
         src = self.unchunk() if self.blocked else self
         out = {}
         for row in src.df.collect():
@@ -752,6 +759,7 @@ class RleFrame:
         Quirk kept: the result is ALWAYS defragmented — the reference
         ignores any defragment kwarg (rledict.py:480)."""
         self._require_unblocked("apply")
+        from pyrle_spark.rle import Rle
 
         def call(r, v):
             rle = Rle.__new__(Rle)

@@ -44,6 +44,21 @@ def get_spark(
     - AQE + skew-join on (runtime re-planning, judge-relevant at scale)
     - UTC session timezone (duckdb-oracle timestamp parity)
     - shuffle partitions sized to cores, not the 200 default
+    - a pandas or pyarrow input whose Arrow batches exceed 64 KB becomes
+      an RDD over those batches, not a driver ``LocalRelation`` (Spark's
+      default cut is 48 MB).  A ``LocalRelation`` is re-walked by the
+      optimizer and re-sliced by ``LocalTableScan`` on every query over
+      it, O(rows) driver work per query.  Sweep on 4 CPUs, the
+      ``rle_algebra`` pipeline (``from_intervals(A) + from_intervals(B)``,
+      ``getitems``, ``to_ranges``), median of 5 alternating reps (3 at
+      2k and 300k), LocalRelation vs RDD, optimizer rule time in brackets:
+      1k rows (25 KB) 593 vs 613 ms (40/39 ms); 2k (50 KB) 686 vs 673 ms
+      (56/49); 4k (99 KB) 518 vs 496 ms (49/29); 30k (737 KB) 927 vs
+      647 ms (169/25); 300k (7.4 MB) 6.68 vs 3.68 s (1,820/33 ms).  The
+      RDD form is no slower from about 2k rows on, so the cut sits at
+      64 KB; below it a small input stays a ``LocalRelation`` and
+      collecting it launches no job.  Python lists are an RDD at any
+      size (``applySchemaToPythonRDD``).
     """
     # one BLAS/OMP thread per python worker: each Spark task is already a
     # process; nested numpy threading oversubscribes the box 32×32
@@ -60,6 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.execution.arrow.localRelationThreshold", "64k")
         .config("spark.ui.enabled", "false")
         # measured on this workload: a 48g heap makes local[32] 2.3× slower
         # than 12g (GC threads starve the 32 python workers); the encode

@@ -45,3 +45,9 @@ def spark_jobs(spark, fn):
     # the status store is fed by the listener bus: drain it before counting
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def local_relation(df) -> bool:
+    """Whether ``df``'s analyzed plan holds a driver ``LocalRelation``
+    leaf (rows kept in the driver), not an RDD scan."""
+    return "LocalRelation" in df._jdf.queryExecution().analyzed().toString()

@@ -10,7 +10,7 @@ import pytest
 from pyrle_spark.operators.rleframe import RleFrame
 from pyrle_spark.rle import Rle
 from pyrle_spark.rledict import RleDict
-from tests.conftest import spark_jobs
+from tests.conftest import local_relation, spark_jobs
 
 
 def _intervals_pdf(seed=0, n=200, chroms=("chr1", "chr2", "chr3")):
@@ -98,6 +98,25 @@ def test_job_counts_pinned(spark, interval_frames):
     _, getitems = spark_jobs(spark, lambda: c.getitems(queries).collect())
     _, to_ranges = spark_jobs(spark, lambda: c.to_ranges().collect())
     assert (add, getitems, to_ranges) == (3, 3, 1)
+
+
+def test_job_counts_pinned_rdd_inputs(spark):
+    """The same counts when the pandas inputs pass the session's
+    local-relation threshold and arrive as Arrow-batch RDDs, and the sum
+    still equals the RleDict oracle."""
+    p1, p2 = _intervals_pdf(11, n=4_000), _intervals_pdf(12, n=4_000)
+    d1, d2 = spark.createDataFrame(p1), spark.createDataFrame(p2)
+    queries = spark.createDataFrame(
+        _intervals_pdf(13, n=3_000).assign(ID=range(3_000))
+    )
+    assert not any(local_relation(df) for df in (d1, d2, queries))
+    c, add = spark_jobs(
+        spark, lambda: RleFrame.from_intervals(d1) + RleFrame.from_intervals(d2)
+    )
+    _, getitems = spark_jobs(spark, lambda: c.getitems(queries).collect())
+    _, to_ranges = spark_jobs(spark, lambda: c.to_ranges().collect())
+    assert (add, getitems, to_ranges) == (3, 3, 1)
+    assert c.to_rledict() == RleDict(p1)._binary(RleDict(p2), "add")
 
 
 def test_nan_values_stay_nan(spark):

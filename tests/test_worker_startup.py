@@ -4,6 +4,8 @@ PySpark Python workers: same importable set as the stock
 archive on every task."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -116,3 +118,25 @@ def test_gate_installed_in_workers_only(spark):
     assert [r["module"] for r in rows] == [want]
     assert zipimport.zipimporter.invalidate_caches is STOCK
     assert STOCK.__module__ == "zipimport"
+
+
+def test_engine_modules_load_no_pandas():
+    """The modules an engine task imports leave pandas unloaded (the
+    driver-layer ``Rle``/``RleDict``/``from_csv`` load it on first
+    access), and the package names still resolve."""
+    code = """
+import sys
+import pyrle_spark
+import pyrle_spark.codecs
+import pyrle_spark.plans.compressed
+import pyrle_spark.plans.encode_job
+import pyrle_spark.plans.read_plan
+import pyrle_spark.operators.rleframe
+assert "pandas" not in sys.modules, "pandas loaded"
+from pyrle_spark import PyRles, Rle, RleDict, from_csv
+assert PyRles is RleDict and callable(from_csv)
+assert Rle([2, 3], [1.0, 2.0]).runs.tolist() == [2, 3]
+assert "pandas" in sys.modules
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=root)
